@@ -49,7 +49,18 @@ _MEMO_CAP = 256
 def _dir_sig(path: str) -> str:
     """Input identity of a fixture table dir: mtime_ns + size (the
     matcache.input_sig device).  Non-local / missing paths fall back
-    to path-only keying (the memo's original contract)."""
+    to path-only keying (the memo's original contract).
+
+    Known gap: only the directory itself is stat'ed.  Spark's
+    overwrite deletes and recreates the directory, which changes the
+    signature, but a part file rewritten IN PLACE under the same name
+    changes neither the directory's mtime nor its size, so a
+    long-lived session keeps being served the memoized file index
+    (stale footers / row counts) for that table.  Folding the entries'
+    mtimes into the key would mean listing the directory on every
+    ``load_table`` -- the very cost the memo exists to avoid -- so
+    writers that rewrite part files in place must call with
+    ``fresh=True`` or use a new directory."""
     try:
         st = os.stat(path)
         return f"{st.st_mtime_ns}:{st.st_size}"

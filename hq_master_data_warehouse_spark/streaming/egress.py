@@ -16,6 +16,14 @@ attempted POST) so the A3 tally and the S6 ledger append are ordinary
 downstream aggregations -- per-row ACTUAL status, not the reference's
 blanket 'sent' (route.ts:146).
 
+The at-least-once path (``post_with_retry``) materializes the payloads
+once, runs every retry attempt inside the same ``mapPartitions`` pass
+(a partition re-posts its own failures), and materializes that one
+result; delivered rows, the dead-letter queue and the per-attempt
+audit are all read from it.  The upstream plan therefore runs once
+per call, whatever the number of attempts, and a retried row is
+re-sent with the body of its first attempt.
+
 The transport is a plain callable ``(url, payload_json) -> bool`` so
 tests inject a recorder and production injects urllib/requests; the
 engine itself never imports an HTTP client (no hidden network deps).
@@ -24,10 +32,18 @@ engine itself never imports an HTTP client (no hidden network deps).
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    StructField,
+    StructType,
+)
+
+from ..session import local_df
 
 #: reference rate constants -- send/route.ts:5-7
 RATE_LIMIT = 10
@@ -35,6 +51,9 @@ RATE_INTERVAL_SEC = 1.0
 
 RESULT_SCHEMA = (
     "company_id string, webhook_id string, webhook_url string, ok boolean"
+)
+AUDIT_SCHEMA = (
+    "attempt int, n_attempted long, n_delivered long, n_failed long"
 )
 
 Transport = Callable[[str, str], bool]
@@ -66,6 +85,47 @@ def build_payloads(assigned: DataFrame, batch_id: str) -> DataFrame:
     )
 
 
+def _throttle(per_window: float) -> Callable[[], None]:
+    """Token bucket: the returned callable blocks until one more POST
+    fits in the current ``RATE_INTERVAL_SEC`` window."""
+    sent_in_window = 0
+    window_start = time.monotonic()
+
+    def take() -> None:
+        nonlocal sent_in_window, window_start
+        if sent_in_window >= per_window:
+            elapsed = time.monotonic() - window_start
+            if elapsed < RATE_INTERVAL_SEC:
+                time.sleep(RATE_INTERVAL_SEC - elapsed)
+            sent_in_window = 0
+            window_start = time.monotonic()
+        sent_in_window += 1
+
+    return take
+
+
+def _post_rows(
+    rows: Iterable[Row], transport: Transport, take: Callable[[], None]
+) -> Iterator[tuple[Row, bool]]:
+    """The one row loop both sinks share: POST each row through
+    ``transport`` at the bucket's pace; a raising transport is a
+    failed POST, never a failed task."""
+    for row in rows:
+        take()
+        try:
+            ok = bool(transport(row.webhook_url, row.payload))
+        except Exception:
+            ok = False
+        yield row, ok
+
+
+def _per_partition_rate(payloads: DataFrame, rate_limit_per_sec: int) -> float:
+    """The cluster-wide rate divided across the partitions that post
+    concurrently."""
+    n_parts = max(payloads.rdd.getNumPartitions(), 1)
+    return max(rate_limit_per_sec / n_parts, 0.1)
+
+
 def post_with_rate_limit(
     payloads: DataFrame,
     transport: Transport | None = None,
@@ -77,28 +137,21 @@ def post_with_rate_limit(
     ``skip_webhooks=True`` reproduces the reference's dry-run flag
     (route.ts:13): no transport calls, every row counted ok.
     """
-    spark = payloads.sparkSession
-    n_parts = max(payloads.rdd.getNumPartitions(), 1)
-    per_partition_rate = max(rate_limit_per_sec / n_parts, 0.1)
+    if transport is None and not skip_webhooks:
+        raise ValueError(
+            "post_with_rate_limit needs a transport unless "
+            "skip_webhooks=True (the reference's dry-run flag)"
+        )
+    per_partition_rate = _per_partition_rate(payloads, rate_limit_per_sec)
 
     def run_partition(rows: Iterator[Row]) -> Iterator[Row]:
-        sent_in_window = 0
-        window_start = time.monotonic()
-        for row in rows:
-            if skip_webhooks:
-                ok = True
-            else:
-                if sent_in_window >= per_partition_rate:
-                    elapsed = time.monotonic() - window_start
-                    if elapsed < RATE_INTERVAL_SEC:
-                        time.sleep(RATE_INTERVAL_SEC - elapsed)
-                    sent_in_window = 0
-                    window_start = time.monotonic()
-                try:
-                    ok = bool(transport(row.webhook_url, row.payload))
-                except Exception:
-                    ok = False
-                sent_in_window += 1
+        if skip_webhooks:
+            posted = ((row, True) for row in rows)
+        else:
+            posted = _post_rows(
+                rows, transport, _throttle(per_partition_rate)
+            )
+        for row, ok in posted:
             yield Row(
                 company_id=row.company_id,
                 webhook_id=row.webhook_id,
@@ -106,13 +159,8 @@ def post_with_rate_limit(
                 ok=ok,
             )
 
-    if transport is None and not skip_webhooks:
-        raise ValueError(
-            "post_with_rate_limit needs a transport unless "
-            "skip_webhooks=True (the reference's dry-run flag)"
-        )
     rdd = payloads.rdd.mapPartitions(run_partition)
-    return spark.createDataFrame(rdd, RESULT_SCHEMA)
+    return payloads.sparkSession.createDataFrame(rdd, RESULT_SCHEMA)
 
 
 def post_with_retry(
@@ -128,15 +176,35 @@ def post_with_retry(
 
     ``transport_factory(attempt)`` supplies the transport for each
     attempt so tests can model transient vs permanent failures
-    deterministically.  The loop unrolls into ONE DataFrame DAG
-    (max_attempts is a small constant, as in any sane retry policy);
-    each attempt's results are cached so the side-effecting POST runs
-    once per row per attempt even though three downstream consumers
-    (delivered, audit, next-attempt pending) read them.
+    deterministically.  The factory is called on the executors, once
+    per partition and attempt, so it MUST be picklable (a module-level
+    function or class, or a closure cloudpickle can ship).
+
+    One call runs the upstream plan once and each (row, attempt) POST
+    once:
+
+    1. ``payloads`` is materialized eagerly (``localCheckpoint``).
+       The duplicate-key check and the POSTs read that copy, so the
+       upstream plan runs once and a retried row carries the same
+       body on every attempt (``build_payloads`` stamps
+       ``current_timestamp()``, which a re-derived plan would re-stamp).
+    2. All ``max_attempts`` run in ONE ``mapPartitions`` pass: each
+       partition posts its rows, then re-posts its own failures with
+       the next attempt's transport, all through one token bucket per
+       partition.  It yields one result row per (row, attempt).
+    3. That result is materialized once, eagerly; ``delivered`` and
+       the dead-letter DataFrame are filters over it and ``audit`` is
+       its per-attempt aggregate, counted before returning.  Reading
+       them runs no POST again.
+
+    A task retried by Spark re-posts its partition, which the
+    at-least-once contract allows.
 
     Returns ``(delivered, dead_letter, audit)``: delivered rows with
-    the attempt that succeeded, the undeliverable remainder, and one
-    audit row per attempt (n_attempted / n_delivered / n_failed).
+    the attempt that succeeded, the undeliverable remainder (with
+    ``payloads``' schema), and one audit row per attempt 1..
+    ``max_attempts`` (n_attempted / n_delivered / n_failed; zeros for
+    an attempt with nothing pending).
 
     Retries key on ``(company_id, webhook_id)``, so those keys MUST be
     unique in ``payloads`` -- with duplicates, one failed duplicate
@@ -147,6 +215,7 @@ def post_with_retry(
     delivered, DLQ, nor audit -- an unacceptable silent loss for an
     at-least-once channel.
     """
+    payloads = payloads.localCheckpoint()
     n_dup = (
         payloads.groupBy("company_id", "webhook_id")
         .count()
@@ -159,51 +228,51 @@ def post_with_retry(
             "webhook_id) keys; deduplicate upstream (choosing which "
             "payload body wins) before calling post_with_retry"
         )
-    pending = payloads
-    delivered_parts: list[DataFrame] = []
-    audit_parts: list[DataFrame] = []
+    per_partition_rate = _per_partition_rate(payloads, rate_limit_per_sec)
+
+    def run_partition(rows: Iterator[Row]) -> Iterator[tuple]:
+        take = _throttle(per_partition_rate)
+        pending: Iterable[Row] = rows
+        for attempt in range(1, max_attempts + 1):
+            failed = []
+            posted = _post_rows(pending, transport_factory(attempt), take)
+            for row, ok in posted:
+                yield (*row, attempt, ok)
+                if not ok:
+                    failed.append(row)
+            if not failed:
+                return
+            pending = failed
+
+    spark = payloads.sparkSession
+    schema = StructType(
+        [
+            *payloads.schema.fields,
+            StructField("attempt", IntegerType(), False),
+            StructField("ok", BooleanType(), False),
+        ]
+    )
+    results = spark.createDataFrame(
+        payloads.rdd.mapPartitions(run_partition), schema
+    ).localCheckpoint()
+    counts = {
+        r.attempt: (r.n, r.n_ok)
+        for r in results.groupBy("attempt")
+        .agg(F.count("*").alias("n"), F.count_if("ok").alias("n_ok"))
+        .collect()
+    }
+    audit_rows = []
     for attempt in range(1, max_attempts + 1):
-        res = post_with_rate_limit(
-            pending,
-            transport_factory(attempt),
-            rate_limit_per_sec=rate_limit_per_sec,
-        ).cache()
-        delivered_parts.append(
-            res.filter(F.col("ok")).withColumn(
-                "attempt", F.lit(attempt)
-            )
-        )
-        audit_parts.append(
-            res.agg(
-                F.count("*").alias("n_attempted"),
-                # coalesce: SUM over an empty attempt is NULL, but an
-                # audit row should read 0 delivered / 0 failed
-                F.coalesce(
-                    F.sum(F.when(F.col("ok"), 1).otherwise(0)), F.lit(0)
-                )
-                .cast("long")
-                .alias("n_delivered"),
-                F.coalesce(
-                    F.sum(F.when(~F.col("ok"), 1).otherwise(0)),
-                    F.lit(0),
-                )
-                .cast("long")
-                .alias("n_failed"),
-            ).select(F.lit(attempt).alias("attempt"), "*")
-        )
-        failed_keys = res.filter(~F.col("ok")).select(
-            "company_id", "webhook_id"
-        )
-        pending = payloads.join(
-            failed_keys, ["company_id", "webhook_id"], "left_semi"
-        )
-    delivered = delivered_parts[0]
-    for part in delivered_parts[1:]:
-        delivered = delivered.unionByName(part)
-    audit = audit_parts[0]
-    for part in audit_parts[1:]:
-        audit = audit.unionByName(part)
-    return delivered, pending, audit
+        n, n_ok = counts.get(attempt, (0, 0))
+        audit_rows.append((attempt, n, n_ok, n - n_ok))
+    audit = local_df(spark, audit_rows, AUDIT_SCHEMA)
+    delivered = results.filter("ok").select(
+        "company_id", "webhook_id", "webhook_url", "ok", "attempt"
+    )
+    dead_letter = results.filter(
+        ~F.col("ok") & (F.col("attempt") == max_attempts)
+    ).select(*payloads.columns)
+    return delivered, dead_letter, audit
 
 
 def egress_tally(results: DataFrame) -> DataFrame:

@@ -4,7 +4,9 @@ rate limiting, and payload shape -- mirroring send/route.ts:90-138."""
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from hq_master_data_warehouse_spark.streaming.egress import (
     build_payloads,
     egress_tally,
     post_with_rate_limit,
+    post_with_retry,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -80,10 +83,6 @@ def test_payload_carries_batch_metadata(spark):
 def test_retry_delivers_transient_and_dead_letters_permanent(spark):
     """post_with_retry: transient failures succeed on a later attempt,
     permanent failures land in the DLQ, audit accounts for every row."""
-    from hq_master_data_warehouse_spark.streaming.egress import (
-        post_with_retry,
-    )
-
     payloads = _payloads(spark, limit=30).cache()
     n = payloads.count()
 
@@ -112,6 +111,10 @@ def test_retry_delivers_transient_and_dead_letters_permanent(spark):
         for r in payloads.collect()
         if int(r.company_id) % 5 == 0
     }
+    # the DLQ holds the undelivered payload rows themselves
+    assert sorted(dlq.collect()) == sorted(
+        r for r in payloads.collect() if int(r.company_id) % 5 == 0
+    )
     # transient failures delivered on attempt 2, the rest on attempt 1
     for r in delivered_rows:
         cid = int(r.company_id)
@@ -130,10 +133,6 @@ def test_retry_rejects_duplicate_keys(spark):
     nor audit."""
     import pytest
 
-    from hq_master_data_warehouse_spark.streaming.egress import (
-        post_with_retry,
-    )
-
     payloads = _payloads(spark, limit=5)
     dup = payloads.unionByName(
         payloads.limit(1).withColumn(
@@ -144,3 +143,83 @@ def test_retry_rejects_duplicate_keys(spark):
         post_with_retry(
             dup, lambda attempt: (lambda url, p: True), max_attempts=1
         )
+
+
+def _recording_factory(out_dir, fail_first):
+    """Transport factory whose transports record every POST as one file
+    in ``out_dir`` and fail the companies ``fail_first`` picks on the
+    first attempt only."""
+
+    def factory(attempt):
+        def transport(url, payload):
+            doc = json.loads(payload)
+            cid = doc["c_custkey"]
+            record = {
+                "attempt": attempt,
+                "company": cid,
+                "batch_timestamp": doc["_batch_metadata"]["batch_timestamp"],
+                "body": payload,
+            }
+            path = os.path.join(out_dir, f"{uuid.uuid4().hex}.json")
+            with open(path, "w") as fh:
+                json.dump(record, fh)
+            return attempt > 1 or not fail_first(cid)
+
+        return transport
+
+    return factory
+
+
+def _recorded_posts(out_dir):
+    posts = []
+    for name in os.listdir(out_dir):
+        with open(os.path.join(out_dir, name)) as fh:
+            posts.append(json.load(fh))
+    return posts
+
+
+def test_retry_resends_the_first_attempt_body(spark, tmp_path):
+    """A retried company is re-posted with the body of its first
+    attempt: build_payloads stamps current_timestamp(), so re-deriving
+    the payloads for a retry would send a different batch_timestamp."""
+    payloads = _payloads(spark, limit=20)
+    factory = _recording_factory(str(tmp_path), lambda cid: cid % 2 == 0)
+    delivered, _, _ = post_with_retry(
+        payloads, factory, max_attempts=3, rate_limit_per_sec=10_000
+    )
+    delivered.collect()
+    bodies: dict = {}
+    for post in _recorded_posts(tmp_path):
+        bodies.setdefault(post["company"], []).append(post)
+    retried = {c: ps for c, ps in bodies.items() if len(ps) > 1}
+    assert retried
+    for posts in retried.values():
+        assert sorted(p["attempt"] for p in posts) == [1, 2]
+        assert len({p["body"] for p in posts}) == 1
+        assert len({p["batch_timestamp"] for p in posts}) == 1
+
+
+def test_retry_posts_once_however_often_results_are_read(spark, tmp_path):
+    """Reading delivered, the DLQ and the audit (twice each) runs no
+    POST again: transport calls equal the audit's attempted total, the
+    audit keeps a zero row for an attempt with nothing pending, and the
+    DLQ keeps the payloads' schema."""
+    payloads = _payloads(spark, limit=20)
+    factory = _recording_factory(str(tmp_path), lambda cid: cid % 3 == 0)
+    delivered, dlq, audit = post_with_retry(
+        payloads, factory, max_attempts=3, rate_limit_per_sec=10_000
+    )
+    for _ in range(2):
+        n_delivered = len(delivered.collect())
+        n_dead = len(dlq.collect())
+        audit_rows = audit.collect()
+    assert len(_recorded_posts(tmp_path)) == sum(
+        r.n_attempted for r in audit_rows
+    )
+    a = {r.attempt: r for r in audit_rows}
+    assert sorted(a) == [1, 2, 3]
+    assert a[1].n_attempted == 20 and a[1].n_failed > 0
+    assert a[2].n_attempted == a[1].n_failed and a[2].n_failed == 0
+    assert (a[3].n_attempted, a[3].n_delivered, a[3].n_failed) == (0, 0, 0)
+    assert (n_delivered, n_dead) == (20, 0)
+    assert dlq.schema == payloads.schema
