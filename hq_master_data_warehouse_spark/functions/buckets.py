@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import DEFAULT_RANGE_MAX, EMPLOYEE_RANGE_MAX, SAFE_PEOPLE_LIMIT
-from ..session import local_df
+from ..session import local_df, sql_string
 
 UNKNOWN_BUCKET = "unknown"
 NOT_SURE_BUCKET = "not sure"
@@ -65,16 +65,19 @@ def capacity_for_segment(
 ) -> Column:
     """Max companies per webhook for a bucket (SURVEY op C13).
 
-    ``floor(40000 / max)`` with default max 10, as a chained-``when``
-    literal expression -- no join, no UDF.  Use
-    :func:`segment_capacity_df` + broadcast join instead when the lookup
-    table is not a compile-time constant.
+    ``floor(40000 / max)`` with default max 10, the max looked up in a
+    map literal -- no join, no UDF.  A missing or NULL key reads NULL
+    and takes the default.  The map is one SQL string: the Column API
+    pays several py4j calls per operator, four operators per segment
+    for a ``when`` chain.  Use :func:`segment_capacity_df` +
+    broadcast join instead when the lookup table is not a compile-time
+    constant.
     """
     lookup = lookup or SEGMENT_MAX
-    expr = F.lit(None).cast("int")
-    for seg, mx in lookup.items():
-        expr = F.when(col == seg, F.lit(mx)).otherwise(expr)
-    max_col = F.coalesce(expr, F.lit(DEFAULT_RANGE_MAX))
+    pairs = ", ".join(f"{sql_string(s)}, {mx}" for s, mx in lookup.items())
+    max_col = F.coalesce(
+        F.expr(f"map({pairs})")[col], F.lit(DEFAULT_RANGE_MAX)
+    )
     return F.floor(F.lit(SAFE_PEOPLE_LIMIT) / max_col).cast("int")
 
 

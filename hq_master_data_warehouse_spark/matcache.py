@@ -45,6 +45,8 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources.loaders import read_parquet
+
 
 def _code_sig(fn: Callable) -> str:
     """Hash of the builder's SOURCE CODE (plus its enclosing module's
@@ -120,4 +122,4 @@ def materialized(
             shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.isdir(final):
                 raise
-    return spark.read.parquet(final)
+    return read_parquet(spark, final)

@@ -30,10 +30,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.buckets import capacity_for_segment, capacity_sql
 from ..registry import query
+from ..session import sql_string
 from ..sources.loaders import load_table
 
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -50,17 +50,20 @@ _SEG_CASE_SQL = (
 def _webhooks_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation-as-webhooks: each webhook bound to one segment (J5),
     numbered 0..n-1 within its segment in key order."""
-    nation = load_table(spark, sf_dir, "nation")
-    seg = F.element_at(
-        F.array(*[F.lit(s) for s in _SEGMENTS]),
-        (F.col("n_nationkey") % 5).cast("int") + 1,
-    )
-    w = Window.partitionBy("segment").orderBy("webhook_id")
+    segments = ", ".join(map(sql_string, _SEGMENTS))
     return (
-        nation.select(
-            F.col("n_nationkey").alias("webhook_id"), seg.alias("segment")
+        load_table(spark, sf_dir, "nation")
+        .selectExpr(
+            "n_nationkey AS webhook_id",
+            f"element_at(array({segments}), "
+            "CAST(n_nationkey % 5 AS INT) + 1) AS segment",
         )
-        .withColumn("hook_idx", F.row_number().over(w).cast("long") - 1)
+        .selectExpr(
+            "webhook_id",
+            "segment",
+            "CAST(row_number() OVER (PARTITION BY segment "
+            "ORDER BY webhook_id) AS BIGINT) - 1 AS hook_idx",
+        )
     )
 
 
@@ -96,31 +99,36 @@ _HOOKS_SQL = f"""
     """,
 )
 def capacity_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_name")
-    ranked = customer.select(
-        "c_custkey",
-        F.col("c_mktsegment").alias("segment"),
-        F.row_number().over(w).cast("long").alias("rn"),
-        capacity_for_segment(F.col("c_mktsegment")).alias("capacity"),
-    )
-    hooks = F.broadcast(_webhooks_dim(spark, sf_dir))
-    bucket = F.floor((F.col("rn") - 1) / F.col("capacity"))
-    return (
-        ranked.join(
-            hooks,
-            on=(hooks.segment == ranked.segment)
-            & (hooks.hook_idx == bucket),
-            how="left",
-        )
+    # SQL strings: one column operation each, where the Column API
+    # pays one per operator (several py4j calls apiece)
+    ranked = (
+        load_table(spark, sf_dir, "customer")
         .select(
-            ranked.c_custkey,
-            ranked.segment,
-            ranked.rn,
-            ranked.capacity,
-            hooks.webhook_id,
-            hooks.webhook_id.isNotNull().alias("assigned"),
+            F.expr("c_custkey"),
+            F.expr("c_mktsegment AS segment"),
+            F.expr(
+                "CAST(row_number() OVER (PARTITION BY c_mktsegment "
+                "ORDER BY c_name) AS BIGINT) AS rn"
+            ),
+            capacity_for_segment(F.col("c_mktsegment")).alias("capacity"),
         )
+        .alias("r")
+    )
+    hooks = F.broadcast(_webhooks_dim(spark, sf_dir)).alias("h")
+    return ranked.join(
+        hooks,
+        F.expr(
+            "h.segment = r.segment "
+            "AND h.hook_idx = floor((r.rn - 1) / r.capacity)"
+        ),
+        "left",
+    ).selectExpr(
+        "r.c_custkey",
+        "r.segment",
+        "r.rn",
+        "r.capacity",
+        "h.webhook_id",
+        "h.webhook_id IS NOT NULL AS assigned",
     )
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..registry import query
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, read_parquet
 
 # Bucket count is a layout-time knob: enough buckets to spread the
 # zipper join across the cluster, each bucket big enough to amortize
@@ -117,7 +117,7 @@ def compact_parquet(
         if f.endswith(".parquet")
     )
     n = max(1, -(-total // target_bytes))
-    spark.read.parquet(src).coalesce(n).write.mode("overwrite").parquet(
+    read_parquet(spark, src).coalesce(n).write.mode("overwrite").parquet(
         dst
     )
     return n
@@ -153,7 +153,7 @@ def layout_compact_small_files(
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     dst = os.path.join(tempfile.gettempdir(), f"hqmdw_compact_{tag}")
     compact_parquet(spark, frag, dst)
-    return spark.read.parquet(dst).groupBy("o_orderstatus").agg(
+    return read_parquet(spark, dst).groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         dec_sum("o_totalprice", "total_price"),
     )
@@ -277,7 +277,7 @@ def layout_dynamic_partition_overwrite(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("c_mktsegment").parquet(path)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_rows"))
     )

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.loaders import load_table
+from ..session import sql_string
+from ..sources.loaders import load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # Logical mutation plans (oracle-checked)
@@ -120,16 +121,14 @@ def new_send_records(
     current timestamp (C2), per-row ACTUAL status -- not the
     reference's blanket 'sent' (route.ts:146)."""
     batch_id = batch_id or str(uuid.uuid4())
-    return assigned.select(
-        F.expr("uuid()").alias("id"),
-        F.col("c_custkey").cast("string").alias("company_id"),
-        F.col("webhook_id").cast("string").alias("webhook_id"),
-        F.col("segment").alias("employee_range"),
-        F.lit(batch_id).alias("batch_id"),
-        F.current_timestamp().alias("sent_at"),
-        F.when(F.col("assigned"), F.lit("sent"))
-        .otherwise(F.lit("skipped"))
-        .alias("status"),
+    return assigned.selectExpr(
+        "uuid() AS id",
+        "CAST(c_custkey AS STRING) AS company_id",
+        "CAST(webhook_id AS STRING) AS webhook_id",
+        "segment AS employee_range",
+        f"{sql_string(batch_id)} AS batch_id",
+        "current_timestamp() AS sent_at",
+        "CASE WHEN assigned THEN 'sent' ELSE 'skipped' END AS status",
     )
 
 
@@ -153,7 +152,7 @@ def overwrite_update_by_key(
     Non-transactional on raw Parquet (write to temp, swap) -- documented
     Delta ``UPDATE`` upgrade path for production.
     """
-    df = spark.read.parquet(table_path)
+    df = read_parquet(spark, table_path)
     hit = F.col(key_col) == key_value
     for col_name, value in updates.items():
         df = df.withColumn(
@@ -161,7 +160,7 @@ def overwrite_update_by_key(
         )
     tmp = table_path.rstrip("/") + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
+    final = read_parquet(spark, tmp)
     final.write.mode("overwrite").parquet(table_path)
 
 
@@ -233,7 +232,7 @@ def _rewrite_touched_partitions(
 
     Returns the list of partition values rewritten.
     """
-    df = spark.read.parquet(table_path)
+    df = read_parquet(spark, table_path)
     touched = [
         r[0]
         for r in df.filter(touched_pred)

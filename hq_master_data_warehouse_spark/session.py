@@ -71,6 +71,12 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def sql_string(v: str) -> str:
+    """``v`` as a Spark SQL string literal (default parser: backslash
+    escapes), for values spliced into ``selectExpr``/``F.expr``."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def local_df(spark: SparkSession, rows, ddl: str):
     """Tiny driver-side row list as a pure-JVM LocalRelation.
 
@@ -105,8 +111,7 @@ def local_df(spark: SparkSession, rows, ddl: str):
             # decimal literals parse as DECIMAL in Spark SQL
             return f"CAST('{float(v)!r}' AS DOUBLE)"
         if isinstance(v, str):
-            escaped = v.replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{escaped}'"
+            return sql_string(v)
         raise TypeError(type(v))
 
     # Parameterized/nested types ('decimal(10,2)', 'map<string,int>')

@@ -32,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
+from .loaders import read_parquet
 from .txn_log import (
     build_txn_table,
     committed_versions,
@@ -91,7 +92,7 @@ def export_delta_log(
             schema_src = schema_src or os.path.join(
                 table_dir, info["path"]
             )
-    schema_json = spark.read.parquet(schema_src).schema.json()
+    schema_json = read_parquet(spark, schema_src).schema.json()
     head = committed_versions(table_dir)[-1]
     v0_commit = os.path.join(table_dir, "_txn_log", "00000000.json")
     created_ms = int(os.stat(v0_commit).st_mtime * 1000)
@@ -154,7 +155,7 @@ def read_delta_export(
                 )
     if not paths:
         raise ValueError(f"no add actions in {commit!r}")
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)
 
 
 @query(

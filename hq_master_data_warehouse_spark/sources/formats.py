@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..registry import query
-from .loaders import load_table
+from .loaders import load_table, read_parquet
 
 
 def _stage_dir(kind: str, sf_dir: str) -> str:
@@ -116,7 +116,7 @@ def source_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing time (PartitionFilters in the plan, asserted in
     tests/test_plans.py)."""
     path = partitioned_orders_path(spark, sf_dir)
-    orders = spark.read.parquet(path)
+    orders = read_parquet(spark, path)
     return (
         orders.filter(F.col("order_year").isin(1997, 1998))
         .groupBy("order_year")

@@ -75,23 +75,31 @@ def normalize_payload(raw: DataFrame, payload_col: str = "value") -> DataFrame:
     objects contribute one row; unknown fields are dropped by the
     explicit schema; absent fields surface as NULL.  The JS ``|| null``
     also nullifies empty strings -- matched via the trim-length guard.
+
+    A document that is not valid JSON, or is JSON ``null``, yields no
+    row: the reference sends both down its catch-all error path
+    (index.ts:131-141) and inserts nothing.  The check costs one more
+    parse per document (``try_parse_json``).
+
+    Built from two ``selectExpr`` strings: the same projections through
+    the Column API cost ~2,000 py4j calls.
     """
-    person_schema = ", ".join(f"{f} STRING" for f in PEOPLE_FIELDS)
-    as_array = F.from_json(F.col(payload_col), f"ARRAY<STRUCT<{person_schema}>>")
-    as_object = F.from_json(F.col(payload_col), f"STRUCT<{person_schema}>")
-    records = raw.select(
-        F.explode(
-            F.coalesce(as_array, F.array(as_object))
-        ).alias("rec")
+    person = ", ".join(f"{f} STRING" for f in PEOPLE_FIELDS)
+    as_array = f"from_json({payload_col}, 'ARRAY<STRUCT<{person}>>')"
+    as_object = f"from_json({payload_col}, 'STRUCT<{person}>')"
+    # invalid JSON -> NULL -> coalesced to a variant null, like JSON null
+    parsed = f"coalesce(try_parse_json({payload_col}), parse_json('null'))"
+    records = raw.selectExpr(
+        f"explode(CASE WHEN is_variant_null({parsed}) THEN NULL "
+        f"ELSE coalesce({as_array}, array({as_object})) END) AS rec"
     )
-
-    def norm(field: str):
-        c = F.col(f"rec.{field}")
-        return (
-            F.when(F.length(F.trim(c)) == 0, F.lit(None)).otherwise(c)
-        ).alias(field)
-
-    return records.select(*[norm(f) for f in PEOPLE_FIELDS])
+    return records.selectExpr(
+        *[
+            f"CASE WHEN length(trim(rec.{f})) = 0 THEN NULL "
+            f"ELSE rec.{f} END AS {f}"
+            for f in PEOPLE_FIELDS
+        ]
+    )
 
 
 QUARANTINE_BAD_ROWS = 7

@@ -4,26 +4,128 @@ Scans are declarative (``spark.read.parquet``) so Catalyst gets free
 predicate pushdown, column pruning, and partition pruning -- the Spark
 equivalent of the reference pushing filters into PostgREST querystrings
 (SURVEY.md par.4.1).  Maps to SURVEY ops S1-S4.
+
+Every engine Parquet scan goes through :func:`read_parquet`, which
+reads the schema from one footer on the driver instead of letting
+Spark run its one-task schema-inference job per new path set.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TEST_TABLES
 
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+# Names Spark's file index skips (InMemoryFileIndex's
+# shouldFilterOutPathName): hidden ``_``/``.`` entries, except
+# ``_k=v`` partition directories.  Hadoop globs return sorted matches.
+_DATA_GLOB = "{[!._]*,_*=*}"
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    On a path set the session has not resolved before, Spark infers
+    the schema with a one-task Spark job that reads ONE footer -- the
+    first data file's, since without ``mergeSchema`` it assumes all
+    files agree.  Parquet is self-describing, so this reads that same
+    footer on the driver instead: find the first data file of the
+    first path through the Hadoop ``FileSystem`` (skipping ``_``/``.``
+    names, descending into partition directories in sorted order; a
+    file path is used as is), convert its footer with Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` and a converter built
+    from the session conf (so ``nanosAsLong`` and the other reader
+    confs apply), and hand the result to ``spark.read.schema``.
+    Partition columns are still discovered from the paths.  Summary
+    files (``_metadata``) are not consulted; Spark has not written
+    them by default since 2.x.
+
+    Falls back to plain ``spark.read.parquet`` -- Spark's own
+    inference and its errors, e.g. UNABLE_TO_INFER_SCHEMA for an empty
+    directory -- when ``spark.sql.parquet.mergeSchema`` is on, when no
+    data file is found, or when the footer cannot be read.
+    """
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    schema = None
+    if paths and merge.strip().lower() != "true":
+        schema = _footer_schema(spark, paths[0])
+    if schema is None:
+        return spark.read.parquet(*paths)
+    jpaths = spark.sparkContext._jvm.PythonUtils.toSeq(list(paths))
+    jdf = spark._jsparkSession.read().schema(schema).parquet(jpaths)
+    return DataFrame(jdf, spark)
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The JVM ``StructType`` Spark's non-merging inference would give
+    for ``path``, read on the driver; None when there is no data file
+    or it cannot be read."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, client)
+
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    try:
+        root = jclass("org.apache.hadoop.fs.Path")(path)
+        fs = root.getFileSystem(conf)
+        status = _first_data_file(fs, fs.getFileStatus(root), jclass)
+        if status is None:
+            return None
+        footer_reader = jclass(_PARQUET + "ParquetFooterReader")
+        input_file = jclass("org.apache.parquet.hadoop.util.HadoopInputFile")
+        no_row_groups = jclass(
+            "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS
+        meta = footer_reader.readFooter(
+            input_file.fromStatus(status, conf), no_row_groups
+        )
+        footer = jclass("org.apache.parquet.hadoop.Footer")(
+            status.getPath(), meta
+        )
+        converter = jclass(_PARQUET + "ParquetToSparkSchemaConverter")(
+            state.conf()
+        )
+        return jclass(_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
+            footer, converter
+        )
+    except Py4JJavaError:
+        return None
+
+
+def _first_data_file(fs, status, jclass):
+    """Depth-first, name-sorted search for the first data file under
+    ``status`` (itself, when it is a file)."""
+    if not status.isDirectory():
+        return status
+    pattern = jclass("org.apache.hadoop.fs.Path")(status.getPath(), _DATA_GLOB)
+    for child in fs.globStatus(pattern) or []:
+        if child.isDirectory():
+            found = _first_data_file(fs, child, jclass)
+            if found is not None:
+                return found
+        elif not child.getPath().getName().endswith("._COPYING_"):
+            return child
+    return None
+
+
 # Plan memo: (sf_dir, name, input-identity) -> unexecuted DataFrame,
 # for the CURRENT application only (cleared whenever applicationId
 # changes -- ADVICE r13: a process cycling SparkSessions must not pin
 # plans/py4j refs of a stopped JVM).
-# ``spark.read.parquet`` re-lists the directory and re-reads footers
-# for the schema on EVERY call -- ~0.1 s of driver time per call even
-# warm, and a bench pass issues ~80 of them (r13 measurement).  The
-# fixture tables are immutable test data (no engine path writes into
-# an sf_dir), so re-resolving the same path in the same application
+# Resolving a path re-lists the directory and builds a new file index
+# on EVERY call: ~15-25 ms of driver time even with the schema read
+# from one footer on the driver (``read_parquet``), and a bench pass
+# issues ~80 of them.  The fixture tables are immutable test data (no engine
+# path writes into an sf_dir), so re-resolving the same path in the same application
 # only repeats metadata work; this memo is the path-API equivalent of
 # a catalog table's file-index cache (optimization guide par.6 --
 # avoid repeated listings), NOT result caching: the stored object is
@@ -69,6 +171,13 @@ def _dir_sig(path: str) -> str:
 
 
 def _memo_for_app(spark: SparkSession) -> dict:
+    """The plan memo of the current application.
+
+    Assumes ONE live application per process: the memo is a single
+    slot, emptied whenever ``applicationId`` changes.  A process that
+    alternates ``load_table`` calls between two live sessions of
+    different applications empties it on every switch and re-resolves
+    every path -- slower, never wrong (a miss just re-reads)."""
     app = spark.sparkContext.applicationId
     if app != _MEMO_APP[0]:
         _PLAN_MEMO.clear()
@@ -108,9 +217,9 @@ def load_table(
             return hit
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(spark.read.parquet(path))
+        df = normalize_event_ts(read_parquet(spark, path))
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     if not fresh:
         memo[key] = df
         while len(memo) > _MEMO_CAP:

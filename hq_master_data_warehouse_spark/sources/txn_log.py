@@ -19,8 +19,11 @@ skipping), NOT a port of any implementation:
   ledger swap in operators/ledger.py lacks; this is the documented
   production path made concrete).
 - snapshot AS OF v = fold add/remove actions for versions <= v; the
-  live file set feeds ONE ``spark.read.parquet(*files)`` scan, so
-  Catalyst still gets pushdown/pruning inside each file.
+  live file set feeds ONE scan through ``loaders.read_parquet``, so
+  Catalyst still gets pushdown/pruning inside each file.  The scan's
+  schema comes from one data file's footer, read on the driver: a new
+  file set costs no schema-inference job, and the commit read-backs
+  below go through the same helper.
 - the log is driver-side metadata (KBs for thousands of commits) --
   identical to Delta's driver-side log replay; the DATA path stays
   fully distributed.
@@ -48,7 +51,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..session import local_df
 from ..registry import query
-from .loaders import load_table
+from .loaders import load_table, read_parquet
 
 LOG_DIR = "_txn_log"
 
@@ -64,7 +67,10 @@ LOG_DIR = "_txn_log"
 # current-application cache (cleared on applicationId change so a
 # session-cycling process never pins a stopped JVM's plans), FIFO cap
 # as a growth backstop -- a long-lived writer accretes one new path
-# set per commit.
+# set per commit.  Like the loaders memo, this assumes ONE live
+# application per process: two live sessions of different
+# applications alternating reads empty it on every switch (slower,
+# never wrong -- a miss just re-resolves the paths).
 _SCAN_MEMO: dict[tuple, DataFrame] = {}
 _SCAN_APP: list[str] = [""]
 _SCAN_CAP = 64
@@ -78,7 +84,7 @@ def _scan_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     key = tuple(sorted(paths))
     hit = _SCAN_MEMO.get(key)
     if hit is None:
-        hit = _SCAN_MEMO[key] = spark.read.parquet(*paths)
+        hit = _SCAN_MEMO[key] = read_parquet(spark, *paths)
         while len(_SCAN_MEMO) > _SCAN_CAP:
             _SCAN_MEMO.pop(next(iter(_SCAN_MEMO)))
     return hit
@@ -204,7 +210,7 @@ def _write_file(
     path = os.path.join(table_dir, name)
     df.write.mode("overwrite").parquet(path)
     stats = (
-        df.sparkSession.read.parquet(path)
+        read_parquet(df.sparkSession, path)
         .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
         .collect()[0]
     )
@@ -249,7 +255,7 @@ def _write_bucketed(
         .parquet(out)
     )
     stats = (
-        df.sparkSession.read.parquet(out)
+        read_parquet(df.sparkSession, out)
         .groupBy("_b")
         .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
         .collect()

@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import local_df
+from ..session import local_df, sql_string
 
 #: reference rate constants -- send/route.ts:5-7
 RATE_LIMIT = 10
@@ -61,27 +61,22 @@ Transport = Callable[[str, str], bool]
 
 def build_payloads(assigned: DataFrame, batch_id: str) -> DataFrame:
     """F9+C9: enrich each assigned row with the _batch_metadata struct
-    (send/route.ts:102-111) and serialize the full document to JSON."""
-    with_meta = assigned.withColumn(
-        "_batch_metadata",
-        F.struct(
-            F.lit(batch_id).alias("batch_id"),
-            F.date_format(
-                F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
-            ).alias("batch_timestamp"),
-            F.col("segment").alias("employee_range"),
-            F.concat(F.lit("webhook-"), F.col("webhook_id")).alias(
-                "webhook_name"
-            ),
-            F.lit("hq-data-warehouse").alias("source"),
-        ),
+    (send/route.ts:102-111) and serialize the full document to JSON.
+    Both projections are ``selectExpr`` strings: a few py4j calls each,
+    where the Column API pays several per operator."""
+    meta = (
+        f"named_struct('batch_id', {sql_string(batch_id)}, "
+        "'batch_timestamp', date_format(current_timestamp(), "
+        "'yyyy-MM-dd\\'T\\'HH:mm:ss.SSSXXX'), "
+        "'employee_range', segment, "
+        "'webhook_name', concat('webhook-', webhook_id), "
+        "'source', 'hq-data-warehouse') AS _batch_metadata"
     )
-    return with_meta.select(
-        F.col("c_custkey").cast("string").alias("company_id"),
-        F.col("webhook_id").cast("string").alias("webhook_id"),
-        F.concat(F.lit("https://example.invalid/hooks/"), F.col("webhook_id"))
-        .alias("webhook_url"),
-        F.to_json(F.struct("*")).alias("payload"),
+    return assigned.selectExpr("*", meta).selectExpr(
+        "CAST(c_custkey AS STRING) AS company_id",
+        "CAST(webhook_id AS STRING) AS webhook_id",
+        "concat('https://example.invalid/hooks/', webhook_id) AS webhook_url",
+        "to_json(struct(*)) AS payload",
     )
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.loaders import load_table, normalize_event_ts
+from ..sources.loaders import load_table, normalize_event_ts, read_parquet
 
 _EVENTS_NS = "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events"
 
@@ -178,7 +178,7 @@ def _events_raw_schema_ddl(spark: SparkSession, sf_dir: str) -> str:
     code path, batch/stream parity by construction.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     return ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in raw.schema.fields
     )
@@ -665,7 +665,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         incoming = latest_per_key(batch_df)
         if os.path.exists(target):
-            current = batch_df.sparkSession.read.parquet(target)
+            current = read_parquet(batch_df.sparkSession, target)
             merged = latest_per_key(current.unionByName(incoming))
         else:
             merged = incoming
@@ -686,7 +686,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(target).select(
+    return read_parquet(spark, target).select(
         "user_id", "event_id", "ts", "event_type"
     )
 
@@ -818,7 +818,7 @@ def streaming_egress_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(audit_dir).select(
+    return read_parquet(spark, audit_dir).select(
         "batch_id", "attempt", "n_attempted", "n_delivered", "n_failed"
     )
 

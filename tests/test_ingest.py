@@ -4,7 +4,7 @@ mirroring clay-webhook/index.ts:47-91 edge cases."""
 
 from __future__ import annotations
 
-from hq_master_data_warehouse_spark.schemas import PEOPLE_FIELDS
+from hq_master_data_warehouse_spark.schemas import PEOPLE_FIELDS, PERSON
 from hq_master_data_warehouse_spark.sources.ingest import normalize_payload
 
 
@@ -19,11 +19,30 @@ def test_array_and_scalar_payloads(spark):
     rows = {r.first_name: r for r in out.collect()}
     assert set(rows) == {"Ada", "Alan", "Grace"}
     assert out.columns == PEOPLE_FIELDS
+    assert out.schema == PERSON
     assert rows["Alan"].job_title == "cryptanalyst"
     # absent whitelisted fields -> NULL
     assert rows["Ada"].job_title is None
     # unknown fields are dropped by the explicit schema
     assert "unknown_field" not in out.columns
+
+
+def test_malformed_and_null_documents_insert_no_person(spark):
+    """Invalid JSON and JSON ``null`` take the reference's catch-all
+    error path (clay-webhook/index.ts:131-141): no person row.  Empty
+    objects/arrays, bare objects and arrays keep their rows."""
+    docs = {
+        '{"first_name":': 0,
+        "null": 0,
+        "": 0,
+        "{}": 1,
+        "[]": 0,
+        '{"first_name":"Ada"}': 1,
+        '[{"first_name":"Ada"},{"first_name":"Alan"}]': 2,
+    }
+    for doc, want in docs.items():
+        one = spark.createDataFrame([(doc,)], "value string")
+        assert normalize_payload(one).count() == want, doc
 
 
 def test_empty_string_becomes_null(spark):

@@ -27,6 +27,8 @@ q15's global max, the flag-partitioned weighted median):
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -139,3 +141,63 @@ def test_no_cartesian_and_no_unbounded_global_window(spark, name):
             f"_global_rank/_global_cumsum helpers or add an audited "
             f"boundedness entry to ALLOWED_GLOBAL_WINDOWS"
         )
+
+
+def _inferring_parquet_reads(tree) -> list[tuple[int, str]]:
+    """(line, enclosing function) of every ``<x>.read[...].parquet(``
+    call whose reader chain neither sets ``.schema(...)`` nor asks for
+    ``mergeSchema`` (a merge reads every footer, which
+    ``read_parquet`` also leaves to Spark) -- the calls that make Spark
+    run a schema-inference job only to read one footer."""
+    hits = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            recv, exempt = node.func.value, False
+            while isinstance(recv, ast.Call) and isinstance(
+                recv.func, ast.Attribute
+            ):
+                exempt |= recv.func.attr == "schema" or (
+                    recv.func.attr == "option"
+                    and len(recv.args) > 0
+                    and isinstance(recv.args[0], ast.Constant)
+                    and recv.args[0].value == "mergeSchema"
+                )
+                recv = recv.func.value
+            if (
+                isinstance(recv, ast.Attribute)
+                and recv.attr == "read"
+                and not exempt
+            ):
+                hits.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, "<module>")
+    return hits
+
+
+def test_parquet_scans_go_through_read_parquet():
+    """Every engine Parquet scan goes through ``loaders.read_parquet``,
+    which reads the schema from one footer on the driver; a direct
+    ``spark.read.parquet`` brings back Spark's one-task schema
+    inference job for every new path set."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for line, func in _inferring_parquet_reads(
+            ast.parse(path.read_text(), str(path))
+        ):
+            if (rel, func) != ("sources/loaders.py", "read_parquet"):
+                offenders.append(f"{rel}:{line} ({func})")
+    assert not offenders, (
+        "direct spark.read.parquet scans (use loaders.read_parquet): "
+        + ", ".join(offenders)
+    )
