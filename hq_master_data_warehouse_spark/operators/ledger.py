@@ -140,30 +140,6 @@ def unsent_companies(companies: DataFrame, ledger: DataFrame) -> DataFrame:
     return companies.join(sent_keys, on="c_custkey", how="left_anti")
 
 
-def overwrite_update_by_key(
-    spark: SparkSession,
-    table_path: str,
-    key_col: str,
-    key_value,
-    updates: dict[str, object],
-) -> None:
-    """S7 physical path: read -> conditional withColumn -> overwrite.
-
-    Non-transactional on raw Parquet (write to temp, swap) -- documented
-    Delta ``UPDATE`` upgrade path for production.
-    """
-    df = read_parquet(spark, table_path)
-    hit = F.col(key_col) == key_value
-    for col_name, value in updates.items():
-        df = df.withColumn(
-            col_name, F.when(hit, F.lit(value)).otherwise(F.col(col_name))
-        )
-    tmp = table_path.rstrip("/") + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    final = read_parquet(spark, tmp)
-    final.write.mode("overwrite").parquet(table_path)
-
-
 def _swap_partitions(
     table_path: str, tmp: str, part_col: str, values: list
 ) -> None:
@@ -273,8 +249,7 @@ def partitioned_update_by_key(
     if part_col in updates:
         raise ValueError(
             f"updating partition column {part_col!r} is not supported "
-            "by the partition-pruned rewrite; use a full-table "
-            "overwrite (overwrite_update_by_key) or the MERGE path"
+            "by the partition-pruned rewrite; use the MERGE path"
         )
     hit = F.col(key_col) == key_value
 
@@ -309,8 +284,8 @@ def partitioned_delete_by_key(
 # -- MERGE / upsert (engine surface): the production path for S7+S5 in
 #    one atomic operation (Delta/Iceberg MERGE INTO).  Logical
 #    semantics here as a full-outer join + coalesce, oracle-checked;
-#    the physical swap follows overwrite_update_by_key's temp-and-swap
-#    pattern.
+#    the physical swap follows _rewrite_touched_partitions'
+#    temp-and-swap pattern.
 def merge_upsert(
     base: DataFrame, updates: DataFrame, key: str
 ) -> DataFrame:

@@ -87,7 +87,8 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    FK chain); every leg is a semi/anti-join against the request set,
 #    which production would BROADCAST (requests << facts).  Run as a
 #    dry-run report before the physical delete (the physical path is
-#    `overwrite_update_by_key` / compaction in operators/ledger.py).
+#    the txn-log commit/compaction path: `commit` the rewritten files'
+#    add/remove actions, then `compact_table`, in sources/txn_log.py).
 @query(
     "privacy_cascade_delete",
     oracle=f"""

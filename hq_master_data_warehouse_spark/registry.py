@@ -12,6 +12,9 @@ before value-hashing.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,45 +40,41 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # ---------------------------------------------------------------------------
-# Check-window rotation.  The round driver's correctness gate verifies the
-# FIRST ~50 entries of queries() in dict order, so ordering is evidence
-# policy: queries fixed this round and never-checked queries go to the
-# front of the window; queries that already hold a green (or rows-only)
-# record from a prior round's CORRECTNESS_r*.json rotate to the back.
-# Update PREVIOUSLY_CHECKED with each round's newly recorded names.
+# Check-window rotation.  The correctness gate that consumes queries()
+# verifies only its FIRST ~50 entries in dict order, so the order
+# decides which names get fresh evidence.  Three rules, from the newest
+# record each name holds in CORRECTNESS_r*.json (green = hash match, or
+# the rows-only record that is the most an oracle-less op can get):
+#   1. names with no green latest record (never recorded, or red in
+#      their newest round) come first: oracle-backed before rows-only,
+#      each in registration order;
+#   2. then names pinned in RECHECK whose newest record predates
+#      RECHECK_SINCE (plan changed since their last green); a pin that
+#      is not a registered query is skipped here and fails
+#      tests/test_catalog.py;
+#   3. then every other name, oldest record first, ties in
+#      registration order -- so the window sweeps the whole registry
+#      over successive rounds.
 # ---------------------------------------------------------------------------
 
-def _recorded_names() -> set[str]:
-    """Names already holding a usable record in a prior round's
-    CORRECTNESS_r*.json (green hash row, or the rows-only record that
-    is the max evidence for oracle-less ops).  Reading the files at
-    runtime makes the rotation self-updating: each round's newly
-    recorded names drop out of the front window automatically.
+# Queries whose plan changed in round RECHECK_SINCE: each holds an
+# older green record but needs one on the post-change code path.  A
+# pin retires itself once a record from round >= RECHECK_SINCE lands.
+RECHECK_SINCE = 14
+RECHECK: tuple[str, ...] = ()
 
-    Only the LATEST round's record per name counts, so a query that
-    regresses red in a later round rotates back to the front of the
-    window instead of coasting forever on an old green row.
-    Falls back to the static round-1 list if no files are readable."""
-    import glob
-    import json
-    import os
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    )
-    # Reset the rounds map up front so EVERY exit path (including the
-    # static fallback below) leaves _RECORD_ROUND consistent with the
-    # record source this call actually used -- previously the fallback
-    # returned PREVIOUSLY_CHECKED while keeping stale rounds from an
-    # earlier call, and ordered_queries' RECHECK retirement reasoned
-    # from the mismatched pair (ADVICE r8).
-    _RECORD_ROUND.clear()
-    latest: dict[str, bool] = {}
-    rounds: dict[str, int] = {}
-    found = False
-    # sorted() puts r01 before r02 ...; later files overwrite earlier
-    # entries so `latest` ends up holding each name's newest verdict.
-    for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
+def _latest_records() -> dict[str, tuple[int, bool]]:
+    """``{name: (round, green)}`` from each name's newest record in the
+    repo's CORRECTNESS_r<round>.json files (empty if none is readable)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = []
+    for entry in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", entry)
+        if m:
+            files.append((int(m.group(1)), os.path.join(root, entry)))
+    records: dict[str, tuple[int, bool]] = {}
+    for rnd, path in sorted(files):
         try:
             with open(path) as f:
                 data = json.load(f)
@@ -83,410 +82,35 @@ def _recorded_names() -> set[str]:
             continue
         if not isinstance(data, dict):
             continue
-        found = True
-        try:
-            rnd = int(
-                os.path.basename(path).split("_r")[1].split(".")[0]
-            )
-        except (IndexError, ValueError):
-            rnd = 0
         for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            latest[name] = bool(
-                row.get("hash_match") or row.get("err") == "no_oracle"
-            )
-            rounds[name] = max(rounds.get(name, 0), rnd)
-    if not found:
-        return set(PREVIOUSLY_CHECKED)
-    _RECORD_ROUND.update(rounds)
-    return {name for name, ok in latest.items() if ok}
-
-
-# Populated by _recorded_names(): name -> latest round holding any
-# record for it.  Lets RECHECK pins self-retire once the post-change
-# re-record lands (see ordered_queries).
-_RECORD_ROUND: dict[str, int] = {}
-
-
-# Names verified by the round-1 gate (static fallback for
-# _recorded_names when the CORRECTNESS files are not readable).
-PREVIOUSLY_CHECKED: tuple[str, ...] = (
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_duplicate_clusters",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine",
-    "dedup_levenshtein_pairs", "dedup_semantic_clusters",
-    "split_train_holdout", "sample_source_mix", "sample_stratified_topn",
-    "text_token_stats", "text_quality_scores", "text_langid_heuristic",
-    "text_fingerprint", "text_word_frequency", "text_regex_functions",
-    "text_winnowing_fingerprint", "text_tfidf_top_terms",
-    "text_contamination_check", "text_repetition_stats",
-    "text_pii_redaction", "text_corpus_top_ngrams", "text_chunk_windows",
-    "text_phrase_search", "text_bm25_scores", "flagship_range_counts",
-    "agg_sent_counts_by_segment", "agg_conditional_tally",
-    "agg_numeric_stats", "agg_rollup", "agg_cube",
-    "agg_capacity_arithmetic", "agg_audit_counters", "agg_grouping_sets",
-    "agg_incremental_maintenance", "agg_histogram_fixed_bins",
-    "agg_correlation_stats", "events_cohort_retention",
-    "events_transition_matrix", "window_share_of_total",
-    "window_month_over_month", "scd2_order_history", "agg_string_agg",
-    "agg_mode_per_group",
-)
-
-# Explicit front-of-window order for this round (round 5): the two
-# queries whose round-4 records CRASHED the gate's canonicalizer on
-# array-typed output cells, now string-encoded (VERDICT r4 item 2).
-# They are rows-only (no oracle) so without a pin the oracle-backed
-# unrecorded mass would push them out of the ~50-slot window again.
-PRIORITY: tuple[str, ...] = (
-    "agg_approx_sketches",
-    "multimodal_feature_extract",
-)
-
-# Round 6: the 36 never-recorded names (35 pre-round + the round-6
-# similarity_ann_recall_eval) fill the front of the ~50-slot window;
-# this round's new additions sort AFTER them so they use only the
-# spare slots and cannot displace the names VERDICT r5 item 1 queues.
-DEFER_NEW: tuple[str, ...] = (
-    "ml_mutual_information",
-    "sketch_bloom_membership",
-    "layout_zorder_clustering",
-    "text_fuzzy_join_levenshtein",
-    "events_peak_concurrency",
-    "graph_connected_components",
-    "orders_pareto_skyline",
-    "ml_knn_classifier",
-    "text_keyword_rake",
-    "dedup_shingle_containment",
-    "agg_theil_inequality",
-    "orders_daily_drawdown",
-    "text_zipf_fit",
-    "events_bitmap_week_overlap",
-    "ml_roc_auc_exact",
-    "orders_backlog_clamped",
-    "sketch_hll_set_algebra",
-    "events_pattern_regex_funnel",
-    "multimodal_phash_neardup",
-    "orders_lorenz_curve",
-    "events_entropy_rate",
-    "ml_isotonic_calibration",
-    "ml_ttest_welch",
-    "ml_brier_decomposition",
-    "events_xcorr_click_purchase",
-    "orders_diff_in_diff",
-    "ml_mann_whitney_u",
-    "events_rank_corr_spearman",
-    "events_rank_corr_kendall",
-    "ml_anova_oneway",
-    "orders_theilsen_trend",
-    "drift_js_event_types",
-    "ml_levene_brown_forsythe",
-    "ml_cohens_kappa",
-    "orders_hazard_nelson_aalen",
-    "text_readability_flesch",
-    "ml_naive_bayes_langid",
-    "ml_mcnemar_nb_vs_heuristic",
-    "agg_hhi_concentration",
-    "ml_durbin_watson",
-    "orders_runs_test_daily",
-    "graph_kcore_decomposition",
-    "dedup_tfidf_cosine_pairs",
-    "agg_atkinson_index",
-    "window_bollinger_bands",
-    "ml_adaboost_stumps",
-    "dq_gap_and_islands",
-    "ml_permutation_test",
-    "sketch_approx_quantiles",
-    "ml_tukey_hsd",
-    "graph_modularity_score",
-    "text_sentiment_lexicon",
-    "asof_join_tolerance",
-    "orders_segmented_trend",
-    "multimodal_audio_features",
-    "join_incremental_maintenance",
-    "orders_forecast_backtest",
-    "window_rsi_momentum",
-    "orders_price_elasticity",
-    "orders_xyz_analysis",
-    "ml_wilcoxon_signed_rank",
-    "text_gopher_quality_rules",
-    "text_compression_ratio",
-    "ml_multiple_testing_bh",
-    "geo_grid_cells",
-    "geo_haversine_pairs",
-    "similarity_pq_adc",
-    "sql_interface_topk_share",
-    "basket_frequent_triples",
-    "ml_cuped_adjustment",
-    "agg_winsorized_stats",
-    "events_markov_next_event_eval",
-    "ml_ratio_metric_delta_method",
-    "ml_wasserstein_distance",
-    "orders_segment_migration",
-    "ml_conformal_interval",
-    "ml_item_cf_similarity",
-    "orders_repeat_purchase_curve",
-    "orders_logrank_test",
-    "ml_cochran_armitage_trend",
-    "events_granger_causality",
-    "ml_jarque_bera",
-    "ml_hetero_variance_trend",
-    # round 8 (small curated wave; freeze otherwise held): the
-    # bit-exact truncated EWMA completing the TA window family, and
-    # the per-query MRR companion to NDCG (integer micro-unit RR)
-    "window_ewma_customer_revenue",
-    "ml_mrr_reciprocal_ranks",
-    "dq_tukey_fence_outliers",
-    "ml_precision_recall_at_k",
-    "ml_ridge_regression_closed_form",
-    # round 9 (small curated wave; freeze otherwise held): the
-    # batch-vs-corpus incremental dedup probe and the
-    # cluster-representative split that closes the near-dup
-    # train/holdout contamination channel
-    "dedup_incremental_lsh",
-    "split_leakage_safe",
-    "source_txn_log_changes",
-    # round 12 (small curated wave; freeze otherwise held): the
-    # sanctioned corpus-scale link-prediction path the r12 wedge
-    # refuse-guard points to, and the end-to-end incremental CDF
-    # consumer (VERDICT r11 items 2 and 6)
-    "graph_link_prediction_minhash",
-    "source_txn_log_incremental_sync",
-    # round 13 (small curated wave; freeze otherwise held): the
-    # NULL-value variant table that oracle-gates the sync consumer's
-    # explicit-tombstone fold (VERDICT r12 item 3 -- the shared
-    # fixture has no NULL prices, so this path was property-tested
-    # but never gate-recorded)
-    "source_txn_log_sync_tombstones",
-)
-
-# Queries whose PLAN or EVIDENCE LEVEL changed in round RECHECK_SINCE
-# (r13: the incremental sync consumer's MERGE fold now carries an
-# explicit is_deleted tombstone column instead of filtering on
-# change_type -- value-identical on the fixture, but the aggregate
-# struct in the plan changed, so evidence policy wants a record on
-# the post-change code path).  They already hold records from earlier
-# rounds, but evidence policy wants a fresh record on the post-change
-# code, so they join the front of the window until a record from
-# round >= RECHECK_SINCE lands; then _RECORD_ROUND retires them
-# automatically.
-RECHECK_SINCE = 14
-RECHECK: tuple[str, ...] = (
-    # r14 optimization round, plan-changed cells (values identical,
-    # oracles untouched; each re-gated strict at sf0.01 before
-    # landing -- see OPTIMIZATION_r14.md): the fan_out_scan
-    # conditional repartition ahead of the ANN/levenshtein/semantic
-    # pair verifies (plan gains an Exchange at fixture split counts),
-    # the semantic salted slice pair join, the IVF assignment
-    # fan-out, and the orders_rfm melted single-pass grouped rank.
-    "similarity_ann_lsh",
-    "similarity_ann_recall_eval",
-    "similarity_ivf_topk",
-    "dedup_levenshtein_pairs",
-    "dedup_semantic_clusters",
-    "orders_rfm_scores",
-    # keyed fan-out ahead of the EWMA window; scan fan-out ahead of
-    # the scalar projection surface
-    "window_ewma_customer_revenue",
-    "scalar_functions_showcase",
-)
-
-# r13 RECHECK block, retired (all re-records landed green in
-# CORRECTNESS_r13, verified by the r13 judge: 50/50 rows+schema+hash).
-_RECHECK_R13_RETIRED: tuple[str, ...] = (
-    "source_txn_log_incremental_sync",
-    # LP_N_HASHES 24 -> 48 (VERDICT r12 item 2, measured A/B): both
-    # the Spark plan and the DuckDB oracle change with the constant,
-    # so the post-change pair needs a fresh gate record
-    "graph_link_prediction_minhash",
-    # r13 optimization round, plan-changed cells (values identical,
-    # oracles untouched; each re-gated locally at sf0.01 before
-    # landing -- see OPTIMIZATION_r13.md): simhash's SQL-parsed vote
-    # aggregates + parallel tokenize stage; tfidf's long-path dot
-    # fold + wmax guard column; bootstrap/permutation SQL-parsed
-    # replica aggregates; kcore's lazy-checkpoint loop; the
-    # local_df (VALUES LocalRelation) conversion of driver-built
-    # dimension sides; the txn-log scan-plan memo.
-    "dedup_simhash",
-    "dedup_tfidf_cosine_pairs",
-    "ml_bootstrap_mean_ci",
-    "ml_permutation_test",
-    "graph_kcore_decomposition",
-    "source_txn_log_changes",
-    "source_txn_log_snapshot",
-    "source_txn_log_time_travel",
-    "source_txn_log_pruned_scan",
-    "layout_txn_log_compact",
-    "layout_txn_log_vacuum",
-    "layout_delta_export_roundtrip",
-    "events_attribution_markov",
-    "similarity_mmr_diversify",
-    "dedup_embedding_cosine",
-    "similarity_ann_recall_eval",
-    "join_range_binned",
-    # fan_out_scan added a conditional repartition ahead of the span
-    # pipeline (plan gains an Exchange at fixture split counts)
-    "dedup_exact_substring",
-    # adaboost expressions SQL-parsed (same CASE semantics, ~3,300
-    # fewer py4j calls per construction)
-    "ml_adaboost_stumps",
-    # winnowing: canonicalization materialized OUTSIDE the per-window
-    # lambda (was re-evaluated per window position, O(len^2)/doc)
-    "text_winnowing_fingerprint",
-    # PQ-ADC: Lloyd-loop checkpoints lazy (plans unchanged, jobs fold)
-    "similarity_pq_adc",
-)
-
-# r12 RECHECK block, retired (re-record landed green in
-# CORRECTNESS_r12, verified by the r12 judge): the exact
-# link-prediction gained the wedge refuse-guard.
-_RECHECK_R12_RETIRED: tuple[str, ...] = (
-    "graph_link_prediction_jaccard",
-)
-
-# r11 RECHECK block, retired (all 32 re-records landed green in
-# CORRECTNESS_r11, verified by the r11 judge): txn-log family incl.
-# the v3 update wave, the graph family on the shared pair substrate,
-# the JPEG fixed-point oracle conversion, the global/grouped window
-# sweep, the MIX_WEIGHTS-derived samplers.
-_RECHECK_R11_RETIRED: tuple[str, ...] = (
-    "source_txn_log_changes",
-    "source_txn_log_snapshot",
-    "source_txn_log_time_travel",
-    "source_txn_log_pruned_scan",
-    "layout_txn_log_compact",
-    "layout_txn_log_vacuum",
-    "layout_delta_export_roundtrip",
-    "graph_kcore_decomposition",
-    "ml_roc_auc_exact",
-    "sample_source_mix",
-    "sample_hash_weighted_mix",
-    "multimodal_decode_jpeg",
-    "graph_pagerank_copurchase",
-    "graph_triangle_count",
-    "graph_bfs_hops",
-    "graph_link_prediction_jaccard",
-    "graph_connected_components",
-    "graph_modularity_score",
-    "ml_mann_whitney_u",
-    "ml_wilcoxon_signed_rank",
-    "agg_winsorized_stats",
-    "ml_wasserstein_distance",
-    "ml_conformal_interval",
-    "events_interarrival_stats",
-    "text_zipf_fit",
-    "tpch_q15_top_supplier",
-    "agg_weighted_median",
-    "agg_approx_sketches",
-    "orders_segment_migration",
-    "window_distribution_functions",
-    "sample_stratified_topn",
-    "pack_shuffle_shards",
-)
-
-# r10 RECHECK block, retired (all re-records landed green in
-# CORRECTNESS_r10): the ten rows-only->oracle conversions
-# (tolerance-audit, hex-replay multimodal, fixed-point pHash,
-# quantized PQ), the sparse NB model consumers, and the matcache/CDF
-# consumers.
-_RECHECK_R10_RETIRED: tuple[str, ...] = (
-    "sample_source_mix",
-    "agg_approx_sketches",
-    "similarity_mmr_diversify",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "multimodal_decode_image",
-    "multimodal_decode_png",
-    "multimodal_decode_audio",
-    "multimodal_audio_features",
-    "ml_naive_bayes_langid",
-    "ml_mcnemar_nb_vs_heuristic",
-    "multimodal_phash_neardup",
-    "similarity_pq_adc",
-    "source_txn_log_changes",
-    "graph_connected_components",
-    "graph_modularity_score",
-    "dedup_duplicate_clusters",
-    "dedup_cluster_representatives",
-    "split_leakage_safe",
-)
-
-# r9 RECHECK block, retired (all re-records landed green in
-# CORRECTNESS_r09): streaming family batch-twin oracles, md5 LSH
-# rewrites, ANN chain-fold oracles.
-_RECHECK_R9_RETIRED: tuple[str, ...] = (
-    "streaming_tumbling_counts",
-    "streaming_dedup_by_key",
-    "streaming_ingest_audit",
-    "streaming_static_enrich_join",
-    "streaming_session_windows",
-    "streaming_stream_stream_join",
-    "streaming_upsert_sink",
-    "streaming_txn_log_sink",
-    "streaming_egress_retry",
-    "streaming_stateful_running_totals",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "similarity_ann_lsh",
-    "similarity_ivf_topk",
-)
+            if isinstance(row, dict):
+                green = row.get("hash_match") or row.get("err") == "no_oracle"
+                records[name] = (rnd, bool(green))
+    return records
 
 
 def ordered_queries() -> dict[str, QueryFn]:
-    """QUERIES reordered so the driver's capped check window lands on
-    PRIORITY first (changed-this-round names, checked or not), then
-    every never-checked query with a real oracle, then never-checked
-    rows-only entries (weaker evidence -- they must not displace
-    oracle-backed names from the ~50-slot window), then names that
-    already hold a prior-round record."""
+    """QUERIES in check-window order: names without a green latest
+    record first (oracle-backed before rows-only), then active RECHECK
+    pins, then the rest oldest record first.  Ties keep registration
+    order (Python's sort is stable)."""
     load_catalog()
-    checked = _recorded_names()
-    # PRIORITY is self-retiring: a pinned name whose (re-)record has
-    # landed green in a later CORRECTNESS file stops consuming a
-    # front-of-window slot automatically next round.
-    front = [n for n in PRIORITY if n in QUERIES and n not in checked]
-    # changed-plan names needing a post-change re-record: pinned
-    # AFTER the never-recorded mass is guaranteed room (they already
-    # hold old greens, so they use spare slots only if placed behind
-    # the unchecked names -- handled below by appending to `front`
-    # order after the unchecked block via `recheck`).
+    records = _latest_records()
+    green = {n for n, (_, ok) in records.items() if ok}
+    front = sorted(
+        (n for n in QUERIES if n not in green), key=lambda n: n not in ORACLES
+    )
     recheck = [
         n
         for n in RECHECK
-        if n in QUERIES
-        and _RECORD_ROUND.get(n, 0) < RECHECK_SINCE
-        and n in checked  # never-recorded names are in `middle` anyway
+        if n in QUERIES and n in green and records[n][0] < RECHECK_SINCE
     ]
-    seen = set(front) | set(recheck)
-    middle = [n for n in QUERIES if n not in seen and n not in checked]
-    # within the never-checked block: oracle-backed names first,
-    # rows-only after, this round's deferred additions last -- and
-    # WITHIN the deferred block, DEFER_NEW tuple order (the round's
-    # value ranking), so when additions outnumber the spare window
-    # slots the highest-value operators get this round's record and
-    # the tail rotates to the next round.
-    middle.sort(
-        key=lambda n: (
-            n in DEFER_NEW,
-            DEFER_NEW.index(n) if n in DEFER_NEW else 0,
-            n not in ORACLES,
-        )
+    pinned = set(recheck)
+    back = sorted(
+        (n for n in QUERIES if n in green and n not in pinned),
+        key=lambda n: records[n][0],
     )
-    back = [n for n in QUERIES if n in checked and n not in seen]
-    # VERDICT r12 item 1: rotate the back block by EVIDENCE AGE.  The
-    # driver's gate only reaches the first ~50 names, and with every
-    # name holding a record the window previously re-verified the same
-    # 50 names every round (registration order is stable), leaving
-    # ~320 greens refreshing only via explicit RECHECK pins.  Sorting
-    # oldest-record-first (ties broken by registration order, which
-    # Python's stable sort preserves) makes the spare window slots
-    # sweep the whole registry on a ~7-round cycle with zero driver
-    # changes: each round re-records ~50 names, which pushes them to
-    # the back of next round's ordering automatically.
-    back.sort(key=lambda n: _RECORD_ROUND.get(n, 0))
-    return {
-        n: QUERIES[n] for n in (*front, *middle, *recheck, *back)
-    }
+    return {n: QUERIES[n] for n in (*front, *recheck, *back)}
 
 
 def load_catalog() -> None:

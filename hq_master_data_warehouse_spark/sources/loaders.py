@@ -13,6 +13,7 @@ Spark run its one-task schema-inference job per new path set.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
@@ -117,10 +118,40 @@ def _first_data_file(fs, status, jclass):
     return None
 
 
-# Plan memo: (sf_dir, name, input-identity) -> unexecuted DataFrame,
-# for the CURRENT application only (cleared whenever applicationId
-# changes -- ADVICE r13: a process cycling SparkSessions must not pin
-# plans/py4j refs of a stopped JVM).
+class AppPlanMemo:
+    """Unexecuted DataFrames memoized for the CURRENT application only.
+
+    Emptied whenever ``applicationId`` changes (ADVICE r13: a process
+    cycling SparkSessions must not pin plans/py4j refs of a stopped
+    JVM), and capped FIFO at ``cap`` entries as a growth backstop.
+
+    Assumes ONE live application per process: the memo is a single
+    slot, so a process that alternates calls between two live sessions
+    of different applications empties it on every switch and rebuilds
+    every entry -- slower, never wrong (a miss just re-resolves)."""
+
+    def __init__(self, cap: int) -> None:
+        self.cap = cap
+        self._app = ""
+        self._plans: dict = {}
+
+    def get(
+        self, spark: SparkSession, key, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """The memoized DataFrame for ``key``, from ``build()`` on a miss."""
+        app = spark.sparkContext.applicationId
+        if app != self._app:
+            self._plans.clear()
+            self._app = app
+        hit = self._plans.get(key)
+        if hit is None:
+            hit = self._plans[key] = build()
+            while len(self._plans) > self.cap:
+                self._plans.pop(next(iter(self._plans)))
+        return hit
+
+
+# load_table's plan memo: (sf_dir, name, input-identity) -> scan.
 # Resolving a path re-lists the directory and builds a new file index
 # on EVERY call: ~15-25 ms of driver time even with the schema read
 # from one footer on the driver (``read_parquet``), and a bench pass
@@ -143,9 +174,7 @@ def _first_data_file(fs, status, jclass):
 # object conditions (df1["k"] == df2["k"]) or cogroup over two hits
 # trip Spark's ambiguous-self-join detection -- pass ``fresh=True``
 # for independent lineage (the exact_cosine_pairs cogroup does).
-_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-_MEMO_APP: list[str] = [""]
-_MEMO_CAP = 256
+_PLAN_MEMO = AppPlanMemo(cap=256)
 
 
 def _dir_sig(path: str) -> str:
@@ -168,21 +197,6 @@ def _dir_sig(path: str) -> str:
         return f"{st.st_mtime_ns}:{st.st_size}"
     except OSError:
         return ""
-
-
-def _memo_for_app(spark: SparkSession) -> dict:
-    """The plan memo of the current application.
-
-    Assumes ONE live application per process: the memo is a single
-    slot, emptied whenever ``applicationId`` changes.  A process that
-    alternates ``load_table`` calls between two live sessions of
-    different applications empties it on every switch and re-resolves
-    every path -- slower, never wrong (a miss just re-reads)."""
-    app = spark.sparkContext.applicationId
-    if app != _MEMO_APP[0]:
-        _PLAN_MEMO.clear()
-        _MEMO_APP[0] = app
-    return _PLAN_MEMO
 
 
 def load_table(
@@ -209,22 +223,16 @@ def load_table(
     identical event times regardless of fixture vintage.
     """
     path = f"{sf_dir}/{name}.parquet"
-    memo = _memo_for_app(spark)
-    key = (sf_dir, name, _dir_sig(path))
-    if not fresh:
-        hit = memo.get(key)
-        if hit is not None:
-            return hit
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(read_parquet(spark, path))
-    else:
-        df = read_parquet(spark, path)
-    if not fresh:
-        memo[key] = df
-        while len(memo) > _MEMO_CAP:
-            memo.pop(next(iter(memo)))
-    return df
+
+    def scan() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return normalize_event_ts(read_parquet(spark, path))
+        return read_parquet(spark, path)
+
+    if fresh:
+        return scan()
+    return _PLAN_MEMO.get(spark, (sf_dir, name, _dir_sig(path)), scan)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..session import local_df
 from ..registry import query
-from .loaders import load_table, read_parquet
+from .loaders import AppPlanMemo, load_table, read_parquet
 
 LOG_DIR = "_txn_log"
 
@@ -63,31 +63,16 @@ LOG_DIR = "_txn_log"
 # bytes, so the same path tuple always denotes the same rows; any new
 # commit changes the live/feed file set and therefore the key.  The
 # memo holds unexecuted plans only -- every action still reads the
-# parquet files.  r14 hygiene (VERDICT r13 item 5 / ADVICE): single
-# current-application cache (cleared on applicationId change so a
-# session-cycling process never pins a stopped JVM's plans), FIFO cap
-# as a growth backstop -- a long-lived writer accretes one new path
-# set per commit.  Like the loaders memo, this assumes ONE live
-# application per process: two live sessions of different
-# applications alternating reads empty it on every switch (slower,
-# never wrong -- a miss just re-resolves the paths).
-_SCAN_MEMO: dict[tuple, DataFrame] = {}
-_SCAN_APP: list[str] = [""]
-_SCAN_CAP = 64
+# parquet files.  Scoped to the current application and FIFO-capped
+# like the loaders memo (``AppPlanMemo``): a long-lived writer accretes
+# one new path set per commit.
+_SCAN_MEMO = AppPlanMemo(cap=64)
 
 
 def _scan_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    if app != _SCAN_APP[0]:
-        _SCAN_MEMO.clear()
-        _SCAN_APP[0] = app
-    key = tuple(sorted(paths))
-    hit = _SCAN_MEMO.get(key)
-    if hit is None:
-        hit = _SCAN_MEMO[key] = read_parquet(spark, *paths)
-        while len(_SCAN_MEMO) > _SCAN_CAP:
-            _SCAN_MEMO.pop(next(iter(_SCAN_MEMO)))
-    return hit
+    return _SCAN_MEMO.get(
+        spark, tuple(sorted(paths)), lambda: read_parquet(spark, *paths)
+    )
 
 
 def _table_dir(sf_dir: str, variant: str = "") -> str:

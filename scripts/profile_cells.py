@@ -1,4 +1,4 @@
-"""Round-14 optimization profiler: per-cell timings + executed plans
+"""Optimization profiler: per-cell timings + executed plans
 + per-stage metrics for the headline bench cells (guide section 1:
 measure first).
 
@@ -7,15 +7,17 @@ For every requested query it
   2. runs REPS interleaved timed noop passes (min = engine cost,
      median = robust central -- the bench's two estimators),
   3. dumps the EXECUTED adaptive plan (isFinalPlan=true where the
-     query is a single job) to plans/r14/<name>_<tag>.txt,
+     query is a single job) to <out>/<name>_<tag>.txt,
   4. records the per-stage metric table (task count, input bytes,
      shuffle read/write, spill, peak exec memory) of one measured
      pass via the UI REST API -- the evidence for "where does the
      time go" per guide section 7.1.
 
-Usage: python scripts/profile_r14.py [--tag before] [--reps 4] [name ...]
-(default names = bench.py HEADLINE).  Writes a summary JSON line per
-query to stdout and the full table to plans/r14/profile_<tag>.json.
+Usage: python scripts/profile_cells.py [--out plans/r14] [--tag before]
+[--reps 4] [name ...] (default names = bench.py HEADLINE).  Writes a
+summary JSON line per query to stdout and the full table to
+<out>/profile_<tag>.json; ``--out`` is relative to the repo root
+unless absolute.
 """
 
 from __future__ import annotations
@@ -37,7 +39,6 @@ from hq_master_data_warehouse_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-OUT_DIR = os.path.join(ROOT, "plans", "r14")
 
 
 def _materialize(df) -> None:
@@ -74,13 +75,15 @@ def _plan_summary(plan: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--out", default=os.path.join("plans", "r14"))
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=4)
     ap.add_argument("--no-stages", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(ROOT, args.out)
+    os.makedirs(out_dir, exist_ok=True)
     registry.load_catalog()
     import bench
 
@@ -148,7 +151,7 @@ def main() -> None:
             ]
         plan = _explain(spark, df)
         with open(
-            os.path.join(OUT_DIR, f"{name}_{args.tag}.txt"), "w"
+            os.path.join(out_dir, f"{name}_{args.tag}.txt"), "w"
         ) as f:
             f.write(plan)
         results[name] = {
@@ -194,7 +197,7 @@ def main() -> None:
         "total_min": round(sum(r["min"] for r in results.values()), 3),
         "queries": results,
     }
-    path = os.path.join(OUT_DIR, f"profile_{args.tag}.json")
+    path = os.path.join(out_dir, f"profile_{args.tag}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(

@@ -53,18 +53,18 @@ def test_doc_counts_match_registry():
 
 def test_check_window_rotates_oldest_record_first():
     """VERDICT r12 item 1: the back block of ordered_queries() (names
-    already holding a prior-round record, not pinned by PRIORITY or an
-    active RECHECK) must sort by record age ASCENDING, ties broken by
+    already holding a green latest record, not pinned by an active
+    RECHECK) must sort by record age ASCENDING, ties broken by
     registration order.  This makes the driver's ~50-slot gate sweep
     the full registry on a ~7-round cycle instead of re-verifying the
     same 50 names every round while ~320 greens age indefinitely."""
     registry.load_catalog()
     ordered = list(registry.ordered_queries())
-    checked = registry._recorded_names()
-    rounds = dict(registry._RECORD_ROUND)
+    records = registry._latest_records()
+    checked = {n for n, (_, ok) in records.items() if ok}
+    rounds = {n: rnd for n, (rnd, _) in records.items()}
     if not rounds:
         pytest.skip("no CORRECTNESS_r*.json records readable")
-    front = {n for n in registry.PRIORITY if n not in checked}
     active_recheck = {
         n
         for n in registry.RECHECK
@@ -74,7 +74,7 @@ def test_check_window_rotates_oldest_record_first():
     back = [
         n
         for n in ordered
-        if n in checked and n not in front and n not in active_recheck
+        if n in checked and n not in active_recheck
     ]
     ages = [rounds.get(n, 0) for n in back]
     assert ages == sorted(ages), (
@@ -93,3 +93,82 @@ def test_check_window_rotates_oldest_record_first():
                 f"tie at r{ages[i]} must keep registration order: "
                 f"{back[i]} vs {back[i + 1]}"
             )
+
+
+def test_recheck_pins_name_registered_queries():
+    """A misspelt or deleted RECHECK name would never pin anything."""
+    registry.load_catalog()
+    stale = [n for n in registry.RECHECK if n not in registry.QUERIES]
+    assert not stale, f"RECHECK names no registered query: {stale}"
+
+
+def _order_with(monkeypatch, records, recheck=()):
+    monkeypatch.setattr(registry, "_latest_records", lambda: records)
+    monkeypatch.setattr(registry, "RECHECK", tuple(recheck))
+    monkeypatch.setattr(registry, "RECHECK_SINCE", 14)
+    return list(registry.ordered_queries())
+
+
+def _spread_records():
+    """Every name green, rounds cycling 3..12 in registration order so
+    the back block's age sort actually reorders."""
+    registry.load_catalog()
+    return {n: (3 + i % 10, True) for i, n in enumerate(registry.QUERIES)}
+
+
+def _back(records, exclude=()):
+    """The expected back block: oldest record first, then registration."""
+    pos = {n: i for i, n in enumerate(registry.QUERIES)}
+    return sorted(
+        (n for n in pos if n not in exclude),
+        key=lambda n: (records[n][0], pos[n]),
+    )
+
+
+def test_red_latest_record_moves_to_the_front(monkeypatch):
+    records = _spread_records()
+    rows_only = [n for n in registry.QUERIES if n not in registry.ORACLES]
+    oracled = [n for n in registry.QUERIES if n in registry.ORACLES]
+    assert rows_only and len(oracled) >= 3
+    red = oracled[-1]  # registered last, so only the rule can lift it
+    unrecorded = oracled[1]
+    records[red] = (13, False)
+    del records[unrecorded]
+    for n in rows_only:
+        del records[n]
+    got = _order_with(monkeypatch, records)
+    front = [unrecorded, red, *rows_only]
+    assert got == front + _back(records, exclude=front)
+
+
+def test_recheck_pin_sits_between_front_and_back_until_rerecorded(
+    monkeypatch,
+):
+    records = _spread_records()
+    oracled = [n for n in registry.QUERIES if n in registry.ORACLES]
+    unrecorded, pin, pin_fresh = oracled[0], oracled[5], oracled[7]
+    del records[unrecorded]
+    records[pin] = (9, True)
+    records[pin_fresh] = (14, True)  # already re-recorded: inert pin
+    got = _order_with(monkeypatch, records, recheck=(pin, pin_fresh))
+    assert got == [unrecorded, pin] + _back(
+        records, exclude=(unrecorded, pin)
+    )
+    assert got[-1] == pin_fresh  # newest record, back of the window
+
+    # the post-change record lands: the pin retires into the back block
+    records[pin] = (14, True)
+    got = _order_with(monkeypatch, records, recheck=(pin, pin_fresh))
+    assert got == [unrecorded] + _back(records, exclude=(unrecorded,))
+    assert got[-2:] == [pin, pin_fresh]
+
+
+def test_unregistered_pin_with_old_record_is_skipped(monkeypatch):
+    """A pin on a deleted query that still holds an old green record
+    leaves the order as without it instead of raising."""
+    records = _spread_records()
+    expected = _order_with(monkeypatch, records)
+    records["no_such_query"] = (9, True)
+    assert _order_with(monkeypatch, records, recheck=("no_such_query",)) == (
+        expected
+    )

@@ -1,16 +1,23 @@
 """``loaders.read_parquet``: the schema it reads from one footer on
 the driver must be exactly the schema Spark's own inference gives,
-and resolving a path set must run no Spark job."""
+and resolving a path set must run no Spark job.  ``AppPlanMemo``: the
+scan memo behind ``load_table`` and the txn-log reads."""
 
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.errors import AnalysisException
 
 from hq_master_data_warehouse_spark.schemas import TEST_TABLES
-from hq_master_data_warehouse_spark.sources.loaders import read_parquet
+from hq_master_data_warehouse_spark.sources import loaders, txn_log
+from hq_master_data_warehouse_spark.sources.loaders import (
+    AppPlanMemo,
+    load_table,
+    read_parquet,
+)
 
 SF = "/root/testdata/sf0.001"
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
@@ -105,3 +112,39 @@ def test_empty_dir_raises_sparks_error(spark, written):
         read_parquet(spark, path)
     assert got.value.getCondition() == want.value.getCondition()
     assert want.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+def _app(app_id):
+    """Stand-in session: the memo reads only the application id."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_app_plan_memo_serves_clears_and_evicts():
+    memo, built = AppPlanMemo(cap=2), []
+
+    def get(spark, key):
+        return memo.get(spark, key, lambda: built.append(key) or object())
+
+    one, two = _app("app-1"), _app("app-2")
+    first = get(one, "x")
+    assert get(one, "x") is first  # served again within one app
+    get(one, "y")
+    get(one, "z")  # past the cap: the oldest entry, "x", goes
+    get(one, "y")
+    get(one, "z")
+    assert built == ["x", "y", "z"]
+    assert get(one, "x") is not first
+    assert built == ["x", "y", "z", "x"]
+    get(two, "x")  # a new application empties the memo
+    get(one, "x")
+    assert built == ["x", "y", "z", "x", "x", "x"]
+
+
+def test_engine_scans_share_the_memo(spark, written):
+    assert (loaders._PLAN_MEMO.cap, txn_log._SCAN_MEMO.cap) == (256, 64)
+    nation = load_table(spark, SF, "nation")
+    assert load_table(spark, SF, "nation") is nation
+    assert load_table(spark, SF, "nation", fresh=True) is not nation
+    paths = [str(written / "part" / f"_b={b}") for b in (0, 2)]
+    scan = txn_log._scan_paths(spark, paths)
+    assert txn_log._scan_paths(spark, paths[::-1]) is scan
