@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import query
 from .loaders import read_parquet
 from .txn_log import (
+    action_path,
     build_txn_table,
     committed_versions,
     compact_table,
@@ -93,9 +94,12 @@ def export_delta_log(
                 table_dir, info["path"]
             )
     schema_json = read_parquet(spark, schema_src).schema.json()
-    head = committed_versions(table_dir)[-1]
-    v0_commit = os.path.join(table_dir, "_txn_log", "00000000.json")
-    created_ms = int(os.stat(v0_commit).st_mtime * 1000)
+    versions = committed_versions(table_dir)
+    head = versions[-1]
+    # the table was created by its FIRST commit, which need not be
+    # version 0 (a streaming sink's versions are its batch ids)
+    first = action_path(table_dir, versions[0])
+    created_ms = int(os.stat(first).st_mtime * 1000)
     actions = [
         {
             "commitInfo": {

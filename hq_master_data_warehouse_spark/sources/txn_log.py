@@ -12,7 +12,10 @@ skipping), NOT a port of any implementation:
 - table dir = data files (each one parquet directory written by one
   job) + ``_txn_log/<version>.json`` actions:
   ``{"version": N, "add": [{"path", "min_key", "max_key"}...],
-  "remove": [path...]}``.
+  "remove": [path...]}``, and optional
+  ``_txn_log/<version>.checkpoint.json`` folded states
+  ``{"version": N, "live": [{"path", "min_key", "max_key"}...]}``.
+  This module is the only code that knows that layout.
 - a commit is an atomic ``os.link(tmp, <version>.json)`` -- readers
   see a version fully or not at all, and two writers racing on the
   same version number cannot both win (the primitive the raw-parquet
@@ -31,9 +34,10 @@ skipping), NOT a port of any implementation:
   a key-range query prunes files BEFORE Spark ever lists them, the
   lakehouse analogue of parquet row-group stats one level up.
 
-At 100 TB: log replay is O(commits) driver work; checkpointing the
-folded state every K commits (not needed at fixture scale) bounds it.
-File skipping is what makes selective scans cheap: a 1% key-range
+At 100 TB: log replay is driver work; ``live_files`` starts from the
+newest checkpoint at or below the requested version and replays only
+the commits after it, so ``write_checkpoint`` bounds it.  File
+skipping is what makes selective scans cheap: a 1% key-range
 predicate over a key-clustered table reads ~1% of files.
 """
 
@@ -42,8 +46,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
+import shutil
 import tempfile
 import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,12 +97,39 @@ def _table_dir(sf_dir: str, variant: str = "") -> str:
     return os.path.join(tempfile.gettempdir(), f"hqmdw_txn_{tag}")
 
 
+def action_path(table_dir: str, version: int, kind: str = "json") -> str:
+    """Log entry of ``version``: its commit (``json``) or its
+    checkpoint (``checkpoint.json``)."""
+    return os.path.join(table_dir, LOG_DIR, f"{version:08d}.{kind}")
+
+
+def _read_action(table_dir: str, version: int, kind: str = "json"):
+    with open(action_path(table_dir, version, kind)) as f:
+        return json.load(f)
+
+
+def _publish(final: str, payload: dict) -> None:
+    """Write ``payload`` to ``final`` atomically, first writer wins:
+    the tmp file is LINKED to the final name, and the link raises
+    FileExistsError if another writer got there first."""
+    # tmp name must be unique per WRITER, not per process: two
+    # threads racing on the same version with a pid-only suffix
+    # would share the tmp path and trample each other before the
+    # os.link decides the winner.
+    tmp = final + f".tmp{os.getpid()}-{threading.get_ident()}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+    try:
+        os.link(tmp, final)
+    finally:
+        os.remove(tmp)
+
+
 def commit(table_dir: str, version: int, add, remove) -> None:
     """Write one log action atomically with FIRST-WRITER-WINS
-    semantics: the tmp file is LINKED to the version name (link
-    fails with FileExistsError if that version was already
-    committed), so two concurrent writers racing on the same version
-    cannot both succeed -- the optimistic-concurrency primitive
+    semantics (``_publish``): two concurrent writers racing on the
+    same version cannot both succeed -- the loser gets
+    FileExistsError, the optimistic-concurrency primitive
     transactional table formats build conflict resolution on.
     ``add`` is a list of {"path", "min_key", "max_key"} dicts,
     ``remove`` a list of paths.
@@ -106,47 +140,52 @@ def commit(table_dir: str, version: int, add, remove) -> None:
     prefixes, bucketed children).  snapshot_changes relies on this:
     its per-file (version, side) tagging would attribute a reused
     path's rows to every commit that ever touched the name."""
-    log = os.path.join(table_dir, LOG_DIR)
-    os.makedirs(log, exist_ok=True)
-    final = os.path.join(log, f"{version:08d}.json")
-    # tmp name must be unique per WRITER, not per process: two
-    # threads racing on the same version with a pid-only suffix
-    # would share the tmp path and trample each other before the
-    # os.link decides the winner.
-    tmp = final + f".tmp{os.getpid()}-{threading.get_ident()}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "add": add, "remove": remove}, f
-        )
+    os.makedirs(os.path.join(table_dir, LOG_DIR), exist_ok=True)
+    _publish(
+        action_path(table_dir, version),
+        {"version": version, "add": add, "remove": remove},
+    )
+
+
+def _log_versions(table_dir: str) -> tuple[list[int], list[int]]:
+    """(commit versions, checkpoint versions), each ascending, from
+    ONE listing of the log.  Uncommitted ``*.tmp`` files are
+    invisible by construction.  An absent log dir is an empty table
+    (no commit created it yet), not an error -- concurrent first
+    writers race dir creation against this read."""
     try:
-        os.link(tmp, final)
-    finally:
-        os.remove(tmp)
+        names = os.listdir(os.path.join(table_dir, LOG_DIR))
+    except FileNotFoundError:
+        return [], []
+    commits, checkpoints = [], []
+    for n in names:
+        if n.endswith(".checkpoint.json"):
+            checkpoints.append(int(n.split(".")[0]))
+        elif n.endswith(".json"):
+            commits.append(int(n.split(".")[0]))
+    return sorted(commits), sorted(checkpoints)
 
 
 def live_files(table_dir: str, version: int | None = None) -> list[dict]:
-    """Fold the commit log up to ``version`` (inclusive; None = head)
-    into the live file-info list.  Uncommitted ``*.tmp`` files are
-    invisible by construction -- only fully renamed commits parse."""
-    log = os.path.join(table_dir, LOG_DIR)
+    """Fold the log up to ``version`` (inclusive; None = head) into
+    the live file-info list: start from the newest checkpoint at or
+    below ``version`` (if any) and replay only the commits after it.
+    A never-committed table folds to ``[]``."""
+    commits, checkpoints = _log_versions(table_dir)
+    base = max(
+        (v for v in checkpoints if version is None or v <= version),
+        default=-1,
+    )
     state: dict[str, dict] = {}
-    try:
-        entries = sorted(os.listdir(log))
-    except FileNotFoundError:
-        # Never-committed table: the live set is empty, same contract
-        # committed_versions() follows (ADVICE r5: an unguarded
-        # listdir leaked FileNotFoundError out of commit_with_retry).
-        return []
-    for name in entries:
-        if not name.endswith(".json") or name.endswith(
-            ".checkpoint.json"
-        ):
-            continue
-        v = int(name.split(".")[0])
+    if base >= 0:
+        live = _read_action(table_dir, base, "checkpoint.json")["live"]
+        state = {info["path"]: info for info in live}
+    for v in commits:
         if version is not None and v > version:
             break
-        with open(os.path.join(log, name)) as f:
-            action = json.load(f)
+        if v <= base:
+            continue
+        action = _read_action(table_dir, v)
         for path in action.get("remove", []):
             state.pop(path, None)
         for info in action.get("add", []):
@@ -257,19 +296,18 @@ def _write_bucketed(
 
 def committed_versions(table_dir: str) -> list[int]:
     """Versions present in the log (committed only); an absent log
-    dir is an empty table (no commit created it yet), not an error --
-    concurrent first writers race dir creation against this read."""
-    log = os.path.join(table_dir, LOG_DIR)
-    try:
-        names = os.listdir(log)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n.split(".")[0])
-        for n in names
-        if n.endswith(".json")
-        and not n.endswith(".checkpoint.json")
-    )
+    dir is an empty table, not an error."""
+    return _log_versions(table_dir)[0]
+
+
+def _committed_or_raise(table_dir: str, op: str) -> list[int]:
+    versions = committed_versions(table_dir)
+    if not versions:
+        raise ValueError(
+            f"{op}: no committed versions in {table_dir!r} "
+            "(empty or never-committed log)"
+        )
+    return versions
 
 
 def commit_batch_idempotent(
@@ -280,14 +318,11 @@ def commit_batch_idempotent(
     this is the txn-log exactly-once sink contract: a replayed
     micro-batch (failure/retry) re-derives the same version number
     and becomes a no-op instead of double-appending."""
-    log = os.path.join(table_dir, LOG_DIR)
-    final = os.path.join(log, f"{version:08d}.json")
-    if os.path.exists(final):
-        return False
     try:
         commit(table_dir, version, add, remove)
     except FileExistsError:
-        # lost the race to a concurrent writer -- their commit stands
+        # already committed (a replay) or lost the race to a
+        # concurrent writer -- the existing commit stands
         return False
     return True
 
@@ -317,10 +352,11 @@ def commit_with_retry(
     ``CommitConflictError`` instead (blind-append ``add``-only
     commits never conflict and always retry cleanly).
 
-    Returns the version actually committed.  At 100 TB scale the
-    retry loop costs one log-fold (driver-side metadata, O(commits)
-    past the last checkpoint) per attempt; contention is bounded by
-    writer count, not data size.
+    Returns the version actually committed.  Each attempt that
+    removes files costs one ``live_files`` fold, which starts from
+    the newest checkpoint and replays only the commits after it:
+    driver-side metadata, O(commits past the last checkpoint).
+    Contention is bounded by writer count, not data size.
     """
     if max_attempts < 1:
         raise ValueError("max_attempts must be >= 1")
@@ -389,17 +425,37 @@ def build_txn_table(
     Final state is SQL-expressible over the original parquet, which
     is exactly what the oracles check.
     """
+    price = F.col("o_totalprice")
+    return _stage_txn_table(
+        spark,
+        sf_dir,
+        variant,
+        born_price=price,
+        v3_price=F.when(
+            F.col("o_orderkey") % UPD_MOD == UPD_REM, price + F.lit(1.0)
+        ).otherwise(price),
+    )
+
+
+def _stage_txn_table(
+    spark: SparkSession, sf_dir: str, variant: str, born_price, v3_price
+) -> str:
+    """The v0-v3 history both fixture tables share: ``born_price`` is
+    the o_totalprice of a row when it is (re-)inserted at v0/v2,
+    ``v3_price`` its value after the v3 update wave."""
     table_dir = _table_dir(sf_dir, variant)
     done = os.path.join(table_dir, "_ready")
     if os.path.exists(done):
         return table_dir
-    orders = load_table(spark, sf_dir, "orders")
+    born = load_table(spark, sf_dir, "orders").withColumn(
+        "o_totalprice", born_price
+    )
     os.makedirs(table_dir, exist_ok=True)
 
     # v0: key-clustered initial files -- one distributed write for
     # the whole bucket set (not a per-bucket driver loop; see
     # _write_bucketed)
-    adds = _write_bucketed(orders, table_dir, "data-v0")
+    adds = _write_bucketed(born, table_dir, "data-v0")
     commit_batch_idempotent(table_dir, 0, adds, [])
 
     # v1: delete keys % DEL_MOD == 0 -- every file contains such
@@ -414,7 +470,7 @@ def build_txn_table(
     commit_batch_idempotent(table_dir, 1, adds1, removes1)
 
     # v2: re-insert the even half of what v1 deleted, as one append
-    readd = orders.filter(F.col("o_orderkey") % READD_MOD == 0)
+    readd = born.filter(F.col("o_orderkey") % READD_MOD == 0)
     adds2 = [_write_file(readd, table_dir, "data-v2-readd")]
     commit_batch_idempotent(table_dir, 2, adds2, [])
 
@@ -425,13 +481,8 @@ def build_txn_table(
     # removed.  Most rewritten rows are value-UNCHANGED, which is
     # exactly the case that distinguishes update rows from
     # rewritten-unchanged noise in the change feed.
-    snap2 = read_snapshot(spark, table_dir, 2)
-    updated = snap2.withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % UPD_MOD == UPD_REM,
-            F.col("o_totalprice") + F.lit(1.0),
-        ).otherwise(F.col("o_totalprice")),
+    updated = read_snapshot(spark, table_dir, 2).withColumn(
+        "o_totalprice", v3_price
     )
     adds3 = _write_bucketed(updated, table_dir, "data-v3")
     removes3 = [info["path"] for info in live_files(table_dir, 2)]
@@ -449,15 +500,24 @@ _AGG_SQL = """
     {where}
     GROUP BY o_orderpriority
 """
+#: the head (v3) state every content-neutral read of the fixture equals
+_HEAD_ORACLE = _AGG_SQL.format(
+    money=dec_sum_sql(UPD_PRICE_SQL, "total_price"),
+    where=f"""WHERE o_orderkey % {DEL_MOD} <> 0
+                     OR o_orderkey % {READD_MOD} = 0""",
+)
+
+
+def _by_priority(snap: DataFrame) -> DataFrame:
+    return snap.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        dec_sum("o_totalprice", "total_price"),
+    )
 
 
 @query(
     "source_txn_log_snapshot",
-    oracle=_AGG_SQL.format(
-        money=dec_sum_sql(UPD_PRICE_SQL, "total_price"),
-        where=f"""WHERE o_orderkey % {DEL_MOD} <> 0
-                     OR o_orderkey % {READD_MOD} = 0""",
-    ),
+    oracle=_HEAD_ORACLE,
 )
 def source_txn_log_snapshot(
     spark: SparkSession, sf_dir: str
@@ -468,10 +528,7 @@ def source_txn_log_snapshot(
     remove, double add, lost update) fails the hash."""
     table_dir = build_txn_table(spark, sf_dir)
     snap = read_snapshot(spark, table_dir)
-    return snap.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        dec_sum("o_totalprice", "total_price"),
-    )
+    return _by_priority(snap)
 
 
 @query(
@@ -488,10 +545,7 @@ def source_txn_log_time_travel(
     time travel = folding one commit fewer."""
     table_dir = build_txn_table(spark, sf_dir)
     snap = read_snapshot(spark, table_dir, version=1)
-    return snap.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        dec_sum("o_totalprice", "total_price"),
-    )
+    return _by_priority(snap)
 
 
 #: key range for the pruned scan: under two file-spans wide, so zone
@@ -521,15 +575,8 @@ def source_txn_log_pruned_scan(
     snap = read_snapshot(
         spark, table_dir, key_range=(PRUNE_LO, PRUNE_HI)
     )
-    return (
-        snap.filter(
-            F.col("o_orderkey").between(PRUNE_LO, PRUNE_HI)
-        )
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            dec_sum("o_totalprice", "total_price"),
-        )
+    return _by_priority(
+        snap.filter(F.col("o_orderkey").between(PRUNE_LO, PRUNE_HI))
     )
 
 
@@ -605,9 +652,6 @@ def change_rows(
     A table with fewer than two committed versions has no adjacent
     pairs and yields an EMPTY feed with the stable schema (ADVICE r9:
     this used to raise IndexError)."""
-    import re as _re
-
-    log = os.path.join(table_dir, LOG_DIR)
     versions = committed_versions(table_dir)
     # The (file, version, side) action list is built DRIVER-SIDE --
     # O(files touched by the feed window) metadata, KBs at fixture
@@ -625,8 +669,7 @@ def change_rows(
     ]
     actions = []  # (rel_path, version, side)
     for v in feed:
-        with open(os.path.join(log, f"{v:08d}.json")) as f:
-            action = json.load(f)
+        action = _read_action(table_dir, v)
         actions += [(p, v, "rm") for p in action.get("remove", [])]
         actions += [
             (i["path"], v, "add") for i in action.get("add", [])
@@ -641,7 +684,7 @@ def change_rows(
     # rel dir of each row's source file: everything between the table
     # dir's basename and the leaf file name (works for flat
     # ``data-x`` and nested ``data-x/_b=N`` layouts alike)
-    base = _re.escape(os.path.basename(os.path.abspath(table_dir)))
+    base = re.escape(os.path.basename(os.path.abspath(table_dir)))
     rel = F.regexp_extract(
         F.input_file_name(), f"{base}/(.+)/[^/]+$", 1
     )
@@ -709,38 +752,20 @@ def change_rows(
     )
     # an update contributes TWO feed rows (pre/post image); explode
     # keeps this one map-side projection, no second shuffle
+    def image(ct: str, col: str):
+        return F.struct(F.lit(ct).alias("ct"), F.col(col).alias("v"))
+
+    ct = F.col("change_type")
     changes = per_key.select(
         "version",
         "k",
         F.explode(
-            F.when(
-                F.col("change_type") == "delete",
-                F.array(
-                    F.struct(
-                        F.lit("delete").alias("ct"),
-                        F.col("pp").alias("v"),
-                    )
-                ),
-            )
-            .when(
-                F.col("change_type") == "insert",
-                F.array(
-                    F.struct(
-                        F.lit("insert").alias("ct"),
-                        F.col("pc").alias("v"),
-                    )
-                ),
-            )
+            F.when(ct == "delete", F.array(image("delete", "pp")))
+            .when(ct == "insert", F.array(image("insert", "pc")))
             .otherwise(
                 F.array(
-                    F.struct(
-                        F.lit("update_preimage").alias("ct"),
-                        F.col("pp").alias("v"),
-                    ),
-                    F.struct(
-                        F.lit("update_postimage").alias("ct"),
-                        F.col("pc").alias("v"),
-                    ),
+                    image("update_preimage", "pp"),
+                    image("update_postimage", "pc"),
                 )
             )
         ).alias("c"),
@@ -1012,55 +1037,22 @@ def build_txn_table_nulls(spark: SparkSession, sf_dir: str) -> str:
 
     Final state stays SQL-expressible over the original parquet --
     exactly what the sync oracle checks."""
-    table_dir = _table_dir(sf_dir, "nulls")
-    done = os.path.join(table_dir, "_ready")
-    if os.path.exists(done):
-        return table_dir
-    orders = load_table(spark, sf_dir, "orders")
-    os.makedirs(table_dir, exist_ok=True)
-
-    born = orders.withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % NULLV_MOD == NULLV_REM,
-            F.lit(None).cast("double"),
-        ).otherwise(F.col("o_totalprice")),
-    )
-    adds = _write_bucketed(born, table_dir, "data-v0")
-    commit_batch_idempotent(table_dir, 0, adds, [])
-
-    kept = read_snapshot(spark, table_dir, 0).filter(
-        F.col("o_orderkey") % DEL_MOD != 0
-    )
-    adds1 = _write_bucketed(kept, table_dir, "data-v1")
-    removes1 = [info["path"] for info in live_files(table_dir, 0)]
-    commit_batch_idempotent(table_dir, 1, adds1, removes1)
-
-    readd = born.filter(F.col("o_orderkey") % READD_MOD == 0)
-    adds2 = [_write_file(readd, table_dir, "data-v2-readd")]
-    commit_batch_idempotent(table_dir, 2, adds2, [])
-
-    snap2 = read_snapshot(spark, table_dir, 2)
-    updated = snap2.withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % UPD_MOD == UPD_REM,
-            F.lit(None).cast("double"),
-        )
+    key, price = F.col("o_orderkey"), F.col("o_totalprice")
+    null = F.lit(None).cast("double")
+    return _stage_txn_table(
+        spark,
+        sf_dir,
+        "nulls",
+        born_price=F.when(key % NULLV_MOD == NULLV_REM, null).otherwise(
+            price
+        ),
+        v3_price=F.when(key % UPD_MOD == UPD_REM, null)
         .when(
-            (F.col("o_orderkey") % NULLV_MOD == NULLV_REM)
-            & (F.col("o_orderkey") % UPD_MOD == 2),
+            (key % NULLV_MOD == NULLV_REM) & (key % UPD_MOD == 2),
             F.lit(NULL_FILL),
         )
-        .otherwise(F.col("o_totalprice")),
+        .otherwise(price),
     )
-    adds3 = _write_bucketed(updated, table_dir, "data-v3")
-    removes3 = [info["path"] for info in live_files(table_dir, 2)]
-    commit_batch_idempotent(table_dir, 3, adds3, removes3)
-
-    with open(done, "w") as f:
-        f.write("ok")
-    return table_dir
 
 
 #: final-state price of the NULL-variant table, as SQL over the
@@ -1124,8 +1116,7 @@ def compact_table(spark: SparkSession, table_dir: str) -> int:
     files a streaming sink leaves behind (streaming_txn_log_sink);
     the commit is idempotent on its version number, so a re-run after
     a crash cannot double-apply."""
-    versions = committed_versions(table_dir)
-    head = versions[-1]
+    head = _committed_or_raise(table_dir, "compact_table")[-1]
     target = head + 1
     live = live_files(table_dir, head)
     if len(live) <= 1:
@@ -1149,13 +1140,8 @@ def compact_table(spark: SparkSession, table_dir: str) -> int:
         # file.  Report the actual head so the caller can retry on
         # the new state rather than believe a swap that never
         # committed.
-        with open(
-            os.path.join(table_dir, LOG_DIR, f"{target:08d}.json")
-        ) as f:
-            winner = json.load(f)
+        winner = _read_action(table_dir, target)
         if name not in {a["path"] for a in winner.get("add", [])}:
-            import shutil
-
             shutil.rmtree(
                 os.path.join(table_dir, name), ignore_errors=True
             )
@@ -1165,11 +1151,7 @@ def compact_table(spark: SparkSession, table_dir: str) -> int:
 
 @query(
     "layout_txn_log_compact",
-    oracle=_AGG_SQL.format(
-        money=dec_sum_sql(UPD_PRICE_SQL, "total_price"),
-        where=f"""WHERE o_orderkey % {DEL_MOD} <> 0
-                     OR o_orderkey % {READD_MOD} = 0""",
-    ),
+    oracle=_HEAD_ORACLE,
 )
 def layout_txn_log_compact(
     spark: SparkSession, sf_dir: str
@@ -1182,95 +1164,34 @@ def layout_txn_log_compact(
     table_dir = build_txn_table(spark, sf_dir, variant="compact")
     compact_table(spark, table_dir)
     snap = read_snapshot(spark, table_dir)
-    return snap.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        dec_sum("o_totalprice", "total_price"),
-    )
-
-
-CHECKPOINT_EVERY = 10
+    return _by_priority(snap)
 
 
 def write_checkpoint(table_dir: str, version: int) -> str:
-    """Materialize the folded live-file state AS OF ``version`` into
-    ``_txn_log/<version>.checkpoint.json`` (atomic link, same
-    first-writer-wins rule as commits).  Readers then start their
-    fold from the newest checkpoint <= the requested version instead
-    of replaying the whole log -- O(commits since checkpoint) driver
-    work, the same mechanism Delta/Iceberg use to bound log replay.
-    A checkpoint is derived state: losing or skipping one only costs
-    replay time, never correctness."""
-    state = live_files(table_dir, version)
-    log = os.path.join(table_dir, LOG_DIR)
-    final = os.path.join(log, f"{version:08d}.checkpoint.json")
-    if os.path.exists(final):
-        return final
-    # per-writer tmp name, same rule as commit(): concurrent threads
-    # of one process must not share a staging file
-    tmp = final + f".tmp{os.getpid()}-{threading.get_ident()}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "live": state}, f)
+    """Materialize the folded live-file state AS OF the committed
+    ``version`` into its checkpoint entry (atomic link, same
+    first-writer-wins rule as commits).  ``live_files`` then starts
+    its fold from the newest checkpoint <= the requested version
+    instead of replaying the whole log -- O(commits since checkpoint)
+    driver work, the same mechanism Delta/Iceberg use to bound log
+    replay.  A checkpoint is derived state: losing or skipping one
+    only costs replay time, never correctness."""
+    if version not in committed_versions(table_dir):
+        # a checkpoint labelled past the head would hide every later
+        # commit at or below its version from the fold
+        raise ValueError(
+            f"write_checkpoint: version {version} is not committed in "
+            f"{table_dir!r}"
+        )
+    final = action_path(table_dir, version, "checkpoint.json")
     try:
-        os.link(tmp, final)
+        _publish(
+            final,
+            {"version": version, "live": live_files(table_dir, version)},
+        )
     except FileExistsError:
         pass  # concurrent checkpointer won; same derived content
-    finally:
-        os.remove(tmp)
     return final
-
-
-def _latest_checkpoint(
-    table_dir: str, version: int | None
-) -> tuple[int, list[dict]] | None:
-    """Newest committed checkpoint at or below ``version``."""
-    log = os.path.join(table_dir, LOG_DIR)
-    best = None
-    for name in os.listdir(log):
-        if not name.endswith(".checkpoint.json"):
-            continue
-        v = int(name.split(".")[0])
-        if version is not None and v > version:
-            continue
-        if best is None or v > best:
-            best = v
-    if best is None:
-        return None
-    with open(
-        os.path.join(log, f"{best:08d}.checkpoint.json")
-    ) as f:
-        data = json.load(f)
-    return best, data["live"]
-
-
-def live_files_from_checkpoint(
-    table_dir: str, version: int | None = None
-) -> list[dict]:
-    """live_files() that starts from the newest usable checkpoint and
-    replays only the actions after it.  Equivalence with the full
-    fold is pytest-pinned."""
-    cp = _latest_checkpoint(table_dir, version)
-    if cp is None:
-        return live_files(table_dir, version)
-    cp_version, state_list = cp
-    state = {info["path"]: info for info in state_list}
-    log = os.path.join(table_dir, LOG_DIR)
-    for name in sorted(os.listdir(log)):
-        if not name.endswith(".json") or name.endswith(
-            ".checkpoint.json"
-        ):
-            continue
-        v = int(name.split(".")[0])
-        if v <= cp_version:
-            continue
-        if version is not None and v > version:
-            break
-        with open(os.path.join(log, name)) as f:
-            action = json.load(f)
-        for path in action.get("remove", []):
-            state.pop(path, None)
-        for info in action.get("add", []):
-            state[info["path"]] = info
-    return list(state.values())
 
 
 def vacuum_table(
@@ -1293,26 +1214,28 @@ def vacuum_table(
     never deleted, so the operation is idempotent and an interrupted
     run just leaves more orphans for the next one.
     """
-    import shutil
-    import time
-
     if retain_last < 1:
         raise ValueError(
             f"retain_last must be >= 1 (got {retain_last}): retaining "
             "zero versions would delete every live data file"
         )
-    versions = committed_versions(table_dir)
-    if not versions:
-        raise ValueError(
-            f"vacuum_table: no committed versions in {table_dir!r} "
-            "(empty or never-committed log)"
-        )
+    versions = _committed_or_raise(table_dir, "vacuum_table")
     retained = versions[-retain_last:]
     keep: set[str] = set()
     for v in retained:
         keep.update(f["path"] for f in live_files(table_dir, v))
     now = time.time()
     deleted = []
+
+    def sweep(full: str, rel: str) -> None:
+        if now - os.path.getmtime(full) < min_age_s:
+            return
+        if os.path.isdir(full):
+            shutil.rmtree(full)
+        else:
+            os.remove(full)
+        deleted.append(rel)
+
     for name in sorted(os.listdir(table_dir)):
         # "_"-prefixed entries are table metadata (the commit log,
         # the staging-complete marker), never data -- same convention
@@ -1324,32 +1247,17 @@ def vacuum_table(
         ):
             continue
         full = os.path.join(table_dir, name)
-        nested_keep = {
-            p for p in keep if p.startswith(name + "/")
-        }
-        if nested_keep and os.path.isdir(full):
+        if os.path.isdir(full) and any(
+            p.startswith(name + "/") for p in keep
+        ):
             # bucketed container (data-vN/_b=K layout) with live
             # children: sweep only the dead buckets inside it
             for child in sorted(os.listdir(full)):
                 rel = f"{name}/{child}"
-                if child.startswith("_") or rel in keep:
-                    continue
-                cf = os.path.join(full, child)
-                if now - os.path.getmtime(cf) < min_age_s:
-                    continue
-                if os.path.isdir(cf):
-                    shutil.rmtree(cf)
-                else:
-                    os.remove(cf)
-                deleted.append(rel)
-            continue
-        if now - os.path.getmtime(full) < min_age_s:
-            continue
-        if os.path.isdir(full):
-            shutil.rmtree(full)
+                if not (child.startswith("_") or rel in keep):
+                    sweep(os.path.join(full, child), rel)
         else:
-            os.remove(full)
-        deleted.append(name)
+            sweep(full, name)
     return {
         "deleted": deleted,
         "retained": sorted(keep),
@@ -1359,11 +1267,7 @@ def vacuum_table(
 
 @query(
     "layout_txn_log_vacuum",
-    oracle=_AGG_SQL.format(
-        money=dec_sum_sql(UPD_PRICE_SQL, "total_price"),
-        where=f"""WHERE o_orderkey % {DEL_MOD} <> 0
-                     OR o_orderkey % {READD_MOD} = 0""",
-    ),
+    oracle=_HEAD_ORACLE,
 )
 def layout_txn_log_vacuum(
     spark: SparkSession, sf_dir: str
@@ -1378,7 +1282,4 @@ def layout_txn_log_vacuum(
     compact_table(spark, table_dir)
     vacuum_table(table_dir, retain_last=1)
     snap = read_snapshot(spark, table_dir)
-    return snap.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        dec_sum("o_totalprice", "total_price"),
-    )
+    return _by_priority(snap)

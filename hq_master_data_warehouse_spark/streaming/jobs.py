@@ -875,17 +875,12 @@ def streaming_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(table_dir, exist_ok=True)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
         # replayed batch: its version is already on the log -- do NOT
         # touch the committed data file (an overwrite would delete and
         # rewrite a path concurrent readers are folding to, breaking
         # the atomic-visibility contract); the no-op IS the
         # exactly-once guarantee
-        log_entry = _os.path.join(
-            table_dir, "_txn_log", f"{batch_id:08d}.json"
-        )
-        if _os.path.exists(log_entry):
+        if batch_id in committed_versions(table_dir):
             return
         name = f"data-b{batch_id:05d}"
         info = _write_file(

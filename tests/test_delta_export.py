@@ -17,7 +17,9 @@ from hq_master_data_warehouse_spark.sources.delta_export import (
     read_delta_export,
 )
 from hq_master_data_warehouse_spark.sources.txn_log import (
+    _write_file,
     build_txn_table,
+    commit_batch_idempotent,
     compact_table,
     read_snapshot,
 )
@@ -112,3 +114,23 @@ def test_export_of_empty_table_refuses(spark, tmp_path):
     _os.makedirs(d)
     with pytest.raises(ValueError, match="nothing to export"):
         export_delta_log(spark, d)
+
+
+def test_export_of_log_starting_past_version_zero(spark, tmp_path):
+    """A table whose first commit is not version 0 (a streaming
+    sink's versions are its batch ids) exports, and the export reads
+    back row for row as the txn-log snapshot."""
+    d = str(tmp_path / "late")
+    os.makedirs(d)
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    for v, lo in [(7, 0), (8, 1000)]:
+        part = orders.filter(F.col("o_orderkey").between(lo, lo + 999))
+        commit_batch_idempotent(
+            d, v, [_write_file(part, d, f"data-b{v:05d}")], []
+        )
+    export_delta_log(spark, d)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(read_delta_export(spark, d)) == rows(read_snapshot(spark, d))

@@ -201,3 +201,35 @@ def test_parquet_scans_go_through_read_parquet():
         "direct spark.read.parquet scans (use loaders.read_parquet): "
         + ", ".join(offenders)
     )
+
+
+def _txn_log_layout_constants(tree) -> list[int]:
+    """Lines of every string constant that spells the txn log's
+    on-disk layout: the log dir name, or a checkpoint file name."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and (node.value == "_txn_log" or ".checkpoint.json" in node.value)
+    ]
+
+
+def test_only_txn_log_knows_the_log_layout():
+    """``sources/txn_log.py`` is the one module that knows how the
+    txn log is laid out on disk; every other engine module reaches a
+    log entry through its functions, so the format can change in one
+    place."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg).as_posix()}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "sources/txn_log.py"
+        for line in _txn_log_layout_constants(
+            ast.parse(path.read_text(), str(path))
+        )
+    ]
+    assert not offenders, (
+        "txn log paths built outside sources/txn_log.py: "
+        + ", ".join(offenders)
+    )

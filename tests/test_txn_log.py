@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,28 +144,100 @@ def test_streaming_txn_log_sink_exactly_once_versions(spark):
     assert sum(r["n_events"] for r in out) == 2 * n_events
 
 
-def test_checkpoint_fold_equivalence(spark, table_dir):
+def _live_key(files):
+    return sorted((f["path"], f["min_key"], f["max_key"]) for f in files)
+
+
+def test_checkpoint_fold_equivalence(spark, table_dir, tmp_path):
     from hq_master_data_warehouse_spark.sources.txn_log import (
-        live_files_from_checkpoint,
+        committed_versions,
         write_checkpoint,
     )
 
-    def key(files):
-        return sorted(f["path"] for f in files)
-
-    # checkpoint at v1, then verify every version folds identically
-    # whether starting from scratch or from the checkpoint
-    write_checkpoint(table_dir, 1)
-    for v in (0, 1, 2, 3, None):
-        assert key(live_files_from_checkpoint(table_dir, v)) == key(
-            live_files(table_dir, v)
-        ), f"checkpoint fold diverges at version {v}"
+    # a private copy without any checkpoint: ``before`` folds the log
+    # exactly as the commits left it
+    d = str(tmp_path / "cp")
+    shutil.copytree(
+        table_dir, d, ignore=shutil.ignore_patterns("*.checkpoint.json")
+    )
+    probes = (0, 1, 2, 3, None)
+    before = {v: _live_key(live_files(d, v)) for v in probes}
+    # checkpoint at v1, then every version must fold to what it
+    # folded before the checkpoint existed
+    write_checkpoint(d, 1)
+    for v in probes:
+        assert _live_key(live_files(d, v)) == before[v], (
+            f"checkpoint fold diverges at version {v}"
+        )
     # a checkpoint is NOT a commit: version list unchanged
+    assert committed_versions(d) == [0, 1, 2, 3]
+    # and only a committed version can be checkpointed: a checkpoint
+    # past the head would hide the commits that later land below it
+    with pytest.raises(ValueError, match="not committed"):
+        write_checkpoint(d, 7)
+
+
+def test_engine_paths_on_checkpointed_table(spark, tmp_path):
+    """read_snapshot, commit_with_retry, compact_table and
+    vacuum_table on a table with a checkpoint mid-history return what
+    they return on the same table without it -- including a remove of
+    a file that the fold only knows is live through the checkpoint."""
     from hq_master_data_warehouse_spark.sources.txn_log import (
-        committed_versions,
+        _write_file,
+        commit_with_retry,
+        compact_table,
+        vacuum_table,
+        write_checkpoint,
     )
 
-    assert committed_versions(table_dir) == [0, 1, 2, 3]
+    plain = str(tmp_path / "plain")
+    os.makedirs(plain)
+
+    def rows(*keys):
+        return spark.createDataFrame(
+            [(k, float(k)) for k in keys],
+            "o_orderkey long, o_totalprice double",
+        )
+
+    # v0 f0, v1 f1, v2 f2 - f0, v3 f3: at head f1/f2 are live only
+    # through the v2 checkpoint, f3 through the replay after it
+    for v, keys, removes in [
+        (0, (1, 2), []), (1, (3, 4), []), (2, (5,), ["f0"]), (3, (6,), []),
+    ]:
+        commit(plain, v, [_write_file(rows(*keys), plain, f"f{v}")], removes)
+    cp = str(tmp_path / "cp")
+    shutil.copytree(plain, cp)
+    write_checkpoint(cp, 2)
+
+    def run(d):
+        def snap(v=None):
+            return sorted(map(tuple, read_snapshot(spark, d, v).collect()))
+
+        out = [snap(), snap(1), live_files(d, 1)]
+        out.append(
+            commit_with_retry(d, [_write_file(rows(7), d, "f4")], ["f1"])
+        )
+        out += [_live_key(live_files(d)), compact_table(spark, d), snap()]
+        out += [vacuum_table(d, retain_last=1), snap()]
+        return out
+
+    assert run(cp) == run(plain)
+
+
+def test_compact_refuses_never_committed_table(spark, tmp_path):
+    """An empty log has no head to compact: the same ValueError
+    vacuum_table raises, not an IndexError."""
+    from hq_master_data_warehouse_spark.sources.txn_log import (
+        LOG_DIR,
+        compact_table,
+    )
+
+    d = str(tmp_path / "cg")
+    with pytest.raises(ValueError, match="never-committed"):
+        compact_table(spark, d)
+    os.makedirs(os.path.join(d, LOG_DIR))
+    with pytest.raises(ValueError, match="never-committed"):
+        compact_table(spark, d)
 
 
 def test_vacuum_destroys_history_but_not_head(spark):
@@ -835,26 +908,26 @@ def test_change_feed_null_value_transitions(spark, tmp_path):
     }
 
 
-def test_checkpoint_fold_deep_history(tmp_path):
+def test_checkpoint_fold_deep_history(tmp_path, monkeypatch):
     """Executable evidence for the module docstring's claim that
-    checkpointing bounds log replay (VERDICT r10 item 7): a
-    several-hundred-commit log with periodic checkpoints folds to the
-    SAME live set as the raw replay at every probed version --
-    including versions between checkpoints, at checkpoints, and at
-    head -- on a workload of interleaved appends, rewrites and prunes.
-    Metadata-only (commits carry synthetic paths; live_files never
-    reads data), so 300 commits cost milliseconds."""
+    checkpointing bounds log replay (VERDICT r10 item 7): on a
+    several-hundred-commit log of interleaved appends, rewrites and
+    prunes, checkpoints written every CHECKPOINT_EVERY commits leave
+    the live set at every probed version -- between checkpoints, at
+    checkpoints and at head -- what it was before they existed, and
+    the fold opens only the newest usable checkpoint plus the commits
+    after it.  Metadata-only (commits carry synthetic paths;
+    live_files never reads data), so 300 commits cost milliseconds."""
+    import builtins
     import random
 
+    from hq_master_data_warehouse_spark.sources import txn_log
     from hq_master_data_warehouse_spark.sources.txn_log import (
-        CHECKPOINT_EVERY,
-        commit,
         committed_versions,
-        live_files,
-        live_files_from_checkpoint,
         write_checkpoint,
     )
 
+    CHECKPOINT_EVERY = 10
     d = str(tmp_path / "deepcp")
     os.makedirs(d)
     rng = random.Random(1107)
@@ -880,23 +953,37 @@ def test_checkpoint_fold_deep_history(tmp_path):
         for p in removes:
             live.remove(p)
         live += [a["path"] for a in adds]
-        if v and v % CHECKPOINT_EVERY == 0:
-            write_checkpoint(d, v)
 
     assert committed_versions(d) == list(range(n_commits))
-
-    def key(files):
-        return sorted(f["path"] for f in files)
-
     # probe around checkpoint boundaries, mid-intervals, and head
-    probes = {0, 1, CHECKPOINT_EVERY - 1, CHECKPOINT_EVERY,
-              CHECKPOINT_EVERY + 1, 155, 156, 290, n_commits - 1}
-    for v in sorted(probes) + [None]:
-        assert key(live_files_from_checkpoint(d, v)) == key(
-            live_files(d, v)
-        ), f"checkpoint fold diverges at version {v}"
+    probes = sorted({0, 1, CHECKPOINT_EVERY - 1, CHECKPOINT_EVERY,
+                     CHECKPOINT_EVERY + 1, 155, 156, 290, n_commits - 1})
+    before = {v: _live_key(live_files(d, v)) for v in probes + [None]}
+    for v in range(CHECKPOINT_EVERY, n_commits, CHECKPOINT_EVERY):
+        write_checkpoint(d, v)
+
+    opened: list[str] = []
+
+    def spy(path, *args, **kwargs):
+        opened.append(os.path.basename(path))
+        return builtins.open(path, *args, **kwargs)
+
+    monkeypatch.setattr(txn_log, "open", spy, raising=False)
+    for v in probes + [None]:
+        opened.clear()
+        assert _live_key(live_files(d, v)) == before[v], (
+            f"checkpoint fold diverges at version {v}"
+        )
+        top = n_commits - 1 if v is None else v
+        base = top - top % CHECKPOINT_EVERY  # 0: no checkpoint <= top
+        expect = [
+            f"{u:08d}.json" for u in range(base + 1 if base else 0, top + 1)
+        ]
+        if base:
+            expect.insert(0, f"{base:08d}.checkpoint.json")
+        assert opened == expect, f"version {v} replayed {opened}"
     # head fold through checkpoints agrees with the python model too
-    assert key(live_files_from_checkpoint(d, None)) == sorted(live)
+    assert [p for p, _, _ in _live_key(live_files(d))] == sorted(live)
 
 
 # -- property test: the file-level CDF equals the snapshot-level diff
