@@ -97,11 +97,12 @@ def materialized(
     building it exactly once per (key_parts, builder-code) on this
     host.  The key folds in ``_code_sig(build)`` so editing the
     builder's logic (or its module) invalidates the cache without a
-    manual tag bump (ADVICE r10)."""
+    manual tag bump (ADVICE r10); a callable key part folds in its
+    own code the same way, for a builder that calls into another
+    module."""
+    parts = [_code_sig(p) if callable(p) else str(p) for p in key_parts]
     key = hashlib.md5(
-        ":".join(
-            [*(str(p) for p in key_parts), _code_sig(build)]
-        ).encode()
+        ":".join([*parts, _code_sig(build)]).encode()
     ).hexdigest()[:12]
     final = os.path.join(
         tempfile.gettempdir(), f"hqmdw_mat_{tag}_{key}"

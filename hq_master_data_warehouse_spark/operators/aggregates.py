@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prefix import prefix_scan
 from ..functions.scalars import dec_avg, dec_avg_sql, dec_sum, dec_sum_sql
 from ..registry import query
 from ..sources.ledger_fixture import SENT_LEDGER_SQL, sent_ledger
@@ -1321,8 +1322,6 @@ _APPROXQ_BAND_DUCK = f"(n + {APPROXQ_ACCURACY - 1}) // {APPROXQ_ACCURACY} + 1"
 def sketch_approx_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .analytics import _global_rank
-
     orders = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100)
         .cast("long")
@@ -1365,11 +1364,11 @@ def sketch_approx_quantiles(
     # two-pass global rank (no single-partition sort; the price
     # domain buckets by 10k-dollar bands), then an 8-row broadcast
     # join picks out the band values.
-    ranked = _global_rank(
+    ranked = prefix_scan(
         orders,
         F.floor(F.col("cents") / 1_000_000),
         [F.col("cents").asc()],
-        "_rn",
+        [(F.lit(1), "_rn")],
     )
     sides = spec.select(
         "q_pct",

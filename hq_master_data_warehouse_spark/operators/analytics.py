@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.prefix import ntile_from_rank, prefix_scan
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..registry import query
 from ..session import fan_out_keyed
@@ -296,224 +297,12 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _global_rank(
-    df: DataFrame,
-    bucket: "F.Column",
-    sort_cols: list,
-    out: str,
-    bucket_desc: bool = False,
-) -> DataFrame:
-    """Distributed global row_number WITHOUT a single-partition sort.
-
-    Two-pass prefix sum (same shape as pack_nextfit): rows shuffle
-    once on a coarse range bucket of the leading sort key; each bucket
-    ranks locally in parallel; the per-bucket COUNTS (a tiny table --
-    one row per bucket) are prefix-summed and broadcast back, turning
-    local ranks into global ones.  ``bucket`` must be a monotone
-    function of the leading sort key so bucket order is a prefix of
-    the row order.  Scales: the only global window runs over the
-    bucket-count table, bounded by the bucket domain, not the input.
-    """
-    b = df.withColumn("_b", bucket)
-    w_in = Window.partitionBy("_b").orderBy(*sort_cols)
-    local = b.withColumn("_lrn", F.row_number().over(w_in))
-    totals = b.groupBy("_b").agg(F.count("*").alias("_bc"))
-    order = F.col("_b").desc() if bucket_desc else F.col("_b").asc()
-    w_pfx = Window.orderBy(order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prefix = totals.select(
-        "_b",
-        F.coalesce(F.sum("_bc").over(w_pfx), F.lit(0)).alias("_off"),
-    )
-    return (
-        local.join(F.broadcast(prefix), "_b")
-        .withColumn(out, (F.col("_off") + F.col("_lrn")).cast("long"))
-        .drop("_b", "_lrn", "_off")
-    )
-
-
-def _global_cumsum(
-    df: DataFrame,
-    bucket: "F.Column",
-    sort_cols: list,
-    sums: list,
-    keep_bucket: bool = False,
-) -> DataFrame:
-    """Distributed INCLUSIVE running totals over a global row order
-    WITHOUT a single-partition sort -- the cumulative-sum sibling of
-    ``_global_rank`` (r11: the ranked-prefix statistics -- Mann-
-    Whitney, Wilcoxon, Wasserstein, winsorized means, conformal
-    quantile, interarrival median -- ran their cumulative window over
-    the DISTINCT-value table, which for near-continuous values like
-    order totalprice cents is row-scale, i.e. one WindowExec task).
-
-    Same two-pass prefix-sum shape: rows shuffle once on a coarse
-    ``bucket`` (monotone non-decreasing in the leading sort key),
-    each bucket computes local running totals in parallel, and the
-    per-bucket SUMS -- one row per bucket -- are prefix-summed and
-    broadcast back.  ``sums`` is a list of (src_col, out_col) pairs;
-    all input columns pass through.  Exact: integer sums are
-    partition-order independent.  ``keep_bucket=True`` retains the
-    ``_b`` column for callers that need bucket-local post-processing
-    (the Wasserstein boundary-patched LEAD)."""
-    b = df.withColumn("_b", bucket)
-    w_in = Window.partitionBy("_b").orderBy(*sort_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = b.select(
-        "*", *[F.sum(src).over(w_in).alias(out) for src, out in sums]
-    )
-    totals = b.groupBy("_b").agg(
-        *[F.sum(src).alias(f"_t{i}") for i, (src, _) in enumerate(sums)]
-    )
-    # the only unpartitioned window: over the bucket-count table,
-    # bounded by the bucket domain, never the input
-    w_pfx = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prefix = totals.select(
-        "_b",
-        *[
-            F.coalesce(F.sum(f"_t{i}").over(w_pfx), F.lit(0)).alias(
-                f"_o{i}"
-            )
-            for i in range(len(sums))
-        ],
-    )
-    res = local.join(F.broadcast(prefix), "_b")
-    for i, (_, out) in enumerate(sums):
-        res = res.withColumn(
-            out, (F.col(out) + F.col(f"_o{i}")).cast("long")
-        )
-    drop = [f"_o{i}" for i in range(len(sums))]
-    if not keep_bucket:
-        drop.append("_b")
-    return res.drop(*drop)
-
-
-def _grouped_global_cumsum(
-    df: DataFrame,
-    part_cols: list,
-    bucket: "F.Column",
-    sort_cols: list,
-    sums: list,
-) -> DataFrame:
-    """Per-GROUP running totals without a whole-group-on-one-task
-    window -- ``_global_cumsum`` one level down, exactly as
-    ``_grouped_global_rank`` is to ``_global_rank`` (r11: the
-    weighted-median idiom partitioned by a 3-value flag put a third
-    of the distinct-price table through each of 3 tasks).  Rows
-    shuffle on (group, bucket); the prefix window runs over the
-    (group, bucket) count table, bounded by |groups| x |buckets|."""
-    b = df.withColumn("_b", bucket)
-    w_in = (
-        Window.partitionBy(*part_cols, "_b")
-        .orderBy(*sort_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = b.select(
-        "*", *[F.sum(src).over(w_in).alias(out) for src, out in sums]
-    )
-    totals = b.groupBy(*part_cols, "_b").agg(
-        *[F.sum(src).alias(f"_t{i}") for i, (src, _) in enumerate(sums)]
-    )
-    w_pfx = (
-        Window.partitionBy(*part_cols)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = totals.select(
-        *part_cols,
-        "_b",
-        *[
-            F.coalesce(F.sum(f"_t{i}").over(w_pfx), F.lit(0)).alias(
-                f"_o{i}"
-            )
-            for i in range(len(sums))
-        ],
-    )
-    res = local.join(F.broadcast(prefix), [*part_cols, "_b"])
-    for i, (_, out) in enumerate(sums):
-        res = res.withColumn(
-            out, (F.col(out) + F.col(f"_o{i}")).cast("long")
-        )
-    return res.drop("_b", *[f"_o{i}" for i in range(len(sums))])
-
-
-def _bitlen(col: "F.Column") -> "F.Column":
-    """Bit length of a non-negative integral column -- the zero-tuning
-    monotone coarse bucket for SKEWED domains (frequency tables, gap
-    seconds, residuals): <= 64 log-scaled buckets, pure integer (no
-    float log whose rounding could tie-break differently)."""
-    return F.length(F.conv(col.cast("string"), 10, 2))
-
-
-def _grouped_global_rank(
-    df: DataFrame,
-    part_cols: list,
-    bucket: "F.Column",
-    sort_cols: list,
-    out: str,
-) -> DataFrame:
-    """Per-GROUP global row_number without a whole-group-on-one-task
-    window (r8).
-
-    ``Window.partitionBy(group)`` puts EVERY row of a group on one
-    task -- fine for high-cardinality keys, a straggler/OOM shape
-    when the group domain is small (5 order priorities over a fact
-    table = table/5 rows per task).  Same two-pass prefix-sum trick
-    as ``_global_rank``, one level down: rows shuffle on (group,
-    coarse bucket of the leading sort key), rank locally in
-    parallel, and the per-(group, bucket) COUNTS -- a tiny table,
-    |groups| x |buckets| rows -- are prefix-summed WITHIN each group
-    and broadcast back.  The only window over the full input is
-    bucket-partitioned; the group-partitioned window runs on the
-    count table, bounded by the bucket domain."""
-    b = df.withColumn("_b", bucket)
-    w_in = Window.partitionBy(*part_cols, "_b").orderBy(*sort_cols)
-    local = b.withColumn("_lrn", F.row_number().over(w_in))
-    totals = b.groupBy(*part_cols, "_b").agg(
-        F.count("*").alias("_bc")
-    )
-    w_pfx = (
-        Window.partitionBy(*part_cols)
-        .orderBy(F.col("_b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = totals.select(
-        *part_cols,
-        "_b",
-        F.coalesce(F.sum("_bc").over(w_pfx), F.lit(0)).alias("_off"),
-    )
-    return (
-        local.join(F.broadcast(prefix), [*part_cols, "_b"])
-        .withColumn(out, (F.col("_off") + F.col("_lrn")).cast("long"))
-        .drop("_b", "_lrn", "_off")
-    )
-
-
-def _ntile_from_rank(rn: "F.Column", n_rows: "F.Column", k: int):
-    """NTILE(k) computed arithmetically from a global rank: the first
-    (n mod k) buckets take ceil(n/k) rows, the rest floor(n/k) --
-    exactly SQL NTILE semantics, no sort needed once the rank exists."""
-    q = F.floor(n_rows / k)
-    r = n_rows % k
-    big = q + 1
-    cut = r * big
-    return (
-        F.when(rn <= cut, F.ceil(rn / big))
-        .otherwise(r + F.ceil((rn - cut) / q))
-        .cast("int")
-    )
-
-
 # -- RFM segmentation: recency/frequency/monetary quartiles.  NTILE
 #    semantics preserved exactly (custkey tie-breaks), but computed
 #    WITHOUT the three global single-partition NTILE sorts: each
-#    metric gets a distributed two-pass global rank (_global_rank,
+#    metric gets a distributed two-pass global rank (prefix_scan,
 #    bucketed on month / order-count / spend-band) and the quartile
-#    falls out arithmetically (_ntile_from_rank).  The oracle states
+#    falls out arithmetically (ntile_from_rank).  The oracle states
 #    plain NTILE windows -- same values, scale-safe plan.
 @query(
     "orders_rfm_scores",
@@ -553,11 +342,11 @@ def orders_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = per_cust.agg(F.count("*").alias("_n"))
 
     # r14 (VERDICT r13 item 6): the three metric ranks used to be
-    # three INDEPENDENT _global_rank branches joined back on
+    # three INDEPENDENT global-rank branches joined back on
     # o_custkey -- 26 exchanges / 18 stages of tiny data, 31 task-s
     # of which only 14 were CPU (scheduling tax at bench scale, and
     # three full passes over the customer table at any scale).  They
-    # are now ONE _grouped_global_rank pass over the customer table
+    # are now ONE grouped prefix_scan over the customer table
     # MELTED to (metric, sortval) rows: per-metric rank semantics are
     # identical because each metric's (sortval DESC, o_custkey) order
     # is a monotone image of the original sort (date -> epoch days,
@@ -595,12 +384,12 @@ def orders_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("o_custkey", "e.m", "e.sortval", "e.bk")
-    ranked_m = _grouped_global_rank(
+    ranked_m = prefix_scan(
         melted,
-        ["m"],
         F.col("bk"),
         [F.col("sortval").desc(), F.col("o_custkey")],
-        "rn",
+        [(F.lit(1), "rn")],
+        groups=["m"],
     )
     ranks = ranked_m.groupBy("o_custkey").agg(
         F.max(F.when(F.col("m") == 0, F.col("rn"))).alias("_r_rn"),
@@ -613,9 +402,9 @@ def orders_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "last_order",
         "n_orders",
         "spend",
-        _ntile_from_rank(F.col("_r_rn"), n_rows, 4).alias("r_quartile"),
-        _ntile_from_rank(F.col("_f_rn"), n_rows, 4).alias("f_quartile"),
-        _ntile_from_rank(F.col("_m_rn"), n_rows, 4).alias("m_quartile"),
+        ntile_from_rank(F.col("_r_rn"), n_rows, 4).alias("r_quartile"),
+        ntile_from_rank(F.col("_f_rn"), n_rows, 4).alias("f_quartile"),
+        ntile_from_rank(F.col("_m_rn"), n_rows, 4).alias("m_quartile"),
     )
 
 
@@ -1569,7 +1358,7 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- top-decile concentration: what share of all events do the top 10%
 #    of users generate (the engagement-concentration KPI).  The user
-#    rank comes from the bucketed two-pass _global_rank on the
+#    rank comes from the bucketed two-pass prefix_scan on the
 #    per-user aggregate -- no single-partition sort -- and the decile
 #    cutoff is ceil(n/10) by (count DESC, user_id).  One output row.
 @query(
@@ -1608,12 +1397,11 @@ def events_top_decile_share(
     per_user = events.groupBy("user_id").agg(
         F.count("*").alias("cnt")
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         per_user,
-        F.col("cnt"),
+        -F.col("cnt"),
         [F.col("cnt").desc(), F.col("user_id")],
-        "rn",
-        bucket_desc=True,
+        [(F.lit(1), "rn")],
     )
     s = per_user.agg(
         F.count("*").alias("n_users"),
@@ -1862,8 +1650,8 @@ _SES_B_SQL = (
 #    MONTHLY aggregate table (one row per month -- dozens of rows at
 #    any corpus size), so the quadratic month x month join and the
 #    global row_number are both over a bounded-domain summary, never
-#    the fact table: the same shape as the bucket-count tables in
-#    _global_rank.  Money aggregates ride exact integer cents.
+#    the fact table: the same shape as the bucket-total tables in
+#    prefix_scan.  Money aggregates ride exact integer cents.
 @query(
     "orders_forecast_ses",
     oracle=f"""
@@ -1949,47 +1737,11 @@ def orders_forecast_ses(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _global_prefix_sum(
-    df: DataFrame,
-    bucket: "F.Column",
-    sort_cols: list,
-    value: str,
-    out: str,
-    bucket_desc: bool = False,
-) -> DataFrame:
-    """Distributed global INCLUSIVE prefix sum of ``value`` in
-    ``sort_cols`` order -- the running-total twin of _global_rank and
-    the same two-pass shape: one shuffle on a coarse range bucket,
-    local cumulative sums in parallel, per-bucket TOTALS (tiny)
-    prefix-summed and broadcast back as offsets."""
-    b = df.withColumn("_b", bucket)
-    w_in = (
-        Window.partitionBy("_b")
-        .orderBy(*sort_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = b.withColumn("_lcs", F.sum(value).over(w_in))
-    totals = b.groupBy("_b").agg(F.sum(value).alias("_bt"))
-    order = F.col("_b").desc() if bucket_desc else F.col("_b").asc()
-    w_pfx = Window.orderBy(order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prefix = totals.select(
-        "_b",
-        F.coalesce(F.sum("_bt").over(w_pfx), F.lit(0)).alias("_off"),
-    )
-    return (
-        local.join(F.broadcast(prefix), "_b")
-        .withColumn(out, (F.col("_off") + F.col("_lcs")).cast("long"))
-        .drop("_b", "_lcs", "_off")
-    )
-
-
 # -- Gini coefficient of customer revenue concentration: the standard
 #    inequality summary every revenue dashboard carries next to the
 #    top-decile share.  G = (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x))
 #    over ascending-sorted x: ranks come from the distributed
-#    two-pass _global_rank (never a single-partition sort); every
+#    two-pass prefix_scan (never a single-partition sort); every
 #    input to the final formula is an exact integer, and both engines
 #    evaluate the identical double expression on those integers, so
 #    the ROUND(6) digits cannot diverge.
@@ -2032,13 +1784,13 @@ def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("ck")
         .agg(F.sum("c").alias("cents"))
-        .cache()  # _global_rank consumes its input twice
+        .cache()  # prefix_scan consumes its input twice
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         cust,
         F.floor(F.col("cents") / 100000),
         [F.col("cents"), F.col("ck")],
-        "rk",
+        [(F.lit(1), "rk")],
     )
     # cast an OPERAND to decimal so the product itself is decimal --
     # casting the int64 product would overflow silently first at the
@@ -2071,7 +1823,7 @@ _ABC_CLASS_SQL = """
 # -- ABC (Pareto) classification of parts by cumulative revenue
 #    share: the inventory-management classic (A ~ top 80% of revenue,
 #    B next 15%, C tail).  The global running share comes from
-#    _global_prefix_sum (two-pass, banded on a revenue decade), so no
+#    prefix_scan (two-pass, banded on a revenue decade), so no
 #    table-sized single-partition window; class boundaries are exact
 #    integer comparisons on cents -- no percentage double ever
 #    decides a row's class.
@@ -2117,13 +1869,11 @@ def orders_abc_classification(
         .agg(F.sum("c").alias("cents"))
         .cache()  # consumed by the two-pass prefix sum AND `tot`
     )
-    cum = _global_prefix_sum(
+    cum = prefix_scan(
         pr,
-        F.floor(F.log10(F.col("cents") + 1) * 4),
+        -F.floor(F.log10(F.col("cents") + 1) * 4),
         [F.col("cents").desc(), F.col("pk")],
-        "cents",
-        "cum",
-        bucket_desc=True,
+        [("cents", "cum")],
     )
     tot = pr.agg(F.sum("cents").alias("tot"))
     return (
@@ -2156,8 +1906,8 @@ def orders_abc_classification(
 # window -- endpoints are bucketed by day, the within-bucket prefix
 # sum runs partitioned per bucket, and the cross-bucket offset is a
 # prefix sum over the tiny per-day total table (rows = distinct days
-# -- the same two-pass idiom as _global_rank).  The final reduction
-# is a scalar max + a filtered min.
+# -- the two-pass idiom of functions/prefix.py::prefix_scan).  The
+# final reduction is a scalar max + a filtered min.
 @query(
     "events_peak_concurrency",
     oracle="""
@@ -2245,30 +1995,16 @@ def events_peak_concurrency(
         ).alias("ep"),
         "user_id",
     ).select("ep.ts", "ep.delta", "user_id")
-    # two-pass distributed prefix sum: per-day buckets, then a prefix
-    # over the tiny day-total table (never a global single-partition
-    # sort of the endpoints themselves)
-    ep = endpoints.withColumn("bucket", F.to_date("ts"))
-    day_tot = ep.groupBy("bucket").agg(F.sum("delta").alias("tot"))
-    off = day_tot.withColumn(
-        "offset",
-        F.coalesce(
-            F.sum("tot").over(
-                Window.orderBy("bucket").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ),
-    ).select("bucket", "offset")
-    within = F.sum("delta").over(
-        Window.partitionBy("bucket")
-        .orderBy("ts", "delta", "user_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # two-pass distributed prefix sum on per-day buckets (never a
+    # global single-partition sort of the endpoints themselves)
     swept = (
-        ep.join(F.broadcast(off), "bucket")
-        .select("ts", (F.col("offset") + within).alias("open_now"))
+        prefix_scan(
+            endpoints,
+            F.to_date("ts"),
+            ["ts", "delta", "user_id"],
+            [("delta", "open_now")],
+        )
+        .select("ts", "open_now")
         .cache()  # read by the peak scalar AND the peak_ts filter
     )
     peak = swept.agg(F.max("open_now").cast("long").alias("p"))
@@ -2687,7 +2423,7 @@ def events_pattern_regex_funnel(
 # ascending, cut into 10 population deciles, each reporting its
 # cumulative population share and cumulative revenue share -- the
 # (x, y) points of the Lorenz curve.  The rank comes from the
-# bucketed two-pass _global_rank (no single-partition sort of
+# bucketed two-pass prefix_scan (no single-partition sort of
 # customers); decile arithmetic and share numerators are exact longs,
 # each share is one double division rounded at the end.
 @query(
@@ -2731,11 +2467,11 @@ def orders_lorenz_curve(
         .cast("long")
         .alias("cents")
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         cust,
         F.floor(F.col("cents") / 1_000_000).cast("long"),
         [F.col("cents"), F.col("o_custkey")],
-        "r",
+        [(F.lit(1), "r")],
     )
     tot = cust.agg(
         F.count("*").cast("long").alias("n"),
@@ -3355,7 +3091,7 @@ def _ewma_oracle() -> str:
 # float q*n, whose ceil can flip at an ULP (the r6 hazard class).
 # The 1.5-IQR fences are kept in DOUBLED cents so they stay integer:
 # cents < Q1 - 1.5*IQR  <=>  2*cents < 5*Q1 - 3*Q3.  Per-group order
-# statistics come from _grouped_global_rank, so no group ever sits
+# statistics come from a grouped prefix_scan, so no group ever sits
 # on a single task; outlier share is integer micro-units.
 TUKEY_GROUP = "o_orderpriority"
 
@@ -3411,12 +3147,12 @@ def dq_tukey_fence_outliers(
         .cast("long")
         .alias("cents"),
     )
-    ranked = _grouped_global_rank(
+    ranked = prefix_scan(
         base,
-        ["grp"],
         F.floor(F.col("cents") / 1_000_000),
         [F.col("cents").asc()],
-        "rn",
+        [(F.lit(1), "rn")],
+        groups=["grp"],
     )
     counts = base.groupBy("grp").agg(
         F.count("*").cast("long").alias("n")
@@ -4106,7 +3842,7 @@ def events_markov_next_event_eval(
 # between consecutive years.  All boundaries, segments, and
 # transition counts are exact integers.  100 TB shape: one grouped
 # agg to (year, customer), per-(year, revenue-band) two-pass prefix
-# sums (_grouped_global_cumsum -- annual revenues are near-unique,
+# sums (a grouped prefix_scan -- annual revenues are near-unique,
 # so a bare per-year window would be one task per year), one LAG
 # window per customer.
 @query(
@@ -4182,12 +3918,12 @@ def orders_segment_migration(
     # near-unique, so a year-partitioned window is one task per
     # |years| -- the grouped two-pass cumsum shuffles on (year, $21k
     # revenue band) instead (r11)
-    ranked = _grouped_global_cumsum(
+    ranked = prefix_scan(
         byval,
-        ["yr"],
         F.floor(F.col("rev") / F.lit(1 << 21)),
         ["rev"],
         [("t", "cum")],
+        groups=["yr"],
     ).select("yr", "rev", "cum")
     bounds = (
         ranked.join(nn, "yr")

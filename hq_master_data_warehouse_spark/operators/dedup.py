@@ -225,13 +225,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    join + one aggregate, no driver-side data, and `localCheckpoint`
 #    truncates the growing lineage.  Convergence is detected by the
 #    monotone-decreasing sum of labels -- a scalar aggregate, not a
-#    row diff.
+#    row diff.  The one connected-components loop of the engine: the
+#    co-purchase graph (graph.copurchase_cc_labels) runs it too.
 CC_MAX_ITERS = 20
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) undirected edge list -> (node, comp) with comp = min
-    node id reachable.  Pure DataFrame loop; O(log diameter) rounds."""
+    node id reachable.  Pure DataFrame loop; O(log diameter) rounds.
+    Raises RuntimeError if CC_MAX_ITERS rounds end unconverged: capped
+    labels would be silently wrong on deep components."""
     both = edges.unionByName(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -280,6 +283,13 @@ def connected_components(edges: DataFrame) -> DataFrame:
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"connected components did not converge within "
+            f"{CC_MAX_ITERS} rounds; refusing to return unconverged "
+            "labels"
+        )
+    both.unpersist()  # the checkpointed labels no longer read it
     return labels
 
 

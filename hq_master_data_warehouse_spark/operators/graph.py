@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loaders import load_table
+from .dedup import connected_components
 
 PR_DAMPING = 0.85
 PR_ITERS = 5
@@ -927,19 +928,15 @@ def graph_link_prediction_minhash(
 # are singleton components.  Output: every part with its component id
 # (= the component's minimum part key) and the component size.
 #
-# Spark side: min-label propagation iterated to convergence -- one
-# equi-join + one grouped MIN per round, labels localCheckpoint-ed so
-# lineage stays flat.  Convergence is detected with a SCALAR probe:
-# labels only ever decrease, so the label sum is strictly decreasing
-# until fixpoint -- one cheap agg per round, never a row-wise diff
-# join (same discipline as dedup's label-propagation clustering).
-# Scale: each round is a shuffle join on the edge key; rounds =
-# eccentricity of each component's min node (alternate large/small-
-# star halves the bound if graphs get deeper).  The oracle replays
-# the same fixpoint as a recursive-CTE transitive closure, feasible
-# because thresholding keeps the closure small.
+# Spark side: dedup.connected_components on the edge set -- min-label
+# propagation with pointer jumping, O(log diameter) rounds, each one
+# equi-join + one grouped MIN with labels localCheckpoint-ed so lineage
+# stays flat, and a scalar label-sum probe for convergence; it raises
+# rather than return unconverged labels.  Parts without an edge join
+# in as singletons.  The oracle replays the same fixpoint as a
+# recursive-CTE transitive closure, feasible because thresholding
+# keeps the closure small.
 CC_MIN_SHARED_ORDERS = 2
-CC_MAX_ITERS = 30
 
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,61 +966,15 @@ def copurchase_cc_labels(
     from ..matcache import materialized, table_sig
 
     def build() -> DataFrame:
-        pairs = _copurchase_pairs(spark, sf_dir)
-        edges = (
-            pairs.select(
+        comp = connected_components(
+            _copurchase_pairs(spark, sf_dir).select(
                 F.col("u").alias("src"), F.col("w").alias("dst")
             )
-            .unionByName(
-                pairs.select(
-                    F.col("w").alias("src"), F.col("u").alias("dst")
-                )
-            )
-            # hash the cached edge set on the per-round join key:
-            # without this the cache holds the raw 2x-shuffle union
-            # layout and every round scans twice the partitions it
-            # needs
-            .repartition("src")
-            .cache()
-        )
+        ).select(F.col("node").alias("v"), "comp")
         part = load_table(spark, sf_dir, "part")
-        labels = part.select(
-            F.col("p_partkey").alias("v"),
-            F.col("p_partkey").alias("label"),
-        ).localCheckpoint(eager=False)
-
-        def _step(lab: DataFrame) -> DataFrame:
-            prop = (
-                edges.join(lab, edges["src"] == lab["v"])
-                .groupBy("dst")
-                .agg(F.min("label").alias("nmin"))
-            )
-            return lab.join(
-                prop, lab["v"] == prop["dst"], "left"
-            ).select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce("nmin", "label")
-                ).alias("label"),
-            )
-
-        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-        for _ in range(CC_MAX_ITERS // 2):
-            # TWO propagation steps per materialization: the
-            # thresholded edge set is small, so wall-clock is
-            # dominated by per-round fixed cost (job scheduling +
-            # checkpoint + probe), not by the joins -- batching steps
-            # halves that overhead while doing identical work
-            labels = _step(_step(labels)).localCheckpoint(eager=False)
-            # labels are monotone non-increasing per step: an
-            # unchanged sum across a double-step IS the fixpoint (one
-            # scalar per round, no row-diff join)
-            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        edges.unpersist()
-        return labels
+        return part.select(F.col("p_partkey").alias("v")).join(
+            comp, "v", "left"
+        ).select("v", F.coalesce("comp", "v").alias("label"))
 
     return materialized(
         spark,
@@ -1032,7 +983,7 @@ def copurchase_cc_labels(
             table_sig(sf_dir, "lineitem"),
             table_sig(sf_dir, "part"),
             CC_MIN_SHARED_ORDERS,
-            "minlabel-v1",
+            connected_components,  # its code lives in dedup.py
         ],
         build,
     )

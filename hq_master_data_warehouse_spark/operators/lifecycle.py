@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.prefix import bitlen, prefix_scan
 from ..registry import query
 from ..sources.loaders import load_table
 
@@ -643,13 +644,11 @@ def agg_weighted_median(
 ) -> DataFrame:
     """Quantity-weighted exact median price per return flag (lower
     median: least value v with 2 * W(<=v) >= W_total).  The running
-    weight is a _grouped_global_cumsum over (flag, price band) --
+    weight is a grouped prefix_scan over (flag, price band) --
     a flag-partitioned window would put each flag's whole
     distinct-price table (near-unique extended prices = row-scale)
     through one of |flags|=3 tasks (r11); the per-flag grand total
     is a grouped aggregate broadcast back, not a window."""
-    from .analytics import _grouped_global_cumsum
-
     g = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -660,12 +659,12 @@ def agg_weighted_median(
         .groupBy("flag", "cents")
         .agg(F.sum("q").alias("w"))
     )
-    c = _grouped_global_cumsum(
+    c = prefix_scan(
         g,
-        ["flag"],
         F.floor(F.col("cents") / F.lit(1 << 18)),
         ["cents"],
         [("w", "cw")],
+        groups=["flag"],
     )
     tots = g.groupBy("flag").agg(F.sum("w").alias("tot"))
     return (
@@ -684,7 +683,7 @@ def agg_weighted_median(
 #    seconds from per-user LAG; min/max are exact; the median is the
 #    exact lower median via cumulative counts over distinct gaps --
 #    no approx_percentile, no float quantile -- run through the
-#    two-pass _global_cumsum (r11: second-granularity gaps are
+#    two-pass prefix_scan (r11: second-granularity gaps are
 #    near-unique on bursty streams, so the distinct-gap table is
 #    row-scale and a bare global window would be one task).
 #    Shuffles: one on user_id (LAG), one on the gap bucket.  Scales.
@@ -731,16 +730,12 @@ def events_interarrival_stats(
         .filter(F.col("gap").isNotNull())
         .cache()  # feeds min/max agg AND the median frequency table
     )
-    from .analytics import _bitlen, _global_cumsum
-
     freq = gaps.groupBy("gap").agg(F.count("*").alias("c"))
     # exact median via two-pass cumulative counts: distinct
     # second-granularity gaps approach row count on bursty streams,
     # so the running total shuffles on log-scaled (bit-length) gap
     # buckets; the grand total is a scalar broadcast, not a window
-    c = _global_cumsum(
-        freq, _bitlen(F.col("gap")), ["gap"], [("c", "cw")]
-    )
+    c = prefix_scan(freq, bitlen(F.col("gap")), ["gap"], [("c", "cw")])
     tot = gaps.agg(F.count("*").alias("tot"))
     med = (
         c.crossJoin(F.broadcast(tot))

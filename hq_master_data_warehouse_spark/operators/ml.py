@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prefix import ntile_from_rank, prefix_scan
 from ..registry import query
 from ..sources.loaders import load_table
 from .text import _TOKENS_SQL, _tokens
@@ -165,7 +166,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- rank-based AUC (Mann-Whitney U): the threshold-free evaluation of
 #    the margin scorer against the parity target -- the metric every
 #    training pipeline reports beside the confusion matrix.  The
-#    global score rank comes from the bucketed two-pass _global_rank
+#    global score rank comes from the bucketed two-pass prefix_scan
 #    (margin-band buckets), NOT a single-partition window, so the
 #    evaluation scales with the corpus; ties are broken by vec_id so
 #    both engines rank identically (margins are bit-identical doubles
@@ -206,8 +207,6 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _global_rank
-
     emb = load_table(spark, sf_dir, "embeddings")
     margin = _margin_expr()
     m = emb.select(
@@ -215,11 +214,11 @@ def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 2 == 1).alias("pos"),
         margin.alias("margin"),
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         m,
         F.floor(F.col("margin")),
         [F.col("margin"), F.col("vec_id")],
-        "rk",
+        [(F.lit(1), "rk")],
     )
     pos_rk = F.sum(F.when(F.col("pos"), F.col("rk")).otherwise(0)).cast(
         "double"
@@ -290,14 +289,14 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- Kolmogorov-Smirnov statistic of the margin scorer: the maximum
-#    gap between the positive and negative score CDFs.  Every rank is
-#    a bucketed two-pass _global_rank (margin-band buckets), never a
-#    single-partition window: the global rank gives cum_total at each
-#    row, the class-conditional rank gives the row's own class CDF
-#    step, and the OTHER class's cumulative count falls out as
-#    rk - rk_in -- so both empirical CDFs are known at every row
-#    without any table-sized unpartitioned Exchange.  Ties broken by
-#    vec_id so both engines rank identically.
+#    gap between the positive and negative score CDFs.  ONE bucketed
+#    two-pass prefix_scan (margin-band buckets), never a
+#    single-partition window, carries two running counts: the global
+#    rank (cum_total at each row) and the running count of positives;
+#    the negatives' count falls out as rk - cum_pos -- so both
+#    empirical CDFs are known at every row without any table-sized
+#    unpartitioned Exchange.  Ties broken by vec_id so both engines
+#    rank identically.
 @query(
     "ml_ks_statistic",
     oracle=f"""
@@ -337,8 +336,6 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _global_rank
-
     emb = load_table(spark, sf_dir, "embeddings")
     margin = _margin_expr()
     m = emb.select(
@@ -346,17 +343,15 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 2 == 1).alias("pos"),
         margin.alias("margin"),
     ).cache()
-    bucket = F.floor(F.col("margin"))
-    order = [F.col("margin"), F.col("vec_id")]
-    ranked = _global_rank(m, bucket, order, "rk")
-    # class-conditional global ranks: each class ranked separately
-    pos_rk = _global_rank(
-        m.filter(F.col("pos")), bucket, order, "rk_in"
-    ).select("vec_id", "rk_in")
-    neg_rk = _global_rank(
-        m.filter(~F.col("pos")), bucket, order, "rk_in"
-    ).select("vec_id", "rk_in")
-    with_in = ranked.join(pos_rk.unionByName(neg_rk), "vec_id")
+    ranked = prefix_scan(
+        m,
+        F.floor(F.col("margin")),
+        [F.col("margin"), F.col("vec_id")],
+        [
+            (F.lit(1), "rk"),
+            (F.when(F.col("pos"), 1).otherwise(0), "cum_pos"),
+        ],
+    )
     tot = m.agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0))
         .cast("long")
@@ -365,15 +360,10 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_neg"),
     )
-    j = with_in.crossJoin(F.broadcast(tot))
-    cum_pos = F.when(
-        F.col("pos"), F.col("rk_in")
-    ).otherwise(F.col("rk") - F.col("rk_in"))
-    cum_neg = F.when(
-        F.col("pos"), F.col("rk") - F.col("rk_in")
-    ).otherwise(F.col("rk_in"))
+    j = ranked.crossJoin(F.broadcast(tot))
+    cum_neg = F.col("rk") - F.col("cum_pos")
     gap = F.abs(
-        cum_pos.cast("double") / F.col("n_pos")
+        F.col("cum_pos").cast("double") / F.col("n_pos")
         - cum_neg.cast("double") / F.col("n_neg")
     )
     return j.groupBy("n_pos", "n_neg").agg(
@@ -385,7 +375,7 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    twin of ml_auc_rank): rank all items by margin descending; AP =
 #    mean over positives of precision@rank.  Both global ranks (items
 #    by score, positives by rank) go through the two-pass
-#    _global_rank; precision terms are exact-integer ratios j/rk and
+#    prefix_scan; precision terms are exact-integer ratios j/rk and
 #    only their SUM is floating -- the ROUND(5) quantum sits ~7
 #    orders of magnitude above the worst-case summation ULP drift.
 @query(
@@ -420,28 +410,25 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_average_precision(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .analytics import _global_rank
-
     emb = load_table(spark, sf_dir, "embeddings")
     margin = _margin_expr()
     m = emb.select(
         "vec_id",
         (F.col("label") % 2 == 1).alias("pos"),
         margin.alias("margin"),
-    ).cache()  # _global_rank consumes its input twice
-    ranked = _global_rank(
+    ).cache()  # prefix_scan consumes its input twice
+    ranked = prefix_scan(
         m,
-        F.floor(F.col("margin")),
+        -F.floor(F.col("margin")),
         [F.col("margin").desc(), F.col("vec_id")],
-        "rk",
-        bucket_desc=True,
+        [(F.lit(1), "rk")],
     )
     positives = ranked.filter(F.col("pos")).select("rk").cache()
-    indexed = _global_rank(
+    indexed = prefix_scan(
         positives,
         F.floor(F.col("rk") / 4096),
         [F.col("rk")],
-        "j",
+        [(F.lit(1), "j")],
     )
     return indexed.agg(
         F.count("*").cast("long").alias("n_pos"),
@@ -1620,7 +1607,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- lift & gains table: the model-evaluation report sales/marketing
 #    actually reads -- score deciles (best first), cumulative capture
 #    of positives, and lift over the base rate.  Deciles come from
-#    the distributed two-pass _global_rank (margin-band buckets,
+#    the distributed two-pass prefix_scan (margin-band buckets,
 #    best-first), never a single-partition NTILE sort; cumulative
 #    sums run over the bounded 10-row decile table.  Counts exact;
 #    lift/gains are fixed double ratios.
@@ -1666,8 +1653,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from .analytics import _global_rank, _ntile_from_rank
-
     emb = load_table(spark, sf_dir, "embeddings")
     margin = _margin_expr()
     m = emb.select(
@@ -1677,16 +1662,15 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # best-first global rank: coarse margin band as the monotone
     # bucket (descending), exact (margin DESC, vec_id) order within
-    ranked = _global_rank(
+    ranked = prefix_scan(
         m,
-        F.floor(F.col("margin") * 4),
+        -F.floor(F.col("margin") * 4),
         [F.desc("margin"), F.asc("vec_id")],
-        "rn",
-        bucket_desc=True,
+        [(F.lit(1), "rn")],
     )
     total = m.agg(F.count("*").alias("n_rows"))
     ranked = ranked.crossJoin(F.broadcast(total)).withColumn(
-        "decile", _ntile_from_rank(F.col("rn"), F.col("n_rows"), 10)
+        "decile", ntile_from_rank(F.col("rn"), F.col("n_rows"), 10)
     )
     d = ranked.groupBy("decile").agg(
         F.count("*").cast("long").alias("n"),
@@ -1934,7 +1918,7 @@ def ml_silhouette_simplified(
 #    and rank sums are exact integers, so the statistic is ONE double
 #    division of exact longs -- bit-identical cross-engine with no
 #    quantization step at all.  The eval-set rank runs through the
-#    distributed two-pass _global_rank (margin-band buckets, the
+#    distributed two-pass prefix_scan (margin-band buckets, the
 #    orders_rfm_scores shape) -- no single-partition WindowExec even
 #    on 100x eval sets (VERDICT r10 item 4).
 @query(
@@ -1969,8 +1953,6 @@ def ml_silhouette_simplified(
     """,
 )
 def ml_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _global_rank
-
     emb = load_table(spark, sf_dir, "embeddings")
     margin = _margin_expr()
     m = emb.select(
@@ -1978,11 +1960,11 @@ def ml_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 2 == 1).cast("int").alias("pos"),
         margin.alias("margin"),
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         m,
         F.floor(F.col("margin")),
         [F.asc("margin"), F.asc("vec_id")],
-        "rnk",
+        [(F.lit(1), "rnk")],
     )
     s = ranked.agg(
         F.sum("pos").cast("long").alias("n_pos"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.prefix import prefix_scan
 from ..registry import query
 from ..session import local_df
 from ..sources.loaders import load_table
@@ -316,14 +317,12 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cents rank in arbitrary order, but the VALUE at any rank of a
     # sorted multiset is unique, and only values at band-boundary
     # ranks are consumed.
-    from .analytics import _grouped_global_rank
-
-    ranked = _grouped_global_rank(
+    ranked = prefix_scan(
         li.select("l_returnflag", "cents"),
-        ["l_returnflag"],
         F.floor(F.col("cents") / F.lit(1 << 18)),
         ["cents"],
-        "rn",
+        [(F.lit(1), "rn")],
+        groups=["l_returnflag"],
     )
     band = (F.col("n") + (SKETCH_GK_ACCURACY - 1)) / F.lit(
         SKETCH_GK_ACCURACY

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prefix import prefix_scan
 from ..registry import query
 from ..sources.loaders import load_table
 
@@ -225,7 +226,7 @@ STRATUM_SAMPLE_N = 5
 #    is the oracle-checkable complement).  With ~20 sources a
 #    stratum-partitioned window puts a twentieth of the corpus
 #    through each task (r11): the per-stratum rank now runs through
-#    _grouped_global_rank on (source, first-hex-digit-of-hash) -- the
+#    a grouped prefix_scan on (source, first-hex-digit-of-hash) -- the
 #    hash prefix is a monotone bucket of the sort key, so ranks are
 #    identical and every bucket holds ~1/16 of a stratum.
 @query(
@@ -242,19 +243,17 @@ STRATUM_SAMPLE_N = 5
     """,
 )
 def sample_stratified_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _grouped_global_rank
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.md5(F.col("doc_id").cast("string")).alias("_h"),
     )
-    ranked = _grouped_global_rank(
+    ranked = prefix_scan(
         docs,
-        ["source"],
         F.substring("_h", 1, 1),
         [F.col("_h"), F.col("doc_id")],
-        "rn",
+        [(F.lit(1), "rn")],
+        groups=["source"],
     )
     return (
         ranked.filter(F.col("rn") <= STRATUM_SAMPLE_N)
@@ -348,7 +347,7 @@ def pack_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write path every pretraining run needs: reproducible
     (hash-derived, seed-free), uniform (md5 is uniform over doc_ids),
     and fully distributed.  Shard assignment is a pure map; the
-    intra-shard position runs through _grouped_global_rank on
+    intra-shard position runs through a grouped prefix_scan on
     (shard, first-hex-digit-of-hash) (r11: a shard-partitioned
     window puts a whole shard's rows through one task each, and with
     N_SHARDS fixed a shard IS corpus/N rows -- the hash-prefix bucket
@@ -356,8 +355,6 @@ def pack_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical, the two-pass analogue of repartition +
     sortWithinPartitions with an oracle-checkable (shard, pos) key).
     """
-    from .analytics import _grouped_global_rank
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("hh"),
@@ -365,16 +362,14 @@ def pack_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard = (
         F.conv(F.substring("hh", 1, 8), 16, 10).cast("long") % N_SHARDS
     ).cast("int")
-    ranked = _grouped_global_rank(
+    ranked = prefix_scan(
         docs.withColumn("shard", shard),
-        ["shard"],
         F.substring("hh", 1, 1),
         [F.col("hh"), F.col("doc_id")],
-        "pos",
+        [(F.lit(1), "pos")],
+        groups=["shard"],
     )
-    return ranked.select(
-        "doc_id", "shard", F.col("pos").cast("long").alias("pos")
-    )
+    return ranked.select("doc_id", "shard", "pos")
 
 
 # -- leakage-safe split: hash-split by NEAR-DUP CLUSTER, not by doc.

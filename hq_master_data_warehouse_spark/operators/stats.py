@@ -26,6 +26,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prefix import bitlen, ntile_from_rank, prefix_scan
 from ..functions.scalars import exact_units_sum
 from ..registry import query
 from ..session import local_df
@@ -417,8 +418,8 @@ def orders_dow_seasonality(
 # -- equi-depth (decile) histogram of order value: NTILE(10)
 #    semantics stated by the oracle, computed WITHOUT the global
 #    single-partition NTILE sort -- the distributed two-pass
-#    _global_rank (bucketed on a coarse monotone price band) plus the
-#    arithmetic _ntile_from_rank, the same scale-safe shape the RFM
+#    prefix_scan (bucketed on a coarse monotone price band) plus the
+#    arithmetic ntile_from_rank, the same scale-safe shape the RFM
 #    query pins.  Output: 10 rows with exact bucket populations,
 #    price bounds and revenue.
 @query(
@@ -441,22 +442,20 @@ def orders_dow_seasonality(
 def agg_histogram_equidepth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .analytics import _global_rank, _ntile_from_rank
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         orders,
         F.floor(F.col("o_totalprice") / 1000),
         [F.col("o_totalprice"), F.col("o_orderkey")],
-        "rn",
+        [(F.lit(1), "rn")],
     )
     total = orders.agg(F.count("*").alias("n_rows"))
     ranked = ranked.crossJoin(F.broadcast(total))
     ranked = ranked.withColumn(
         "decile",
-        _ntile_from_rank(F.col("rn"), F.col("n_rows"), 10),
+        ntile_from_rank(F.col("rn"), F.col("n_rows"), 10),
     )
     return ranked.groupBy("decile").agg(
         F.count("*").alias("n_orders"),
@@ -3126,9 +3125,9 @@ def orders_diff_in_diff(
 # with T = sum(t^3 - t) are ONE double expression over exact longs
 # (no continuity correction -- both engines evaluate the identical
 # expression).  The cumulative count runs over DISTINCT cent values
-# through the two-pass _global_cumsum (r11): totalprice cents are
+# through the two-pass prefix_scan (r11): totalprice cents are
 # near-unique, so the distinct-value table is row-scale and a bare
-# global window would be one WindowExec task; the helper shuffles on
+# global window would be one WindowExec task; the scan shuffles on
 # a $21k price band and the only global window is the per-band count
 # prefix (bounded by the price domain).
 @query(
@@ -3173,8 +3172,6 @@ def orders_diff_in_diff(
     """,
 )
 def ml_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _global_cumsum
-
     orders = load_table(spark, sf_dir, "orders")
     g = orders.select(
         F.col("o_orderpriority")
@@ -3187,7 +3184,7 @@ def ml_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("t"),
         F.sum("hi").cast("long").alias("t_hi"),
     )
-    ranked = _global_cumsum(
+    ranked = prefix_scan(
         byval,
         F.floor(F.col("cents") / F.lit(1 << 21)),
         ["cents"],
@@ -4947,8 +4944,6 @@ def ml_wilcoxon_signed_rank(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from .analytics import _bitlen, _global_cumsum
-
     orders = load_table(spark, sf_dir, "orders")
     wseq = Window.partitionBy("o_custkey").orderBy(
         "o_orderdate", "o_orderkey"
@@ -4979,8 +4974,8 @@ def ml_wilcoxon_signed_rank(
     )
     # distinct |diff| cents are near-unique (row-scale): two-pass
     # cumulative ranks, bit-length buckets for the small-diff skew
-    ranked = _global_cumsum(
-        byval, _bitlen(F.col("absd")), ["absd"], [("t", "_cum")]
+    ranked = prefix_scan(
+        byval, bitlen(F.col("absd")), ["absd"], [("t", "_cum")]
     ).select(
         "t",
         "t_pos",
@@ -5459,15 +5454,13 @@ def agg_winsorized_stats(
         .cast("long")
         .alias("cents")
     )
-    from .analytics import _global_cumsum
-
     nn = g.agg(F.count("*").cast("long").alias("n"))
     byval = g.groupBy("cents").agg(
         F.count("*").cast("long").alias("t")
     )
     # percentile cut points from distinct cents (near-unique, i.e.
     # row-scale): two-pass cumulative counts over $21k price bands
-    ranked = _global_cumsum(
+    ranked = prefix_scan(
         byval,
         F.floor(F.col("cents") / F.lit(1 << 21)),
         ["cents"],
@@ -5739,8 +5732,6 @@ def ml_wasserstein_distance(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    from .analytics import _global_cumsum
-
     orders = load_table(spark, sf_dir, "orders")
     g = orders.select(
         F.col("o_orderpriority")
@@ -5755,18 +5746,17 @@ def ml_wasserstein_distance(
         F.sum("hi").cast("long").alias("t_hi"),
         F.sum(1 - F.col("hi")).cast("long").alias("t_lo"),
     )
-    # both ECDFs via the two-pass cumulative helper (distinct cents
-    # are near-unique = row-scale); keep_bucket so the global LEAD
-    # can be assembled from a bucket-local lead plus a boundary
-    # patch: the NEXT non-empty bucket's first value, computed with
-    # a window over the per-bucket firsts table (bounded by the
-    # bucket domain, never the input)
-    cs = _global_cumsum(
-        byval,
-        F.floor(F.col("cents") / F.lit(1 << 21)),
+    # both ECDFs via the two-pass prefix scan (distinct cents are
+    # near-unique = row-scale) on a bucket column kept in the output,
+    # so the global LEAD can be assembled from a bucket-local lead
+    # plus a boundary patch: the NEXT non-empty bucket's first value,
+    # computed with a window over the per-bucket firsts table
+    # (bounded by the bucket domain, never the input)
+    cs = prefix_scan(
+        byval.withColumn("_b", F.floor(F.col("cents") / F.lit(1 << 21))),
+        F.col("_b"),
         ["cents"],
         [("t_hi", "cum_hi"), ("t_lo", "cum_lo")],
-        keep_bucket=True,
     )
     lead_local = F.lead("cents").over(
         Window.partitionBy("_b").orderBy("cents")
@@ -5899,8 +5889,6 @@ CONF_ALPHA = 0.1  # target 90% coverage
 def ml_conformal_interval(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .analytics import _bitlen, _global_cumsum
-
     orders = load_table(spark, sf_dir, "orders")
     h1 = F.substring(
         F.md5(F.col("o_orderkey").cast("string")), 1, 1
@@ -5943,8 +5931,8 @@ def ml_conformal_interval(
     # q_hat from distinct nonconformities (near-unique = row-scale):
     # two-pass cumulative counts, bit-length buckets for the
     # small-residual skew
-    ranked = _global_cumsum(
-        byval, _bitlen(F.col("r")), ["r"], [("t", "cum")]
+    ranked = prefix_scan(
+        byval, bitlen(F.col("r")), ["r"], [("t", "cum")]
     ).select("r", "cum")
     k = F.least(
         F.ceil((F.col("n") + 1) * (1 - CONF_ALPHA)), F.col("n")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prefix import bitlen, prefix_scan
 from ..registry import query
 from ..session import fan_out_scan
 from ..sources.loaders import load_table
@@ -759,37 +760,18 @@ PACK_BUDGET = 2048
 
 
 def pack_nextfit(docs: DataFrame) -> DataFrame:
-    """Two-pass distributed prefix sum assigning (offset, pack_id) to
-    rows with columns (doc_id, h, n_tokens): md5-prefix buckets
-    partition the stream, each prefix-sums locally, and the 16-row
-    bucket-total table lifts local sums to global offsets."""
-    from pyspark.sql.window import Window
-
-    docs = docs.withColumn("bucket", F.substring("h", 1, 1))
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    """(doc_id, n_tokens, offset, pack_id) for rows with columns
+    (doc_id, h, n_tokens) in (h, doc_id) order: a prefix_scan on
+    md5-prefix buckets, whose exclusive offset is the running token
+    sum minus the row's own tokens."""
+    cum = prefix_scan(
+        docs,
+        F.substring("h", 1, 1),
+        ["h", "doc_id"],
+        [("n_tokens", "_cum")],
     )
-    local = docs.withColumn("local_cum", F.sum("n_tokens").over(w_in))
-    totals = docs.groupBy("bucket").agg(
-        F.sum("n_tokens").alias("bucket_total")
-    )
-    w_pfx = (
-        Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = totals.select(
-        "bucket",
-        F.coalesce(
-            F.sum("bucket_total").over(w_pfx), F.lit(0)
-        ).alias("bucket_offset"),
-    )
-    joined = local.join(F.broadcast(prefix), "bucket")
-    offset = F.col("bucket_offset") + F.col("local_cum") - F.col(
-        "n_tokens"
-    )
-    return joined.select(
+    offset = F.col("_cum") - F.col("n_tokens")
+    return cum.select(
         "doc_id",
         "n_tokens",
         offset.alias("offset"),
@@ -1504,8 +1486,6 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .analytics import _bitlen, _global_rank
-
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(
@@ -1516,14 +1496,13 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the vocabulary grows with the corpus (Heaps' law), so the rank
     # axis of the fit is a genuine row-scale global rank: two-pass
-    # _global_rank over bit-length frequency buckets (r11; a bare
+    # prefix_scan over bit-length frequency buckets (r11; a bare
     # Window.orderBy here was one WindowExec task over the vocab)
-    ranked = _global_rank(
+    ranked = prefix_scan(
         freq,
-        _bitlen(F.col("n")),
+        -bitlen(F.col("n")),
         [F.desc("n"), F.asc("tok")],
-        "rnk",
-        bucket_desc=True,
+        [(F.lit(1), "rnk")],
     )
     x = F.round(F.log(F.col("rnk").cast("double")), 9)
     y = F.round(F.log(F.col("n").cast("double")), 9)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.prefix import ntile_from_rank, prefix_scan
 from ..registry import query
 from ..sources.loaders import load_table
 
@@ -165,10 +166,10 @@ def window_enumerate_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    what lets all three functions derive arithmetically from ONE
 #    per-segment two-pass rank (r11: |segments| = 5, so a
 #    segment-partitioned window put a fifth of customers through each
-#    of 5 tasks; _grouped_global_rank shuffles on (segment, acctbal
+#    of 5 tasks; a grouped prefix_scan shuffles on (segment, acctbal
 #    band) instead): with a unique ordering RANK == ROW_NUMBER, so
 #    percent_rank = (rn-1)/(n-1), cume_dist = rn/n, and NTILE falls
-#    out of _ntile_from_rank exactly as in orders_rfm_scores.
+#    out of ntile_from_rank exactly as in orders_rfm_scores.
 @query(
     "window_distribution_functions",
     oracle="""
@@ -184,17 +185,15 @@ def window_enumerate_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution_functions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .analytics import _grouped_global_rank, _ntile_from_rank
-
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    ranked = _grouped_global_rank(
+    ranked = prefix_scan(
         customer,
-        ["c_mktsegment"],
         F.floor(F.col("c_acctbal") / F.lit(500)),
         [F.col("c_acctbal"), F.col("c_custkey")],
-        "rn",
+        [(F.lit(1), "rn")],
+        groups=["c_mktsegment"],
     )
     sizes = customer.groupBy("c_mktsegment").agg(
         F.count("*").cast("long").alias("_n")
@@ -205,9 +204,7 @@ def window_distribution_functions(
         .select(
             "c_custkey",
             "c_mktsegment",
-            _ntile_from_rank(rn, n, 4).cast("int").alias(
-                "bal_quartile"
-            ),
+            ntile_from_rank(rn, n, 4).alias("bal_quartile"),
             F.round(
                 F.when(n > 1, (rn - 1) / (n - 1)).otherwise(0.0), 6
             ).alias("bal_pct_rank"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.prefix import ntile_from_rank, prefix_scan
 from ..operators.dedup import CANONICAL_SQL, _shingles, canonical_text
 from ..operators.text import (
     PACK_BUDGET,
@@ -235,24 +236,21 @@ def pipeline_pretraining_pack(
 def pipeline_quality_curriculum(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.analytics import _global_rank, _ntile_from_rank
-
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id", quality_raw_score(F.col("text")).alias("q")
     )
-    ranked = _global_rank(
+    ranked = prefix_scan(
         scored,
-        F.floor(F.col("q") * 10),  # ~10 quality bands, monotone with q
+        -F.floor(F.col("q") * 10),  # ~10 quality bands, monotone with q
         [F.col("q").desc(), F.col("doc_id")],
-        "_rn",
-        bucket_desc=True,
+        [(F.lit(1), "_rn")],
     )
     total = scored.agg(F.count("*").alias("_n"))
     return ranked.crossJoin(F.broadcast(total)).select(
         "doc_id",
         F.round(F.col("q"), 6).alias("quality"),
-        _ntile_from_rank(F.col("_rn"), F.col("_n"), 4).alias(
+        ntile_from_rank(F.col("_rn"), F.col("_n"), 4).alias(
             "curriculum_stage"
         ),
     )

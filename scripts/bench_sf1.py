@@ -117,10 +117,10 @@ HEAVY = [
     # refuse-guard points somewhere real.
     "graph_link_prediction_minhash",
     # round-11 window sweep: the converted row-scale windows now run
-    # through the two-pass bucket helpers; one representative per
-    # helper type carries the sf1 scale curve -- _grouped_global_rank
-    # over lineitem (approx sketches), _global_cumsum + boundary lead
-    # over near-unique doubles (wasserstein), and the per-segment
+    # through the two-pass prefix_scan; one representative per use
+    # carries the sf1 scale curve -- a grouped rank over lineitem
+    # (approx sketches), running sums + boundary lead over
+    # near-unique doubles (wasserstein), and the per-segment
     # rank-derived ntile/percent_rank/cume_dist battery (customers)
     "agg_approx_sketches",
     "ml_wasserstein_distance",

@@ -433,10 +433,12 @@ def test_resize_fixed_shape_and_determinism(spark):
     assert {(r.doc_id, r.thumb_hex) for r in rows} == again
 
 
-def test_connected_components_chain_and_forest(spark):
+def test_connected_components_chain_and_forest(spark, monkeypatch):
     """A 40-node chain (worst-case diameter) plus a separate triangle:
     every node must land in the component of its minimum reachable id,
-    well within CC_MAX_ITERS thanks to pointer jumping."""
+    well within CC_MAX_ITERS thanks to pointer jumping -- and a loop
+    cut short of convergence must raise, not return its labels."""
+    from hq_master_data_warehouse_spark.operators import dedup
     from hq_master_data_warehouse_spark.operators.dedup import (
         connected_components,
     )
@@ -451,6 +453,10 @@ def test_connected_components_chain_and_forest(spark):
     }
     want = {(n, 100) for n in range(100, 141)} | {(n, 7) for n in (7, 9, 11)}
     assert got == want
+
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges)
 
 
 def test_quantize_codes_bounded_and_reconstructable(spark):

@@ -12,15 +12,17 @@ that silently degrades any of the 370+ plans to a cartesian -- or
 adds a global sort-window over row-scale data -- fails CI here even
 if the query has no dedicated plan pin.
 
-Window policy (r11, after the _global_cumsum sweep converted the
+Window policy (r11, after the two-pass sweep converted the
 row-scale offenders -- mann-whitney/wilcoxon/wasserstein/winsorized/
 conformal/interarrival cumulative ranks, the zipf vocabulary rank,
 q15's global max, the flag-partitioned weighted median):
 
-- specs whose leading ORDER column is ``_b`` or ``bucket`` are the
-  sanctioned two-pass-helper shape (_global_rank/_global_cumsum/
-  nextfit prefix windows over per-bucket COUNT tables, bounded by
-  the bucket domain, never the input) -- always allowed;
+- specs whose leading ORDER column is ``_b`` are the sanctioned
+  ``functions/prefix.py::prefix_scan`` shape (the prefix window over
+  per-bucket TOTAL tables, bounded by the bucket domain, never the
+  input) -- always allowed; test_only_prefix_scan_names_the_bucket
+  keeps that name to prefix_scan, so the sanction covers nothing
+  else;
 - every other unpartitioned spec must be registered in
   ALLOWED_GLOBAL_WINDOWS with its boundedness argument.
 """
@@ -103,7 +105,7 @@ _SPEC_RE = re.compile(
 
 def _offending_global_windows(plan: str) -> list[str]:
     """Unpartitioned window specs in a physical plan string, minus
-    the sanctioned ``_b``/``bucket`` prefix-table shape.  A spec is
+    the sanctioned ``_b`` prefix-table shape of prefix_scan.  A spec is
     unpartitioned when its body is empty (global aggregate window)
     or its first argument is an order spec (no partition columns
     before the first ASC/DESC).  Expression-valued partition columns
@@ -117,7 +119,7 @@ def _offending_global_windows(plan: str) -> list[str]:
         if not (empty or "," not in cut):
             continue
         lead = body.strip().split("#")[0].strip()
-        if lead in ("_b", "bucket"):
+        if lead == "_b":
             continue
         hits.append(body.strip()[:60] or "<global>")
     return hits
@@ -138,7 +140,7 @@ def test_no_cartesian_and_no_unbounded_global_window(spark, name):
         raise AssertionError(
             f"{name} has unpartitioned window(s) over unaudited "
             f"input: {bad} -- either switch to the two-pass "
-            f"_global_rank/_global_cumsum helpers or add an audited "
+            f"prefix_scan (functions/prefix.py) or add an audited "
             f"boundedness entry to ALLOWED_GLOBAL_WINDOWS"
         )
 
@@ -232,4 +234,58 @@ def test_only_txn_log_knows_the_log_layout():
     assert not offenders, (
         "txn log paths built outside sources/txn_log.py: "
         + ", ".join(offenders)
+    )
+
+
+#: engine modules and functions that may spell prefix_scan's bucket
+#: column, and why
+_B_NAME_USERS = {
+    ("operators/stats.py", "ml_wasserstein_distance"): (
+        "its boundary-patch LEAD windows partition on prefix_scan's "
+        "own bucket column so they reuse its shuffle; their one "
+        "unpartitioned window runs over the per-bucket firsts table"
+    ),
+    ("sources/txn_log.py", "_write_bucketed"): (
+        "the Hive partition column of a txn table's key-range data "
+        "files (the `<prefix>/_b=N` dirs of its on-disk layout); no "
+        "window orders by it"
+    ),
+}
+
+
+def _b_constants(tree) -> list[tuple[int, str]]:
+    """(line, enclosing function) of every ``"_b"`` string constant."""
+    hits = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Constant) and node.value == "_b":
+            hits.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, "<module>")
+    return hits
+
+
+def test_only_prefix_scan_names_the_bucket():
+    """The plan lint sanctions every window ordered by ``_b``; that is
+    truthful only while ``functions/prefix.py`` is the one module that
+    names a column ``_b``, so a hand-rolled prefix window elsewhere
+    must go through ``prefix_scan`` or ALLOWED_GLOBAL_WINDOWS."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = [
+        f"{rel}:{line} ({func})"
+        for path in sorted(pkg.rglob("*.py"))
+        if (rel := path.relative_to(pkg).as_posix())
+        != "functions/prefix.py"
+        for line, func in _b_constants(
+            ast.parse(path.read_text(), str(path))
+        )
+        if (rel, func) not in _B_NAME_USERS
+    ]
+    assert not offenders, (
+        "the prefix_scan bucket name `_b` spelled outside "
+        "functions/prefix.py: " + ", ".join(offenders)
     )

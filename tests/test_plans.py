@@ -192,9 +192,10 @@ def test_bm25_small_sides_are_broadcast(spark):
 
 def test_packing_prefix_sum_has_no_single_partition_corpus_window(spark):
     plan = _plan(spark, "pack_documents_nextfit")
-    # the per-bucket window must be hash-partitioned on the bucket;
-    # only the 16-row bucket-total window runs single-partition.
-    assert "hashpartitioning(bucket" in plan
+    # the per-bucket window must be hash-partitioned on the bucket
+    # (prefix_scan's `_b`); only the 16-row bucket-total window runs
+    # single-partition.
+    assert "hashpartitioning(_b" in plan
 
 
 def test_contamination_semi_join_keys_on_gram(spark):
@@ -248,7 +249,7 @@ def test_round2_ops_have_no_cartesian_and_key_on_hashes(spark):
 
 
 def test_distributed_rank_consumers_use_bucketed_windows(spark):
-    # curriculum staging and AUC both rank via _global_rank: the only
+    # curriculum staging and AUC both rank via prefix_scan: the only
     # windows over input-sized data must be partitioned on the bucket.
     for name in ("pipeline_quality_curriculum", "ml_auc_rank"):
         plan = _plan(spark, name)
@@ -569,8 +570,8 @@ def _physical_tree(spark, name: str):
 
 
 def test_prefix_rank_windows_run_on_count_tables_only(spark):
-    """The two-pass distributed ranks (_global_rank /
-    _grouped_global_rank, operators/analytics.py) emit WindowExec
+    """The two-pass distributed ranks (prefix_scan, plain and
+    grouped, functions/prefix.py) emit WindowExec
     warnings for their UNBUCKETED prefix windows -- provably cosmetic
     because those windows consume the per-bucket COUNT table (bounded
     by the bucket domain), never the raw input (VERDICT r8 item 5).

@@ -27,6 +27,7 @@ from hq_master_data_warehouse_spark.schemas import (
 )
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 segments = st.one_of(
     st.none(),
@@ -80,52 +81,105 @@ def test_bucket_and_capacity_expressions_match_model(spark, values):
         assert r.capacity == _model_capacity(want_bucket)
 
 
+scan_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=1),  # group
+        st.integers(min_value=0, max_value=999),  # sort key
+        st.integers(min_value=-50, max_value=50),  # weight 1
+        st.integers(min_value=0, max_value=9),  # weight 2
+    ),
+    min_size=1,
+    max_size=60,
+)
+
+
+def _scan_df(spark, rows):
+    return spark.createDataFrame(
+        [(g, k, i, w1, w2) for i, (g, k, w1, w2) in enumerate(rows)],
+        "g long, k long, i long, w1 long, w2 long",
+    )
+
+
+def _assert_scan_matches_windows(df, sums, want_cols):
+    """prefix_scan(df, ..., sums) equals ``want_cols(window)`` row by
+    row for a global ascending order, a negated bucket for a
+    descending order, and a per-group order.  Duplicate keys are
+    broken by id; floor(k/100) leaves most buckets empty on small
+    samples on purpose, exercising the prefix join's gaps."""
+    from hq_master_data_warehouse_spark.functions.prefix import prefix_scan
+
+    bucket = F.floor(F.col("k") / 100)
+    # (bucket, order, groups) -> the window the scan must equal
+    cases = {
+        "asc": (bucket, ["k", "i"], (), Window.orderBy("k", "i")),
+        "desc": (
+            -bucket,
+            [F.col("k").desc(), "i"],
+            (),
+            Window.orderBy(F.col("k").desc(), "i"),
+        ),
+        "grp": (
+            bucket,
+            ["k", "i"],
+            ["g"],
+            Window.partitionBy("g").orderBy("k", "i"),
+        ),
+    }
+    outs = [o for _, o in sums]
+    for name, (b, order, groups, w) in cases.items():
+        scanned = (
+            prefix_scan(df, b, order, sums, groups=groups)
+            .select("i", *outs)
+            .collect()
+        )
+        want = {
+            r.i: tuple(r)[1:]
+            for r in df.select("i", *want_cols(w)).collect()
+        }
+        assert len(scanned) == len(want), name
+        assert {r.i: tuple(r)[1:] for r in scanned} == want, name
+
+
+_RUN = (Window.unboundedPreceding, Window.currentRow)
+
+
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=999),
-        min_size=1,
-        max_size=60,
-        unique=True,
-    )
-)
-def test_distributed_rank_and_ntile_match_window_forms(spark, keys):
-    """_global_rank == global row_number; _ntile_from_rank == NTILE(4):
-    the bucketed two-pass machinery must be indistinguishable from the
-    single-partition window forms it replaces."""
-    from pyspark.sql.window import Window
-
-    from hq_master_data_warehouse_spark.operators.analytics import (
-        _global_rank,
-        _ntile_from_rank,
+@given(scan_rows)
+def test_distributed_rank_and_ntile_match_window_forms(spark, rows):
+    """A prefix_scan of F.lit(1) == row_number, globally, descending
+    and per group; ntile_from_rank == NTILE(4): the bucketed two-pass
+    machinery must be indistinguishable from the single-partition
+    window forms it replaces."""
+    from hq_master_data_warehouse_spark.functions.prefix import (
+        ntile_from_rank,
+        prefix_scan,
     )
 
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    ranked = _global_rank(
-        df, F.floor(F.col("k") / 100), [F.col("k")], "rn"
+    df = _scan_df(spark, rows)
+    _assert_scan_matches_windows(
+        df,
+        [(F.lit(1), "rn")],
+        lambda w: [F.row_number().over(w).cast("long")],
     )
-    total = df.agg(F.count("*").alias("_n"))
+
     got = {
-        (r.k, r.rn, r.q)
-        for r in ranked.crossJoin(F.broadcast(total))
+        r.i: r.q
+        for r in prefix_scan(
+            df, F.floor(F.col("k") / 100), ["k", "i"], [(F.lit(1), "rn")]
+        )
         .select(
-            "k",
-            "rn",
-            _ntile_from_rank(F.col("rn"), F.col("_n"), 4).alias("q"),
+            "i", ntile_from_rank(F.col("rn"), F.lit(len(rows)), 4).alias("q")
         )
         .collect()
     }
-    w = Window.orderBy("k")
     want = {
-        (r.k, r.rn, r.q)
+        r.i: r.q
         for r in df.select(
-            "k",
-            F.row_number().over(w).cast("long").alias("rn"),
-            F.ntile(4).over(w).alias("q"),
+            "i", F.ntile(4).over(Window.orderBy("k", "i")).alias("q")
         ).collect()
     }
     assert got == want
@@ -133,100 +187,104 @@ def test_distributed_rank_and_ntile_match_window_forms(spark, keys):
 
 @settings(
     max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(scan_rows)
+def test_distributed_cumsum_matches_window_forms(spark, rows):
+    """prefix_scan == inclusive running SUM (several sum columns at
+    once, duplicate keys, empty buckets, negative weights), globally,
+    descending and per group; bitlen == floor(log2)+1.  The two-pass
+    machinery must be indistinguishable from the single-partition
+    windows it replaces (the r11 global-window sweep rides on this
+    equivalence)."""
+    from hq_master_data_warehouse_spark.functions.prefix import bitlen
+
+    df = _scan_df(spark, rows)
+    _assert_scan_matches_windows(
+        df,
+        [("w1", "c1"), ("w2", "c2")],
+        lambda w: [
+            F.sum(c).over(w.rowsBetween(*_RUN)).cast("long")
+            for c in ("w1", "w2")
+        ],
+    )
+
+    bits = {
+        r.k: r.b
+        for r in df.select("k", bitlen(F.col("k")).alias("b")).collect()
+    }
+    for k, b in bits.items():
+        assert b == len(bin(k)[2:])  # floor(log2)+1, and 1 for k=0
+
+
+@settings(
+    max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(
     st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=1),  # group
-            st.integers(min_value=0, max_value=999),  # sort key
-            st.integers(min_value=-50, max_value=50),  # weight 1
-            st.integers(min_value=0, max_value=9),  # weight 2
+            st.integers(min_value=0, max_value=500),
+            st.integers(min_value=1, max_value=100),
         ),
         min_size=1,
         max_size=60,
     )
 )
-def test_distributed_cumsum_matches_window_forms(spark, rows):
-    """_global_cumsum == inclusive running SUM over the global order
-    (multiple sum columns at once, duplicate keys, empty buckets,
-    negative weights); _grouped_global_cumsum == the per-group window
-    form; _bitlen == floor(log2)+1.  The two-pass machinery must be
-    indistinguishable from the single-partition windows it replaces
-    (the r11 global-window sweep rides on this equivalence)."""
-    from pyspark.sql.window import Window
-
-    from hq_master_data_warehouse_spark.operators.analytics import (
-        _bitlen,
-        _global_cumsum,
-        _grouped_global_cumsum,
+def test_global_prefix_sum_matches_window_model(spark, rows):
+    """prefix_scan must equal the plain global cumulative window for
+    any data, including duplicate sort keys (id tie-break) and values
+    spanning several bands; pack_nextfit's EXCLUSIVE offsets (the
+    inclusive scan minus the row's own tokens, duplicate md5s broken
+    by doc_id) and pack ids must equal the window form."""
+    from hq_master_data_warehouse_spark.functions.prefix import prefix_scan
+    from hq_master_data_warehouse_spark.operators.text import (
+        PACK_BUDGET,
+        pack_nextfit,
     )
 
-    df = spark.createDataFrame(
-        [(g, k, i, w1, w2) for i, (g, k, w1, w2) in enumerate(rows)],
-        "g long, k long, i long, w1 long, w2 long",
-    )
-    # sparse buckets on purpose: floor(k/100) leaves most of 0..9
-    # empty on small samples, exercising the prefix join's gaps
+    data = [(i, k, v) for i, (k, v) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id long, k long, v long")
     got = {
-        (r.g, r.k, r.i, r.c1, r.c2)
-        for r in _global_cumsum(
+        r["id"]: r["cum"]
+        for r in prefix_scan(
             df,
             F.floor(F.col("k") / 100),
-            [F.col("k"), F.col("i")],
-            [("w1", "c1"), ("w2", "c2")],
+            [F.col("k"), F.col("id")],
+            [("v", "cum")],
         ).collect()
     }
-    w = Window.orderBy("k", "i").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    w = Window.orderBy("k", "id").rowsBetween(*_RUN)
+    expect = {
+        r["id"]: r["cum"]
+        for r in df.select("id", F.sum("v").over(w).alias("cum")).collect()
+    }
+    assert got == expect
+
+    # duplicate keys share an md5, so doc_id breaks the ties
+    docs = df.select(
+        F.col("id").alias("doc_id"),
+        F.md5(F.col("k").cast("string")).alias("h"),
+        (F.col("v") * 100).alias("n_tokens"),
     )
+    w_pack = Window.orderBy("h", "doc_id").rowsBetween(*_RUN)
+    off = F.sum("n_tokens").over(w_pack) - F.col("n_tokens")
     want = {
-        (r.g, r.k, r.i, r.c1, r.c2)
-        for r in df.select(
-            "g",
-            "k",
-            "i",
-            F.sum("w1").over(w).cast("long").alias("c1"),
-            F.sum("w2").over(w).cast("long").alias("c2"),
+        r.doc_id: (r.offset, r.pack_id)
+        for r in docs.select(
+            "doc_id",
+            off.alias("offset"),
+            F.floor(off / PACK_BUDGET).cast("long").alias("pack_id"),
         ).collect()
     }
-    assert got == want
-
-    got_g = {
-        (r.g, r.k, r.i, r.c1)
-        for r in _grouped_global_cumsum(
-            df,
-            ["g"],
-            F.floor(F.col("k") / 100),
-            [F.col("k"), F.col("i")],
-            [("w1", "c1")],
-        ).collect()
+    packed = {
+        r.doc_id: (r.offset, r.pack_id)
+        for r in pack_nextfit(docs).collect()
     }
-    wg = (
-        Window.partitionBy("g")
-        .orderBy("k", "i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want_g = {
-        (r.g, r.k, r.i, r.c1)
-        for r in df.select(
-            "g",
-            "k",
-            "i",
-            F.sum("w1").over(wg).cast("long").alias("c1"),
-        ).collect()
-    }
-    assert got_g == want_g
-
-    bits = {
-        r.k: r.b
-        for r in df.select(
-            "k", _bitlen(F.col("k")).alias("b")
-        ).collect()
-    }
-    for k, b in bits.items():
-        assert b == len(bin(k)[2:])  # floor(log2)+1, and 1 for k=0
+    assert packed == want
+    assert len(packed) == len(rows)
 
 
 # ---------------------------------------------------------------------------
@@ -419,55 +477,6 @@ def test_txn_log_checkpoint_fold_equals_full_fold(tmp_path_factory, actions, cp_
         assert key(live_files(d, v)) == before[v], (
             f"diverged at version {v} (checkpoint at {cp})"
         )
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=500),
-            st.integers(min_value=1, max_value=100),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_global_prefix_sum_matches_window_model(spark, rows):
-    """_global_prefix_sum (banded two-pass) must equal the plain
-    global cumulative window for any data, including duplicate sort
-    keys (id tie-break) and values spanning several bands."""
-    from pyspark.sql.window import Window
-
-    from hq_master_data_warehouse_spark.operators.analytics import (
-        _global_prefix_sum,
-    )
-
-    data = [(i, k, v) for i, (k, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id long, k long, v long")
-    got = {
-        r["id"]: r["cum"]
-        for r in _global_prefix_sum(
-            df,
-            F.floor(F.col("k") / 100),
-            [F.col("k"), F.col("id")],
-            "v",
-            "cum",
-        ).collect()
-    }
-    w = Window.orderBy("k", "id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    expect = {
-        r["id"]: r["cum"]
-        for r in df.select(
-            "id", F.sum("v").over(w).alias("cum")
-        ).collect()
-    }
-    assert got == expect
 
 
 # -- chain-fold cosine bit-exactness (round 9): the ANN oracles
