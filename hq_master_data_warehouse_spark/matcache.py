@@ -1,36 +1,40 @@
-"""Shared-intermediate materialization: build a DETERMINISTIC
-expensive intermediate once per input snapshot, parquet it under a
-content-derived key, and let every consumer read the materialized
-table.
+"""Staged inputs and shared intermediates: the one place that decides
+how a table derived from the fixtures is keyed, published under
+``/tmp`` and reused.
 
-Why: a handful of intermediates are consumed by several registered
-queries -- the ngram-Jaccard pair graph's connected components feed
-`dedup_duplicate_clusters`, `dedup_cluster_representatives` AND
-`split_leakage_safe`; the thresholded co-purchase graph's components
-feed `graph_connected_components` AND `graph_modularity_score`.
-Recomputing the iterative component propagation inside every consumer
-multiplies the most expensive driver-probed loops in the repo
-(VERDICT r9 items 3 and 6).  The production analogue is a
-materialized intermediate table in the lakehouse: the dedup graph is
-folded once per corpus snapshot, and clustering / representative
-selection / leakage-safe splitting all read the component table.  At
-100 TB this is not an optimization but the only sane shape -- nobody
-re-runs connected components per downstream query.
+Two kinds of derived table go through ``staged``:
 
-Correctness preconditions (why a disk cache cannot change results):
+- shared intermediates (``materialized``): a deterministic, expensive
+  table several registered queries consume -- the ngram-Jaccard pair
+  graph's connected components feed `dedup_duplicate_clusters`,
+  `dedup_cluster_representatives` AND `split_leakage_safe`; the
+  co-purchase pair table feeds the whole graph family.  Recomputing
+  the iterative component propagation inside every consumer
+  multiplies the most expensive driver-probed loops in the repo.  At
+  100 TB this is not an optimization but the only sane shape --
+  nobody re-runs connected components per downstream query;
+- staged inputs: a fixture rewritten into the layout a query reads
+  (CSV/JSONL/ORC/fixed-width copies, a partitioned or fragmented
+  parquet, a file-stream drop box, a whole txn-log table).  The
+  builder writes anything into the directory it is handed.
 
-- the builder must be deterministic in its inputs (min-label CC is:
-  the component id is the minimum reachable node id, independent of
-  iteration order or partitioning);
-- the cache key includes the INPUT IDENTITY (path + mtime + size of
-  every input file), an algorithm-version tag (bump it when the
-  builder changes), and every parameter that shapes the output.
+Rules (why a staged table cannot serve stale or partial data):
 
-Atomicity under concurrent builders (pytest workers, bench + gate):
-build into a per-writer tmp dir and ``os.rename`` into place -- a
-reader never observes a partial table, and a losing builder deletes
-its own tmp.  Same discipline as the txn-log commit primitive
-(sources/txn_log.py).
+- key: the caller's key parts carry the INPUT IDENTITY
+  (``input_sig``: path + mtime + size of every input data file) and
+  every parameter that shapes the output; the key also folds the
+  source code of the builder and of its module (``_code_sig``), so a
+  logic edit rebuilds without a hand-bumped version tag;
+- publish: the builder writes a per-build tmp dir (a fresh uuid, so no
+  later build reuses a name a plan memo may still hold) that is
+  renamed into place -- a reader never observes a partial table;
+- race: a losing builder deletes its own tmp; a failed rename
+  re-raises unless a concurrent winner's table exists.
+
+The builder must be deterministic in its inputs (min-label CC is: the
+component id is the minimum reachable node id, independent of
+iteration order or partitioning), so whichever concurrent builder wins
+publishes the same rows.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ import inspect
 import os
 import shutil
 import tempfile
-import threading
+import uuid
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,13 +77,25 @@ def _code_sig(fn: Callable) -> str:
 
 
 def input_sig(*paths: str) -> str:
-    """Identity of input files/dirs: path + mtime_ns + size.  A
-    regenerated fixture (new mtime) invalidates the cache instead of
-    silently serving stale components."""
+    """Identity of input files/dirs: path + mtime_ns + size, and for a
+    directory (a multi-part parquet) the relative name, size and
+    mtime_ns of every data file under it -- a part rewritten in place
+    leaves the directory's own stat unchanged.  A regenerated fixture
+    invalidates the key instead of silently serving stale rows."""
     sigs = []
     for p in paths:
         st = os.stat(p)
         sigs.append(f"{os.path.abspath(p)}:{st.st_mtime_ns}:{st.st_size}")
+        for root, _, files in sorted(os.walk(p)):
+            for name in sorted(files):
+                if name.startswith(("_", ".")):
+                    continue
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                sigs.append(
+                    f"{os.path.relpath(full, p)}:{fst.st_size}:"
+                    f"{fst.st_mtime_ns}"
+                )
     return "|".join(sigs)
 
 
@@ -87,30 +103,22 @@ def table_sig(sf_dir: str, table: str) -> str:
     return input_sig(os.path.join(sf_dir, f"{table}.parquet"))
 
 
-def materialized(
-    spark: SparkSession,
-    tag: str,
-    key_parts: Iterable,
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """Return the materialized result of ``build()`` for this key,
-    building it exactly once per (key_parts, builder-code) on this
-    host.  The key folds in ``_code_sig(build)`` so editing the
-    builder's logic (or its module) invalidates the cache without a
-    manual tag bump (ADVICE r10); a callable key part folds in its
-    own code the same way, for a builder that calls into another
-    module."""
+def staged(
+    tag: str, key_parts: Iterable, build_into: Callable[[str], None]
+) -> str:
+    """Path of the table ``build_into(tmp)`` writes for this key,
+    building it at most once per (key_parts, builder code) on this
+    host.  A callable key part folds in its own code the same way, for
+    a builder that calls into another module."""
     parts = [_code_sig(p) if callable(p) else str(p) for p in key_parts]
     key = hashlib.md5(
-        ":".join([*parts, _code_sig(build)]).encode()
+        ":".join([*parts, _code_sig(build_into)]).encode()
     ).hexdigest()[:12]
-    final = os.path.join(
-        tempfile.gettempdir(), f"hqmdw_mat_{tag}_{key}"
-    )
+    final = os.path.join(tempfile.gettempdir(), f"hqmdw_mat_{tag}_{key}")
     if not os.path.isdir(final):
-        tmp = f"{final}.tmp{os.getpid()}-{threading.get_ident()}"
-        build().write.mode("overwrite").parquet(tmp)
+        tmp = f"{final}.tmp{uuid.uuid4().hex}"
         try:
+            build_into(tmp)
             os.rename(tmp, final)
         except OSError:
             # Swallow the error ONLY when a concurrent builder
@@ -120,7 +128,27 @@ def materialized(
             # reason (EXDEV, permissions) must surface HERE, not as
             # an unrelated-looking read error on a missing path
             # (ADVICE r10).
-            shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.isdir(final):
                 raise
-    return read_parquet(spark, final)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return final
+
+
+def materialized(
+    spark: SparkSession,
+    tag: str,
+    key_parts: Iterable,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The parquet-staged result of ``build()`` for this key; the key
+    folds ``build``'s code, so editing the builder's logic (or its
+    module) invalidates the table without a manual tag bump."""
+    return read_parquet(
+        spark,
+        staged(
+            tag,
+            [*key_parts, build],
+            lambda tmp: build().write.parquet(tmp),
+        ),
+    )

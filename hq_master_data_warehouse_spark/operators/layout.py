@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dec_sum, dec_sum_sql
+from ..matcache import staged, table_sig
 from ..registry import query
 from ..sources.loaders import load_table, read_parquet
 
@@ -124,14 +125,13 @@ def compact_parquet(
 
 
 def _fragmented_orders(spark: SparkSession, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"hqmdw_frag_{tag}")
-    if not os.path.exists(path):
-        load_table(spark, sf_dir, "orders").repartition(
-            FRAGMENT_PARTS
-        ).write.mode("overwrite").parquet(path + ".tmp")
-        os.rename(path + ".tmp", path)
-    return path
+    return staged(
+        "frag_orders",
+        [table_sig(sf_dir, "orders")],
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .repartition(FRAGMENT_PARTS)
+        .write.parquet(tmp),
+    )
 
 
 @query(

@@ -13,9 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: local cores: SPARK_GRAFT_CPUS, else the cores this process may run on
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # Keep shuffle partitions aligned with local core count during tests;
 # on a real cluster this is superseded by AQE coalescing anyway.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = CPUS
 
 
 def get_spark(
@@ -233,5 +235,4 @@ def fan_out_keyed(df, *keys):
 
 def get_test_spark() -> SparkSession:
     """Session for pytest / local iteration: local[N] single JVM."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return get_spark(master=f"local[{cpus}]")
+    return get_spark(master=f"local[{CPUS}]")

@@ -5,7 +5,8 @@ JSONL, and lays out hot tables partitioned by their dominant filter
 key so scans prune whole directories.
 
 Each query here round-trips fixture data through the format under
-test into a session-scoped temp dir, reads it back with an explicit
+test into a table staged once per input snapshot
+(``matcache.staged``), reads it back with an explicit
 schema (schema-on-read, never inference in production paths), and
 aggregates -- the DuckDB oracle runs on the original parquet, so the
 round-trip itself is what's being checked.
@@ -20,21 +21,13 @@ files before reading a byte.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dec_sum, dec_sum_sql
+from ..matcache import staged, table_sig
 from ..registry import query
 from .loaders import load_table, read_parquet
-
-
-def _stage_dir(kind: str, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"hqmdw_{kind}_{tag}")
 
 
 ORDERS_DDL = (
@@ -56,12 +49,13 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → CSV (header, ISO timestamps) → schema-on-read → agg.
     The oracle runs on the original parquet, so any loss in the CSV
     round-trip (quoting, timestamp format, nulls) fails the hash."""
-    path = _stage_dir("csv_orders", sf_dir)
-    if not os.path.exists(path):
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").option(
-            "header", True
-        ).csv(path + ".tmp")
-        os.rename(path + ".tmp", path)
+    path = staged(
+        "csv_orders",
+        [table_sig(sf_dir, "orders")],
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .write.option("header", True)
+        .csv(tmp),
+    )
     orders = (
         spark.read.schema(ORDERS_DDL)
         .option("header", True)
@@ -85,12 +79,11 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → JSON-lines → schema-on-read → agg (the batch twin of
     the webhook ingest path, S10)."""
-    path = _stage_dir("jsonl_orders", sf_dir)
-    if not os.path.exists(path):
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").json(
-            path + ".tmp"
-        )
-        os.rename(path + ".tmp", path)
+    path = staged(
+        "jsonl_orders",
+        [table_sig(sf_dir, "orders")],
+        lambda tmp: load_table(spark, sf_dir, "orders").write.json(tmp),
+    )
     orders = spark.read.schema(ORDERS_DDL).json(path)
     return orders.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -134,18 +127,15 @@ def source_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """orders re-laid-out as year-partitioned parquet (staged once per
-    sf_dir per machine)."""
-    path = _stage_dir("part_orders", sf_dir)
-    if not os.path.exists(path):
-        (
-            load_table(spark, sf_dir, "orders")
-            .withColumn("order_year", F.year("o_orderdate"))
-            .write.mode("overwrite")
-            .partitionBy("order_year")
-            .parquet(path + ".tmp")
-        )
-        os.rename(path + ".tmp", path)
-    return path
+    input snapshot per machine)."""
+    return staged(
+        "part_orders",
+        [table_sig(sf_dir, "orders")],
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .withColumn("order_year", F.year("o_orderdate"))
+        .write.partitionBy("order_year")
+        .parquet(tmp),
+    )
 
 
 @query(
@@ -163,12 +153,11 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format a warehouse must speak (stripe stats + predicate pushdown,
     same scan properties as parquet); the oracle runs on the original
     parquet so any type drift in the round-trip fails the hash."""
-    path = _stage_dir("orc_orders", sf_dir)
-    if not os.path.exists(path):
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(
-            path + ".tmp"
-        )
-        os.rename(path + ".tmp", path)
+    path = staged(
+        "orc_orders",
+        [table_sig(sf_dir, "orders")],
+        lambda tmp: load_table(spark, sf_dir, "orders").write.orc(tmp),
+    )
     orders = spark.read.orc(path)
     return orders.groupBy(
         F.year("o_orderdate").cast("int").alias("order_year")
@@ -196,17 +185,15 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Merging only reconciles footers (per-file metadata), not data, so
     cost is O(files); production keeps it off and pins the merged
     schema in the catalog after the first evolution."""
-    path = _stage_dir("evolve_nation", sf_dir)
-    if not os.path.exists(path):
+
+    def build_into(tmp: str) -> None:
         nation = load_table(spark, sf_dir, "nation")
-        tmp = path + ".tmp"
-        nation.select("n_nationkey", "n_name").write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        nation.select("n_nationkey", "n_name").write.parquet(tmp)
         nation.select("n_nationkey", "n_regionkey").write.mode(
             "append"
         ).parquet(tmp)
-        os.rename(tmp, path)
+
+    path = staged("evolve_nation", [table_sig(sf_dir, "nation")], build_into)
     return (
         spark.read.option("mergeSchema", True)
         .parquet(path)
@@ -245,8 +232,8 @@ def source_fixedwidth_roundtrip(
     like CSV.  The oracle runs on the original parquet, so any
     truncation or pad/trim loss in the round-trip fails the hash.
     """
-    path = _stage_dir("fixedwidth_customer", sf_dir)
-    if not os.path.exists(path):
+
+    def build_into(tmp: str) -> None:
         line = F.format_string(
             "%-12s%-25s%-6s%12.2f%-10s",
             F.col("c_custkey").cast("string"),
@@ -257,8 +244,11 @@ def source_fixedwidth_roundtrip(
         )
         load_table(spark, sf_dir, "customer").select(
             line.alias("value")
-        ).write.mode("overwrite").text(path + ".tmp")
-        os.rename(path + ".tmp", path)
+        ).write.text(tmp)
+
+    path = staged(
+        "fixedwidth_customer", [table_sig(sf_dir, "customer")], build_into
+    )
     raw = spark.read.text(path)
     parsed = raw.select(
         F.trim(F.substring("value", 1, 12)).cast("long").alias(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..matcache import staged, table_sig
 from ..registry import query
 from ..schemas import PEOPLE_FIELDS
 from .loaders import load_table
@@ -128,47 +129,21 @@ def ingest_quarantine_bad_records(
     aborts a 1000-executor job for one bad byte; DROPMALFORMED loses
     evidence).  Returns one row per outcome with counts; the parity
     pytest pins exact clean/quarantined numbers."""
-    import os
-    import tempfile
 
-    import hashlib as _h
-
-    # Staging tag keyed on fixture CONTENT (size+mtime of the events
-    # parquet), not just the directory name: regenerating the fixture
-    # at the same path invalidates the cache instead of serving a
-    # stale feed whose clean count diverges from the fresh oracle.
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        stamp = sf_dir
-    tag = _h.md5(stamp.encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"hqmdw_quarantine_{tag}_dir"
-    )
-    if not os.path.exists(path):
+    def build_into(tmp: str) -> None:
         # Stage the feed DISTRIBUTED (df.write, not a driver collect
         # loop): clean rows land as executor-written part files; the
         # poison-pill lines are appended as one extra small file in
         # the same directory -- the JSON reader lists the directory,
-        # so the union is the feed.  Write-then-rename keeps the
-        # staging atomic for concurrent callers.
-        tmp = path + ".tmp"
-        (
-            load_table(spark, sf_dir, "events")
-            .select(
-                F.to_json(
-                    F.struct("event_id", "user_id", "event_type")
-                ).alias("value")
-            )
-            .write.mode("overwrite")
-            .text(tmp)
-        )
-        with open(os.path.join(tmp, "bad_records.jsonl"), "w") as f:
+        # so the union is the feed.
+        load_table(spark, sf_dir, "events").select(
+            F.to_json(F.struct("event_id", "user_id", "event_type"))
+        ).write.text(tmp)
+        with open(f"{tmp}/bad_records.jsonl", "w") as f:
             for _ in range(QUARANTINE_BAD_ROWS):
                 f.write('{"event_id": 12, "user_id": ???}\n')
-        os.rename(tmp, path)
+
+    path = staged("quarantine", [table_sig(sf_dir, "events")], build_into)
     feed = (
         spark.read.schema(
             "event_id BIGINT, user_id BIGINT, event_type STRING, "

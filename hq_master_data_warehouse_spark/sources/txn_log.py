@@ -43,12 +43,10 @@ predicate over a key-clustered table reads ~1% of files.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
 import shutil
-import tempfile
 import threading
 import time
 
@@ -56,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dec_sum, dec_sum_sql
+from ..matcache import staged, table_sig
 from ..session import local_df
 from ..registry import query
 from .loaders import AppPlanMemo, load_table, read_parquet
@@ -80,21 +79,6 @@ def _scan_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     return _SCAN_MEMO.get(
         spark, tuple(sorted(paths)), lambda: read_parquet(spark, *paths)
     )
-
-
-def _table_dir(sf_dir: str, variant: str = "") -> str:
-    # the layout constant is part of the tag so a keyspan change
-    # invalidates stale stagings instead of silently reusing them;
-    # ``variant`` gives mutating queries (compaction) a private
-    # instance so they never perturb the shared staged fixture
-    # "L3" = staging-layout generation (r8: distributed bucketed
-    # writes, nested <prefix>/_b=N paths; r11: the v3 update wave
-    # joined the fixture); bumping it orphans any stale staging
-    # instead of silently reusing it
-    tag = hashlib.md5(
-        f"{sf_dir}:{FILE_KEYSPAN}:L3:{variant}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"hqmdw_txn_{tag}")
 
 
 def action_path(table_dir: str, version: int, kind: str = "json") -> str:
@@ -443,54 +427,54 @@ def _stage_txn_table(
     """The v0-v3 history both fixture tables share: ``born_price`` is
     the o_totalprice of a row when it is (re-)inserted at v0/v2,
     ``v3_price`` its value after the v3 update wave."""
-    table_dir = _table_dir(sf_dir, variant)
-    done = os.path.join(table_dir, "_ready")
-    if os.path.exists(done):
-        return table_dir
-    born = load_table(spark, sf_dir, "orders").withColumn(
-        "o_totalprice", born_price
+
+    def build_into(table_dir: str) -> None:
+        born = load_table(spark, sf_dir, "orders").withColumn(
+            "o_totalprice", born_price
+        )
+        os.makedirs(table_dir)
+
+        # v0: key-clustered initial files -- one distributed write for
+        # the whole bucket set (not a per-bucket driver loop; see
+        # _write_bucketed)
+        adds = _write_bucketed(born, table_dir, "data-v0")
+        commit_batch_idempotent(table_dir, 0, adds, [])
+
+        # v1: delete keys % DEL_MOD == 0 -- every file contains such
+        # keys, so the rewrite touches all of them and runs as one
+        # distributed bucketed write too (partition-pruned rewrite of a
+        # TOUCHED SUBSET is exercised separately in operators/ledger.py)
+        kept = read_snapshot(spark, table_dir, 0).filter(
+            F.col("o_orderkey") % DEL_MOD != 0
+        )
+        adds1 = _write_bucketed(kept, table_dir, "data-v1")
+        removes1 = [info["path"] for info in live_files(table_dir, 0)]
+        commit_batch_idempotent(table_dir, 1, adds1, removes1)
+
+        # v2: re-insert the even half of what v1 deleted, as one append
+        readd = born.filter(F.col("o_orderkey") % READD_MOD == 0)
+        adds2 = [_write_file(readd, table_dir, "data-v2-readd")]
+        commit_batch_idempotent(table_dir, 2, adds2, [])
+
+        # v3: value-changing UPDATE -- the %UPD_MOD==UPD_REM keys sit in
+        # every live file, so the contract-compliant rewrite (a writer
+        # changing a key's row rewrites the file holding it) touches the
+        # whole head; one distributed bucketed write, all prior files
+        # removed.  Most rewritten rows are value-UNCHANGED, which is
+        # exactly the case that distinguishes update rows from
+        # rewritten-unchanged noise in the change feed.
+        updated = read_snapshot(spark, table_dir, 2).withColumn(
+            "o_totalprice", v3_price
+        )
+        adds3 = _write_bucketed(updated, table_dir, "data-v3")
+        removes3 = [info["path"] for info in live_files(table_dir, 2)]
+        commit_batch_idempotent(table_dir, 3, adds3, removes3)
+
+    return staged(
+        "txn",
+        [table_sig(sf_dir, "orders"), variant, str(born_price), str(v3_price)],
+        build_into,
     )
-    os.makedirs(table_dir, exist_ok=True)
-
-    # v0: key-clustered initial files -- one distributed write for
-    # the whole bucket set (not a per-bucket driver loop; see
-    # _write_bucketed)
-    adds = _write_bucketed(born, table_dir, "data-v0")
-    commit_batch_idempotent(table_dir, 0, adds, [])
-
-    # v1: delete keys % DEL_MOD == 0 -- every file contains such
-    # keys, so the rewrite touches all of them and runs as one
-    # distributed bucketed write too (partition-pruned rewrite of a
-    # TOUCHED SUBSET is exercised separately in operators/ledger.py)
-    kept = read_snapshot(spark, table_dir, 0).filter(
-        F.col("o_orderkey") % DEL_MOD != 0
-    )
-    adds1 = _write_bucketed(kept, table_dir, "data-v1")
-    removes1 = [info["path"] for info in live_files(table_dir, 0)]
-    commit_batch_idempotent(table_dir, 1, adds1, removes1)
-
-    # v2: re-insert the even half of what v1 deleted, as one append
-    readd = born.filter(F.col("o_orderkey") % READD_MOD == 0)
-    adds2 = [_write_file(readd, table_dir, "data-v2-readd")]
-    commit_batch_idempotent(table_dir, 2, adds2, [])
-
-    # v3: value-changing UPDATE -- the %UPD_MOD==UPD_REM keys sit in
-    # every live file, so the contract-compliant rewrite (a writer
-    # changing a key's row rewrites the file holding it) touches the
-    # whole head; one distributed bucketed write, all prior files
-    # removed.  Most rewritten rows are value-UNCHANGED, which is
-    # exactly the case that distinguishes update rows from
-    # rewritten-unchanged noise in the change feed.
-    updated = read_snapshot(spark, table_dir, 2).withColumn(
-        "o_totalprice", v3_price
-    )
-    adds3 = _write_bucketed(updated, table_dir, "data-v3")
-    removes3 = [info["path"] for info in live_files(table_dir, 2)]
-    commit_batch_idempotent(table_dir, 3, adds3, removes3)
-
-    with open(done, "w") as f:
-        f.write("ok")
-    return table_dir
 
 
 _AGG_SQL = """
@@ -1237,9 +1221,9 @@ def vacuum_table(
         deleted.append(rel)
 
     for name in sorted(os.listdir(table_dir)):
-        # "_"-prefixed entries are table metadata (the commit log,
-        # the staging-complete marker), never data -- same convention
-        # as production formats' _delta_log/_metadata dirs
+        # "_"-prefixed entries are table metadata (the commit log),
+        # never data -- same convention as production formats'
+        # _delta_log/_metadata dirs
         if (
             name.startswith("_")
             or name.endswith(".tmp")

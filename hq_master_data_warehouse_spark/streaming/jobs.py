@@ -22,16 +22,15 @@ reference (T2, clay-webhook/index.ts:115-125).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..matcache import staged, table_sig
 from ..registry import query
 from ..sources.loaders import load_table, normalize_event_ts, read_parquet
 
@@ -188,71 +187,39 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded source (T1).  File-drop source in
     tests; Kafka in production -- the downstream plan is identical."""
     raw_schema = _events_raw_schema_ddl(spark, sf_dir)
-    # The file stream source lists a DIRECTORY (the drop-box contract,
-    # T1); stage the fixture file into one, keyed by sf_dir PLUS a
-    # layout/content generation token (part names, sizes, mtimes) so a
-    # REGENERATED fixture -- different bytes or part count at the same
-    # path -- gets a fresh drop box instead of silently reusing stale
-    # parts (ADVICE r8; txn_log's 'L2' layout bump, same hazard).
+    return normalize_event_ts(
+        spark.readStream.schema(raw_schema).parquet(_drop_box(sf_dir))
+    )
+
+
+def _drop_box(sf_dir: str, copies: int = 1) -> str:
+    """events.parquet staged as a file-stream drop box (the file source
+    lists a DIRECTORY, T1): ``copies`` copies of every data file, flat
+    -- the source lists the box non-recursively, and the derived sf1 is
+    a parquet DIRECTORY, not a single file.  Staged once per input
+    snapshot (``matcache.staged``): a regenerated fixture gets a fresh
+    box, and a concurrent stager never touches a published one."""
     src = f"{sf_dir}/events.parquet"
+    parts = [src]
     if os.path.isdir(src):
-        gen = ";".join(
-            f"{n}:{os.path.getsize(os.path.join(src, n))}:"
-            f"{os.stat(os.path.join(src, n)).st_mtime_ns}"
+        parts = [
+            f"{src}/{n}"
             for n in sorted(os.listdir(src))
             if n.endswith(".parquet")
-        )
-    else:
-        st = os.stat(src)
-        gen = f"file:{st.st_size}:{st.st_mtime_ns}"
-    tag = hashlib.md5(f"{sf_dir}|{gen}".encode()).hexdigest()[:12]
-    drop_dir = os.path.join(tempfile.gettempdir(), f"hqmdw_events_{tag}")
-    done = os.path.join(drop_dir, "_staged")
-    if not os.path.exists(done):
-        # Stage into a PER-WRITER tmp dir and atomically rename into
-        # place (ADVICE r9): the old in-place restage rmtree'd the
-        # SHARED box whenever the marker was absent, so two
-        # concurrent stagers (parallel pytest workers, bench + gate)
-        # could delete files mid-copy or out from under a just-
-        # started stream.  With the rename, the final path either
-        # does not exist or is a COMPLETE box (marker written before
-        # the rename); a losing stager just discards its tmp.
-        tmp = f"{drop_dir}.tmp{os.getpid()}-{threading.get_ident()}"
-        os.makedirs(tmp, exist_ok=True)
-        if os.path.isdir(src):
-            # multi-part fixture (e.g. the derived sf1 is a parquet
-            # DIRECTORY, not a single file): stage every part flat
-            # into the drop box -- the file-stream source lists it
-            # non-recursively.  "_"-prefixed files are invisible to
-            # the source.
-            for i, name in enumerate(sorted(os.listdir(src))):
-                if not name.endswith(".parquet"):
-                    continue
-                shutil.copyfile(
-                    os.path.join(src, name),
-                    os.path.join(tmp, f"part-{i:05d}.parquet"),
-                )
-        else:
-            shutil.copyfile(src, os.path.join(tmp, "events.parquet"))
-        with open(os.path.join(tmp, "_staged"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp, drop_dir)
-        except OSError:
-            # the path is occupied: by a concurrent stager's COMPLETE
-            # box (marker present -- use it), or by a markerless
-            # half-box from a crashed PRE-RENAME-ERA run (clear it
-            # and retry once; current-era crashes only ever leave
-            # .tmp siblings behind)
-            if not os.path.exists(done):
-                shutil.rmtree(drop_dir, ignore_errors=True)
-                try:
-                    os.rename(tmp, drop_dir)
-                except OSError:
-                    pass  # lost the retry race; winner's box stands
-            shutil.rmtree(tmp, ignore_errors=True)
-    return normalize_event_ts(
-        spark.readStream.schema(raw_schema).parquet(drop_dir)
+        ]
+    if copies > 1 and len(parts) > 1:
+        # the multi-copy sinks read one copy per micro-batch
+        # (maxFilesPerTrigger=1), which needs a single-file feed
+        raise ValueError(f"{src}: a {copies}-copy drop box needs one file")
+
+    def build_into(tmp: str) -> None:
+        os.makedirs(tmp)
+        for c in range(copies):
+            for i, part in enumerate(parts):
+                shutil.copyfile(part, f"{tmp}/part-{c}-{i:05d}.parquet")
+
+    return staged(
+        "events_box", [table_sig(sf_dir, "events"), copies], build_into
     )
 
 
@@ -643,13 +610,6 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_schema = _events_raw_schema_ddl(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    drop_dir = os.path.join(tempfile.gettempdir(), f"hqmdw_upsert_in_{run}")
-    os.makedirs(drop_dir, exist_ok=True)
-    for i in (1, 2):
-        shutil.copyfile(
-            f"{sf_dir}/events.parquet",
-            os.path.join(drop_dir, f"events_{i}.parquet"),
-        )
     target = os.path.join(tempfile.gettempdir(), f"hqmdw_upsert_tgt_{run}")
 
     def latest_per_key(df: DataFrame) -> DataFrame:
@@ -678,7 +638,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(drop_dir)
+        .parquet(_drop_box(sf_dir, copies=2))
     )
     q = (
         stream.writeStream.foreachBatch(merge)
@@ -763,15 +723,6 @@ def streaming_egress_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_schema = _events_raw_schema_ddl(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    drop_dir = os.path.join(
-        tempfile.gettempdir(), f"hqmdw_retry_in_{run}"
-    )
-    os.makedirs(drop_dir, exist_ok=True)
-    for i in (1, 2):
-        shutil.copyfile(
-            f"{sf_dir}/events.parquet",
-            os.path.join(drop_dir, f"events_{i}.parquet"),
-        )
     audit_dir = os.path.join(
         tempfile.gettempdir(), f"hqmdw_retry_audit_{run}"
     )
@@ -810,7 +761,7 @@ def streaming_egress_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(drop_dir)
+        .parquet(_drop_box(sf_dir, copies=2))
     )
     q = (
         stream.writeStream.foreachBatch(deliver)
@@ -859,16 +810,6 @@ def streaming_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_schema = _events_raw_schema_ddl(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    drop_dir = os.path.join(
-        tempfile.gettempdir(), f"hqmdw_txnsink_in_{run}"
-    )
-    os.makedirs(drop_dir, exist_ok=True)
-    # two copies + maxFilesPerTrigger=1 => two real micro-batches
-    for i in (1, 2):
-        shutil.copyfile(
-            f"{sf_dir}/events.parquet",
-            os.path.join(drop_dir, f"events_{i}.parquet"),
-        )
     table_dir = os.path.join(
         tempfile.gettempdir(), f"hqmdw_txnsink_tbl_{run}"
     )
@@ -891,7 +832,7 @@ def streaming_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(drop_dir)
+        .parquet(_drop_box(sf_dir, copies=2))
     )
     q = (
         stream.writeStream.foreachBatch(commit_batch)

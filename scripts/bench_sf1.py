@@ -32,11 +32,10 @@ sys.path.insert(
 )
 
 from hq_master_data_warehouse_spark import registry
-from hq_master_data_warehouse_spark.session import get_spark
+from hq_master_data_warehouse_spark.session import CPUS, get_spark
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.data/sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: the heaviest headline queries whose cost scales with INPUT size.
 #: Near-dup/contamination text ops are excluded: the sf1 derivation
@@ -216,9 +215,9 @@ def delta_roundtrip(spark, sf_dir: str) -> tuple[float, int, int]:
     yields ~18k files and the whole lifecycle must stay minutes-free
     because every data pass is ONE distributed job."""
     import shutil
+    import uuid
 
     from hq_master_data_warehouse_spark.sources.txn_log import (
-        _table_dir,
         build_txn_table,
         compact_table,
         live_files,
@@ -228,8 +227,8 @@ def delta_roundtrip(spark, sf_dir: str) -> tuple[float, int, int]:
         read_delta_export,
     )
 
-    variant = "bench-sf1-delta"
-    shutil.rmtree(_table_dir(sf_dir, variant), ignore_errors=True)
+    # a variant no earlier run staged, so the build is always timed
+    variant = f"bench-sf1-delta-{uuid.uuid4().hex}"
     t0 = time.perf_counter()
     d = build_txn_table(spark, sf_dir, variant=variant)
     n_files = len(live_files(d, 1))

@@ -35,10 +35,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from hq_master_data_warehouse_spark import registry  # noqa: E402
-from hq_master_data_warehouse_spark.session import get_spark  # noqa: E402
+from hq_master_data_warehouse_spark.session import CPUS, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _materialize(df) -> None:

@@ -1,12 +1,15 @@
-"""Shared-intermediate materialization (matcache): atomicity under
-concurrent builders, key sensitivity, and build-once semantics."""
+"""Staged inputs and shared intermediates (matcache): atomicity under
+concurrent builders, key sensitivity (a regenerated input re-stages),
+and build-once semantics."""
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 import tempfile
 import threading
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -14,6 +17,7 @@ from hq_master_data_warehouse_spark.matcache import (
     input_sig,
     materialized,
 )
+from tests.conftest import SF_DIR_001
 
 
 def _final_dirs(tag: str) -> list[str]:
@@ -23,8 +27,6 @@ def _final_dirs(tag: str) -> list[str]:
 
 
 def _clear(tag: str) -> None:
-    import shutil
-
     for d in glob.glob(
         os.path.join(tempfile.gettempdir(), f"hqmdw_mat_{tag}_*")
     ) + glob.glob(
@@ -140,3 +142,100 @@ def test_failed_rename_reraises_when_no_winner(spark, monkeypatch):
             lambda: spark.range(3).select(F.col("id").alias("v")),
         )
     _clear(tag)
+
+
+def test_input_sig_sees_a_part_rewritten_inside_a_dir(tmp_path):
+    """A multi-part parquet input is a DIRECTORY: rewriting one part
+    in place leaves the directory's own stat unchanged, so the
+    signature must fold every data file's name, size and mtime."""
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x")
+    (d / "part-1.parquet").write_bytes(b"y")
+    s1 = input_sig(str(d))
+    (d / "part-1.parquet").write_bytes(b"yy")
+    assert input_sig(str(d)) != s1
+
+
+def _sf_copy(tmp_path, *tables: str) -> str:
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in tables:
+        shutil.copyfile(
+            os.path.join(SF_DIR_001, f"{t}.parquet"),
+            os.path.join(sf, f"{t}.parquet"),
+        )
+    return sf
+
+
+def _staged_dirs(df) -> set[str]:
+    """The dirs a staging query's scan reads: its staged table."""
+    return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+
+
+def test_staged_input_follows_a_regenerated_fixture(spark, tmp_path):
+    """A fixture regenerated at the same path (orders halved) must be
+    re-staged: the stager keys on the input's content identity, not
+    on the sf dir's name."""
+    import pyarrow.parquet as pq
+
+    from hq_master_data_warehouse_spark.sources.formats import (
+        source_csv_roundtrip,
+    )
+
+    sf = _sf_copy(tmp_path, "orders", "customer", "nation")
+    orders = os.path.join(sf, "orders.parquet")
+    n = pq.read_metadata(orders).num_rows
+    staged = set()
+    try:
+        first = source_csv_roundtrip(spark, sf)
+        staged |= _staged_dirs(first)
+        assert sum(r.n_orders for r in first.collect()) == n
+        half = pq.read_table(orders).slice(0, n // 2)
+        pq.write_table(half, orders, coerce_timestamps="us")
+        second = source_csv_roundtrip(spark, sf)
+        staged |= _staged_dirs(second)
+        assert sum(r.n_orders for r in second.collect()) == n // 2
+    finally:
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_concurrent_first_calls_share_one_complete_staging(
+    spark, tmp_path
+):
+    """4 threads making the first call of a staging query together
+    must all succeed and read exactly the source rows from ONE
+    published table: each builder writes its own tmp dir, and the
+    losers discard theirs."""
+    import pyarrow.parquet as pq
+
+    from hq_master_data_warehouse_spark.sources.formats import (
+        source_orc_roundtrip,
+    )
+
+    sf = _sf_copy(tmp_path, "orders")
+    n = pq.read_metadata(os.path.join(sf, "orders.parquet")).num_rows
+    counts, dirs, errs = [], set(), []
+
+    def run():
+        try:
+            df = source_orc_roundtrip(spark, sf)
+            dirs.update(_staged_dirs(df))
+            counts.append(sum(r.n_orders for r in df.collect()))
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    try:
+        assert not errs
+        assert counts == [n] * 4
+        assert len(dirs) == 1
+        assert not glob.glob(next(iter(dirs)) + ".tmp*")
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)

@@ -237,6 +237,77 @@ def test_only_txn_log_knows_the_log_layout():
     )
 
 
+#: engine functions besides matcache.py that may pick a /tmp path or
+#: rename a dir, and why each is not a staged input
+_TMP_PATH_USERS = {
+    ("streaming/jobs.py", "streaming_upsert_sink"): (
+        "its merge target is a per-call output dir; each micro-batch's "
+        "merge is written beside it and swapped in by rename"
+    ),
+    ("streaming/jobs.py", "streaming_egress_retry"): (
+        "its audit table is a per-call output dir"
+    ),
+    ("streaming/jobs.py", "streaming_txn_log_sink"): (
+        "its txn table is a per-call output dir the stream commits to"
+    ),
+    ("operators/layout.py", "layout_compact_small_files"): (
+        "the compaction output is the operation under test"
+    ),
+    ("operators/layout.py", "layout_dynamic_partition_overwrite"): (
+        "the dynamic-overwrite target is the operation under test"
+    ),
+    ("operators/layout.py", "_bucketed_table"): (
+        "the bucket metadata lives in the session catalog, not in the "
+        "files, so the table cannot be published by a rename"
+    ),
+}
+
+
+def _tmp_path_calls(tree) -> list[tuple[int, str]]:
+    """(line, enclosing top-level function) of every ``os.rename`` or
+    ``tempfile.gettempdir`` reference."""
+    hits = []
+
+    def visit(node, func):
+        if func == "<module>" and isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            func = node.name
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and (node.value.id, node.attr)
+            in {("os", "rename"), ("tempfile", "gettempdir")}
+        ):
+            hits.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, "<module>")
+    return hits
+
+
+def test_only_matcache_stages_under_tmp():
+    """``matcache.staged`` is the one place that decides where a
+    derived input lives under /tmp, when it is stale and how
+    concurrent builders are kept apart; a hand-rolled stager elsewhere
+    (its own path, its own shared ``.tmp`` and rename) must go through
+    it or be listed in _TMP_PATH_USERS with its reason."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = [
+        f"{rel}:{line} ({func})"
+        for path in sorted(pkg.rglob("*.py"))
+        if (rel := path.relative_to(pkg).as_posix()) != "matcache.py"
+        for line, func in _tmp_path_calls(
+            ast.parse(path.read_text(), str(path))
+        )
+        if (rel, func) not in _TMP_PATH_USERS
+    ]
+    assert not offenders, (
+        "/tmp staging outside matcache.staged: " + ", ".join(offenders)
+    )
+
+
 #: engine modules and functions that may spell prefix_scan's bucket
 #: column, and why
 _B_NAME_USERS = {

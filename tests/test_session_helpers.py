@@ -74,3 +74,27 @@ def test_winnowing_canon_stays_outside_window_lambda(spark):
     for line in plan.split("\n"):
         if "md5(" in line:
             assert "regexp_replace" not in line, line
+
+
+def test_default_cores_follow_the_process_affinity():
+    """Without SPARK_GRAFT_CPUS the local master and shuffle width are
+    the cores this process may run on, not a fixed count."""
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os; from hq_master_data_warehouse_spark import session"
+            " as s; print(s.CPUS, s.DEFAULT_SHUFFLE_PARTITIONS,"
+            " len(os.sched_getaffinity(0)))",
+        ],
+        env=env,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out[0] == out[1] == out[2]

@@ -280,9 +280,9 @@ def test_cms_one_sided_error_and_no_false_negatives(spark):
 def test_fixedwidth_roundtrip_lossless(spark):
     from hq_master_data_warehouse_spark.sources import formats
 
-    # run the query once so the staged text dir exists
-    formats.source_fixedwidth_roundtrip(spark, SF_DIR_001).collect()
-    path = formats._stage_dir("fixedwidth_customer", SF_DIR_001)
+    # the query's scan reads the staged text dir
+    files = formats.source_fixedwidth_roundtrip(spark, SF_DIR_001).inputFiles()
+    (path,) = {f.rsplit("/", 1)[0] for f in files}
     raw = spark.read.text(path)
     parsed = raw.select(
         F.trim(F.substring("value", 1, 12)).cast("long").alias("k"),

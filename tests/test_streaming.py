@@ -220,11 +220,14 @@ def test_concurrent_staging_never_deletes_a_live_box(spark, tmp_path):
     in-place rmtree+copy of the shared path -- N concurrent stagers of
     the same fresh fixture must all end up with ONE complete box and
     every reader must see a complete file set."""
+    import glob
     import os
     import shutil
+    import tempfile
     import threading
 
     from hq_master_data_warehouse_spark.streaming.jobs import (
+        _drop_box,
         _events_stream,
     )
 
@@ -234,6 +237,8 @@ def test_concurrent_staging_never_deletes_a_live_box(spark, tmp_path):
         "/root/testdata/sf0.001/events.parquet",
         os.path.join(sf, "events.parquet"),
     )
+    boxes = os.path.join(tempfile.gettempdir(), "hqmdw_mat_events_box_*")
+    before = set(glob.glob(boxes))
     errs = []
 
     def stage():
@@ -250,18 +255,14 @@ def test_concurrent_staging_never_deletes_a_live_box(spark, tmp_path):
         t.join()
     assert not errs
     # exactly one complete box for this fixture, no tmp leftovers
-    import glob
-    import hashlib
-    import tempfile
-
-    st = os.stat(os.path.join(sf, "events.parquet"))
-    gen = f"file:{st.st_size}:{st.st_mtime_ns}"
-    tag = hashlib.md5(f"{sf}|{gen}".encode()).hexdigest()[:12]
-    box = os.path.join(tempfile.gettempdir(), f"hqmdw_events_{tag}")
-    assert os.path.exists(os.path.join(box, "_staged"))
-    assert not glob.glob(box + ".tmp*")
-    # box is readable and complete
-    n = spark.read.parquet(box).count()
-    assert n == spark.read.parquet(
-        os.path.join(sf, "events.parquet")
-    ).count()
+    box = _drop_box(sf)
+    try:
+        assert set(glob.glob(boxes)) - before == {box}
+        assert not glob.glob(box + ".tmp*")
+        # box is readable and complete
+        n = spark.read.parquet(box).count()
+        assert n == spark.read.parquet(
+            os.path.join(sf, "events.parquet")
+        ).count()
+    finally:
+        shutil.rmtree(box, ignore_errors=True)

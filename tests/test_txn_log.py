@@ -240,20 +240,12 @@ def test_compact_refuses_never_committed_table(spark, tmp_path):
         compact_table(spark, d)
 
 
-def test_vacuum_destroys_history_but_not_head(spark):
-    import shutil
-
+def test_vacuum_destroys_history_but_not_head(spark, tmp_path):
     from hq_master_data_warehouse_spark.sources import txn_log
 
-    # staged fixtures persist in /tmp across sessions; a prior run's
-    # vacuum already removed the orphans, so always start fresh
-    shutil.rmtree(
-        txn_log._table_dir("/root/testdata/sf0.001", "vacuum-pytest"),
-        ignore_errors=True,
-    )
-    table_dir = txn_log.build_txn_table(
-        spark, "/root/testdata/sf0.001", variant="vacuum-pytest"
-    )
+    # vacuum a private copy: the staged fixture is shared
+    table_dir = str(tmp_path / "vac")
+    shutil.copytree(build_txn_table(spark, SF), table_dir)
     txn_log.compact_table(spark, table_dir)
     versions = txn_log.committed_versions(table_dir)
     head = versions[-1]
@@ -293,17 +285,15 @@ def test_vacuum_destroys_history_but_not_head(spark):
 
 
 def test_vacuum_mtime_guard_spares_young_files(spark, tmp_path):
-    import shutil
-
     from hq_master_data_warehouse_spark.sources import txn_log
 
-    shutil.rmtree(
-        txn_log._table_dir("/root/testdata/sf0.001", "vacuum-guard"),
-        ignore_errors=True,
-    )
-    table_dir = txn_log.build_txn_table(
-        spark, "/root/testdata/sf0.001", variant="vacuum-guard"
-    )
+    # a private copy of the shared fixture, every entry made young
+    # (copytree keeps the staged table's mtimes)
+    table_dir = str(tmp_path / "vac")
+    shutil.copytree(build_txn_table(spark, SF), table_dir)
+    for root, dirs, files in os.walk(table_dir):
+        for name in dirs + files:
+            os.utime(os.path.join(root, name))
     txn_log.compact_table(spark, table_dir)
     # everything on disk is young: a guarded vacuum must sweep nothing
     stats = txn_log.vacuum_table(
@@ -539,7 +529,7 @@ def test_empty_table_remove_raises_conflict_not_oserror(tmp_path):
 
 
 def test_pinned_reader_survives_concurrent_compact_and_guarded_vacuum(
-    spark,
+    spark, tmp_path
 ):
     """VERDICT r5 item 6: a reader pinned at version V must see a
     byte-stable snapshot while compaction commits a new version and
@@ -558,9 +548,7 @@ def test_pinned_reader_survives_concurrent_compact_and_guarded_vacuum(
     )
 
     src = build_txn_table(spark, SF, variant="rdr-src")
-    d = src + "-rdr"
-    if os.path.exists(d):
-        shutil.rmtree(d)
+    d = str(tmp_path / "rdr")
     shutil.copytree(src, d)
 
     pinned_v = committed_versions(d)[-1]
