@@ -20,10 +20,11 @@ Ground truth:
   (jaccard desc, a, b), cut at 25.  Same derivation as the r12 sf1
   value verification (ROUNDLOG r12).
 
-Run order per (N, sf): clearCache, cold timed collect, REST stage
-delta.  The shared matcache pair table is pre-built per SF so the A/B
-isolates the band count, not the once-per-snapshot substrate build
-(matching the bench cells' warm-substrate convention).
+Run order per (N, sf): clearCache, then one cold timed collect as one
+traced op, whose stage totals come from Spark's status store
+(``measure.traced``).  The shared matcache pair table is pre-built per
+SF so the A/B isolates the band count, not the once-per-snapshot
+substrate build (matching the bench cells' warm-substrate convention).
 """
 
 from __future__ import annotations
@@ -35,10 +36,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from measure import Tracer, traced  # noqa: E402
 from hq_master_data_warehouse_spark import registry  # noqa: E402
 from hq_master_data_warehouse_spark.operators import graph  # noqa: E402
+from hq_master_data_warehouse_spark.session import CPUS, get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(
@@ -51,30 +52,17 @@ N_REPLICAS = 10
 TOPK = 25
 
 
-def _completed_stages(spark) -> dict:
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    return {(s["stageId"], s["attemptId"]): s for s in stages}
-
-
-def _run_cell(spark, fn, sf_dir: str) -> tuple[list, float, dict]:
+def _run_cell(spark, tracer, fn, sf_dir: str) -> tuple[list, float, dict]:
     spark.catalog.clearCache()
-    before = set(_completed_stages(spark))
     t0 = time.perf_counter()
-    rows = fn(spark, sf_dir).collect()
+    rows, op, _ = traced(
+        tracer, fn.__name__, lambda: fn(spark, sf_dir).collect()
+    )
     dt = time.perf_counter() - t0
-    after = _completed_stages(spark)
-    new = [after[k] for k in after if k not in before]
-    tot = lambda f: sum(s.get(f, 0) for s in new)  # noqa: E731
     mets = {
-        "shuffle_write_mb": round(tot("shuffleWriteBytes") / 2**20, 1),
-        "memory_spilled_mb": round(tot("memoryBytesSpilled") / 2**20, 1),
-        "disk_spilled_mb": round(tot("diskBytesSpilled") / 2**20, 1),
+        "stages": op.attrs["stages"],
+        "shuffle_write_mb": round(op.attrs["shuffle_write_mb"], 1),
+        "disk_spilled_mb": round(op.attrs["spill_mb"], 1),
     }
     return rows, dt, mets
 
@@ -92,15 +80,10 @@ def _recall(rows, truth) -> dict:
 
 def main() -> None:
     registry.load_catalog()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "64g")
-        .config("spark.ui.enabled", "true")
-        .appName("ab-lp-bands")
-        .getOrCreate()
-    )
+    # driver memory: SPARK_GRAFT_DRIVER_MEM (session default 8g)
+    spark = get_spark(master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
+    tracer = Tracer(spark, enabled=True)
 
     # ground truth at sf0.1: the exact anchor
     t0 = time.perf_counter()
@@ -134,7 +117,7 @@ def main() -> None:
             ("sf1", SF1, truth1),
         ):
             rows, dt, mets = _run_cell(
-                spark, graph.graph_link_prediction_minhash, d
+                spark, tracer, graph.graph_link_prediction_minhash, d
             )
             cell = {
                 "wall_s": round(dt, 2),

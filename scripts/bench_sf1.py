@@ -11,6 +11,9 @@ DataFrame so AQE finalizes ITS plan (isFinalPlan=true) and the
 inspected shape reflects the runtime join-strategy decisions:
 broadcast vs sort-merge vs shuffled hash, skew-join activation.
 
+The memory/spill table runs each heavy-tail query once more as one
+traced op (``measure.traced``), read from Spark's status store.
+
 A query that REFUSES at a scale (a refuse-guard raising ValueError,
 e.g. the exact link-prediction wedge budget at sf1) records the
 refusal as the intended result, distinct from a FAIL.
@@ -31,6 +34,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from measure import Tracer, traced
 from hq_master_data_warehouse_spark import registry
 from hq_master_data_warehouse_spark.session import CPUS, get_spark
 
@@ -240,47 +244,27 @@ def delta_roundtrip(spark, sf_dir: str) -> tuple[float, int, int]:
     return round(dt, 2), n_files, n_rows
 
 
-def _completed_stages(spark) -> dict:
-    """Completed-stage metrics from the UI REST API (the session is
-    created with the UI on for exactly this purpose): stage key ->
-    {shuffle write/read bytes, memory/disk spill bytes}."""
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = _json.load(r)
+def memory_evidence(spark, tracer, name: str, sf_dir: str) -> dict:
+    """Run one cold pass of ``name`` as one traced op and return the
+    shuffle/spill totals of exactly the stages that pass executed
+    (VERDICT r9 item 5: the 100 TB narrative needs a memory story, not
+    just wall-clock).  Zero disk spill means the whole plan ran
+    in-memory at this scale."""
+    _, op, stages = traced(
+        tracer,
+        name,
+        lambda: registry.QUERIES[name](spark, sf_dir)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    peak = max((s["shuffle_write_bytes"] for s in stages), default=0)
     return {
-        (s["stageId"], s["attemptId"]): s for s in stages
-    }
-
-
-def memory_evidence(spark, name: str, sf_dir: str) -> dict:
-    """Run one cold pass of ``name`` and return the shuffle/spill
-    totals of exactly the stages that pass executed (VERDICT r9 item
-    5: the 100 TB narrative needs a memory story, not just
-    wall-clock).  memoryBytesSpilled/diskBytesSpilled == 0 means the
-    whole plan ran in-memory at this scale."""
-    before = set(_completed_stages(spark))
-    df = registry.QUERIES[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    after = _completed_stages(spark)
-    new = [after[k] for k in after if k not in before]
-    tot = lambda f: sum(s.get(f, 0) for s in new)  # noqa: E731
-    peak = lambda f: max((s.get(f, 0) for s in new), default=0)  # noqa: E731
-    return {
-        "stages": len(new),
-        "shuffle_write_mb": round(tot("shuffleWriteBytes") / 2**20, 1),
-        "peak_stage_shuffle_write_mb": round(
-            peak("shuffleWriteBytes") / 2**20, 1
-        ),
-        "shuffle_read_mb": round(tot("shuffleReadBytes") / 2**20, 1),
-        "memory_spilled_mb": round(
-            tot("memoryBytesSpilled") / 2**20, 1
-        ),
-        "disk_spilled_mb": round(tot("diskBytesSpilled") / 2**20, 1),
+        "stages": op.attrs["stages"],
+        "shuffle_write_mb": round(op.attrs["shuffle_write_mb"], 1),
+        "peak_stage_shuffle_write_mb": round(peak / 1e6, 1),
+        "shuffle_read_mb": round(op.attrs["shuffle_read_mb"], 1),
+        "disk_spilled_mb": round(op.attrs["spill_mb"], 1),
     }
 
 
@@ -323,12 +307,9 @@ def _clear_matcache() -> None:
 
 def main() -> None:
     registry.load_catalog()
-    # UI on: the REST stage API is the spill/shuffle evidence source
-    spark = get_spark(
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
+    tracer = Tracer(spark, enabled=True)
 
     results: dict[str, tuple] = {}
 
@@ -373,10 +354,10 @@ def main() -> None:
         try:
             if cold:
                 _clear_matcache()
-            m01 = memory_evidence(spark, name, SF01)
+            m01 = memory_evidence(spark, tracer, name, SF01)
             if cold:
                 _clear_matcache()
-            m1 = memory_evidence(spark, name, SF1)
+            m1 = memory_evidence(spark, tracer, name, SF1)
         except Exception as e:  # noqa: BLE001
             err = {"stages": "FAIL", "error": type(e).__name__}
             mem_rows.append((label, err, err))
@@ -446,20 +427,21 @@ def main() -> None:
         f.write(
             "\n## Memory / spill evidence (heavy tail)\n\n"
             "Shuffle and spill totals over exactly the stages one "
-            "cold pass executed (UI REST stage metrics).  Zero "
+            "cold pass executed (Spark's status store, read by "
+            "perfbench/spans.py; MB = 10^6 bytes).  Zero disk "
             "spill = the plan fits executor memory at this scale; "
             "shuffle volume growing ~linearly with data while spill "
             "stays zero is the headroom story for the next 10x.\n\n"
             "| query | scale | stages | shuffle write MB | peak "
-            "stage write MB | shuffle read MB | mem spilled MB | "
-            "disk spilled MB |\n|---|---|---|---|---|---|---|---|\n"
+            "stage write MB | shuffle read MB | disk spilled MB |\n"
+            "|---|---|---|---|---|---|---|\n"
         )
         for name, m01, m1 in mem_rows:
             for scale, m in (("sf0.1", m01), ("sf1", m1)):
                 if m.get("stages") == "FAIL":
                     f.write(
                         f"| {name} | {scale} | FAIL "
-                        f"({m.get('error')}) | - | - | - | - | - |\n"
+                        f"({m.get('error')}) | - | - | - | - |\n"
                     )
                     continue
                 f.write(
@@ -467,7 +449,6 @@ def main() -> None:
                     f"{m['shuffle_write_mb']} | "
                     f"{m['peak_stage_shuffle_write_mb']} | "
                     f"{m['shuffle_read_mb']} | "
-                    f"{m['memory_spilled_mb']} | "
                     f"{m['disk_spilled_mb']} |\n"
                 )
         # hand-written notes survive regeneration: they live in
