@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Round evidence from one command, read by the benchmark's own tracer.
 
-    python scripts/measure.py profile [--out DIR] [--tag T] [--reps N] [name ...]
-    python scripts/measure.py sweep [--out DIR]
-    python scripts/measure.py ab [--pairs N] [--out DIR] [--reps N] PARENT CHANGE
-                                 [name ...]
+    python scripts/measure.py profile --out DIR [--tag T] [--reps N] [name ...]
+    python scripts/measure.py sweep --out DIR
+    python scripts/measure.py ab --out DIR [--reps N] PARENT CHANGE [name ...]
 
-Defaults: ``--out plans/pr10 --reps 4 --pairs 5``; options go first.
+Defaults: ``--tag before --reps 4``; options go first.
 
 ``profile`` runs every query once untraced (plan compile, matcache
 builds, page cache), then once more as one traced op through
@@ -25,11 +24,12 @@ rep, without stage records or plan dumps: ``<out>/sweep_all.json``.  A
 refuse-guard ``ValueError`` is recorded as a refusal, any other
 exception as an error; both end that name's loop.
 
-``ab`` runs ``--pairs`` pairs of ``profile`` subprocesses, one over each
+``ab`` runs ``PAIRS`` pairs of ``profile`` subprocesses, one over each
 checkout, alternating which side goes first; each side stages its
-tables under its own ``TMPDIR``.  It writes ``<out>/ab.json``: per
-query, each side's median and IQR of the per-run medians, the change's
-wins and losses, and a verdict (see ``verdict``).
+tables and writes its runs' records under its own ``TMPDIR``.  It
+writes only ``<out>/ab.json``: per query, each side's median and IQR of
+the per-run medians, the change's wins and losses, and a verdict (see
+``verdict``).
 
 The engine is imported from ``PYTHONPATH`` when it holds one (``ab``
 points it at each checkout), else from this checkout.  Data:
@@ -60,6 +60,8 @@ sys.path += [
 from spans import Tracer  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+#: the fewest pairs from which a gain (or loss) may be claimed
+PAIRS = 10
 
 
 def traced(tracer: Tracer, name: str, action):
@@ -146,17 +148,18 @@ def profile(spark, data_dir: str, names, reps: int) -> dict[str, dict]:
 
 def verdict(parent: list[float], change: list[float]) -> dict:
     """Paired seconds (lower is better), pair ``i`` one run per side.
-    The change is "faster" when it wins at least 9 pairs in 10 and the
-    medians differ by more than the parent's IQR, "slower" in the mirror
-    case, else "unresolved"; a tie counts for neither side."""
+    From at least ``PAIRS`` pairs, the change is "faster" when it wins
+    at least 9 pairs in 10 and the medians differ by more than the
+    parent's IQR, "slower" in the mirror case; otherwise, and from fewer
+    pairs, "unresolved".  A tie counts for neither side."""
     wins = sum(c < p for p, c in zip(parent, change))
     losses = sum(c > p for p, c in zip(parent, change))
     pq, cq = _quartiles(parent), _quartiles(change)
     gap, iqr = pq[1] - cq[1], pq[2] - pq[0]
-    call = "unresolved"
-    if 10 * wins >= 9 * len(parent) and gap > iqr:
+    n, call = len(parent), "unresolved"
+    if n >= PAIRS and 10 * wins >= 9 * n and gap > iqr:
         call = "faster"
-    elif 10 * losses >= 9 * len(parent) and -gap > iqr:
+    elif n >= PAIRS and 10 * losses >= 9 * n and -gap > iqr:
         call = "slower"
     return {
         "parent_med": round(pq[1], 4),
@@ -178,11 +181,11 @@ def ab(args) -> dict:
     tmp = {s: tempfile.mkdtemp(prefix=f"measure_ab_{s}_") for s in sides}
     runs: dict[str, list[dict]] = {s: [] for s in sides}
     try:
-        for i in range(args.pairs):
+        for i in range(PAIRS):
             for side in sorted(sides, reverse=i % 2 == 1):
                 tag = f"{side}{i}"
                 cmd = [sys.executable, os.path.abspath(__file__), "profile"]
-                cmd += ["--out", args.out, "--tag", tag, "--reps", str(args.reps)]
+                cmd += ["--out", tmp[side], "--tag", tag, "--reps", str(args.reps)]
                 env = dict(
                     os.environ,
                     PYTHONPATH=sides[side],
@@ -192,7 +195,7 @@ def ab(args) -> dict:
                 subprocess.run(
                     cmd + args.names, env=env, cwd=sides[side], check=True
                 )
-                with open(os.path.join(args.out, f"profile_{tag}.json")) as f:
+                with open(os.path.join(tmp[side], f"profile_{tag}.json")) as f:
                     runs[side].append(json.load(f))
     finally:
         for d in tmp.values():
@@ -204,7 +207,7 @@ def ab(args) -> dict:
     }
     return {
         "sides": sides,
-        "pairs": args.pairs,
+        "pairs": PAIRS,
         "reps": args.reps,
         "cpus": CPUS,
         "calib": {s: [r["calib"] for r in runs[s]] for s in sides},
@@ -220,11 +223,10 @@ def main() -> None:
     sub = ap.add_subparsers(dest="cmd", required=True)
     for cmd in ("profile", "sweep", "ab"):
         p = sub.add_parser(cmd)
-        p.add_argument("--out", default=os.path.join("plans", "pr10"))
+        p.add_argument("--out", required=True)
         if cmd == "ab":
             p.add_argument("parent")
             p.add_argument("change")
-            p.add_argument("--pairs", type=int, default=5)
         if cmd != "sweep":
             p.add_argument("--reps", type=int, default=4)
             p.add_argument("names", nargs="*")

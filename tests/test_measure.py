@@ -62,6 +62,10 @@ def test_ab_verdict_needs_nine_in_ten_and_the_parent_iqr():
     nine_and_tie = [0.8] * 9 + parent[9:]
     v = measure.verdict(parent, nine_and_tie)
     assert (v["wins"], v["losses"], v["verdict"]) == (9, 0, "faster")
+    # fewer than ten pairs resolve nothing, even when every pair is won
+    v = measure.verdict(parent[:5], faster[:5])
+    assert (v["wins"], v["losses"], v["verdict"]) == (5, 0, "unresolved")
+    assert measure.verdict(faster[:5], parent[:5])["verdict"] == "unresolved"
 
 
 #: a script that reads stages through the UI's REST API instead of the
