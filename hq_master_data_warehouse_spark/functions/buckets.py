@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import DEFAULT_RANGE_MAX, EMPLOYEE_RANGE_MAX, SAFE_PEOPLE_LIMIT
+from ..schemas import DEFAULT_RANGE_MAX, SAFE_PEOPLE_LIMIT
 from ..session import local_df, sql_string
 
 UNKNOWN_BUCKET = "unknown"
@@ -106,18 +106,4 @@ def segment_capacity_df(
     ]
     return local_df(
         spark, rows, "segment string, max_employees int, capacity int"
-    )
-
-
-def employee_range_capacity_df(spark: SparkSession) -> DataFrame:
-    """The reference's literal EMPLOYEE_RANGE_MAX as a dimension frame
-    (src/types/index.ts:69-85), for reference-entity pipelines."""
-    rows = [
-        (rng, mx, SAFE_PEOPLE_LIMIT // mx)
-        for rng, mx in EMPLOYEE_RANGE_MAX.items()
-    ]
-    return local_df(
-        spark,
-        rows,
-        "employee_range string, max_employees int, capacity int",
     )

@@ -100,13 +100,6 @@ def dec_avg(col: str | Column, alias: str) -> Column:
     return (exact_scaled_sum(c, 4) / F.count(c)).alias(alias)
 
 
-def dec_sum6(col: str | Column, alias: str) -> Column:
-    """`dec_sum` for scale-6 money products (e.g. the 3-factor TPC-H
-    charge), exact to the millionth."""
-    c = F.col(col) if isinstance(col, str) else col
-    return exact_scaled_sum(c, 6).alias(alias)
-
-
 def dec_avg_sql(expr: str, alias: str) -> str:
     return (
         f"CAST(SUM(CAST({expr} AS DECIMAL(30,4))) AS DOUBLE)"

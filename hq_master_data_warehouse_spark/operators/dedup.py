@@ -22,9 +22,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import fan_out_scan, local_df
+from ..session import fan_out_scan
 from ..session import DEFAULT_SHUFFLE_PARTITIONS
-from ..sources.loaders import load_table
+from ..sources.loaders import footer_stats, load_table
 
 #: shingles appearing in more than this many docs are dropped before
 #: the pair join (stop-shingle guard; tuned for the synthetic corpus's
@@ -681,6 +681,20 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_BITS = 60
 SIMHASH_BANDS = 4
 MAX_HAMMING = 3
+#: Corpus size, in documents per core, up to which the bit votes run
+#: as the narrow bit explode; measured crossover on 4 cores: ~10,000
+#: documents of ~54 tokens (dedup_simhash docstring).
+SIMHASH_NARROW_DOCS_PER_CORE = 2048
+_WIDE_FINGERPRINT = " + ".join(
+    f"IF(sum(IF((shiftright(h, {i}) & 1) = 1, 1, -1)) > 0, {1 << i}L, 0L)"
+    for i in range(SIMHASH_BITS)
+)
+_BAND_KEYS = ", ".join(
+    f"named_struct('band', {b}, 'key', shiftrightunsigned(fingerprint,"
+    f" {b * (SIMHASH_BITS // SIMHASH_BANDS)})"
+    f" & {(1 << SIMHASH_BITS // SIMHASH_BANDS) - 1})"
+    for b in range(SIMHASH_BANDS)
+)
 
 
 def _simhash_oracle() -> str:
@@ -747,18 +761,24 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``tok <> ''`` guard pins the one tokenizer divergence:
     Spark's split('') is [] while DuckDB's string_split('') is [''].
 
-    r13 optimization (values and logical expressions unchanged):
-    the 60 bit-vote aggregates and the 60-term fingerprint sum are
-    parsed from SQL strings (one py4j call each) instead of being
-    assembled Column-op by Column-op -- the Column DSL form cost
-    ~500 driver round trips, ~1.2 s of the cell's wall time
-    (plans/r13 construction/planning/execution split).  The
-    tokenize+md5+vote stage also fans out from the fixture's single
-    input split before the heavy per-token work (fan_out_scan: a
-    no-op at production split counts, 32x parallelism locally;
-    integer sums are order-independent, so values cannot change)."""
+    Votes (simhash_fingerprints) take one of two plans, picked by the
+    footers' document count per core: a small corpus pays per query, a
+    large one per token.  Two narrow aggregates over an exploded bit
+    index cut construction plus planning 727 -> 216 ms at sf0.1 on 4
+    cores against 60 vote sums built one Column at a time (plans/pr11),
+    but make 60 rows of every token; at 50,000 documents they ran 1.8x
+    slower than the one 60-sum aggregate used above
+    SIMHASH_NARROW_DOCS_PER_CORE, which is parsed from one string
+    (plans/pr11/simhash_scale.md).  The tokenize+md5 stage fans out
+    from the fixture's single input split (fan_out_scan: a no-op at
+    production split counts); integer sums are order-independent, so
+    values cannot change."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
+    narrow = (
+        footer_stats(spark, f"{sf_dir}/documents.parquet").rows
+        <= SIMHASH_NARROW_DOCS_PER_CORE * spark.sparkContext.defaultParallelism
+    )
+    hashes = (
         fan_out_scan(docs.select("doc_id", "text"))
         .select(
             "doc_id",
@@ -766,76 +786,46 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.split(canonical_text(F.col("text")), " ")
             ).alias("tok"),
         )
-        .filter(F.col("tok") != "")
-        .withColumn(
-            "h",
-            F.conv(
-                F.substring(F.md5(F.col("tok").cast("binary")), 1, 15),
-                16,
-                10,
-            ).cast("long"),
+        .where("tok <> ''")
+        .selectExpr(
+            "doc_id",
+            "CAST(conv(substring(md5(CAST(tok AS BINARY)), 1, 15), 16, 10)"
+            " AS BIGINT) AS h",
         )
     )
-
-    bit_votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1"
-            f" THEN 1 ELSE -1 END) AS b{i}"
-        )
-        for i in range(SIMHASH_BITS)
-    ]
-    voted = toks.groupBy("doc_id").agg(*bit_votes)
-    fp_terms = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN {1 << i}L ELSE 0L END)"
-        for i in range(SIMHASH_BITS)
+    bands = simhash_fingerprints(hashes, narrow).selectExpr(
+        "doc_id", "fingerprint", f"inline(array({_BAND_KEYS}))"
     )
-    fp = voted.select(
-        "doc_id",
-        F.expr(f"CAST({fp_terms} AS BIGINT)").alias("fingerprint"),
-    )
-
-    band_width = SIMHASH_BITS // SIMHASH_BANDS
-    bands = fp.select(
-        "doc_id",
-        "fingerprint",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(
-                            F.col("fingerprint"), b * band_width
-                        )
-                        .bitwiseAND((1 << band_width) - 1)
-                        .alias("key"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "fingerprint", "bk.band", "bk.key")
-
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("fingerprint").alias("fp_a"),
-        "band",
-        "key",
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("fingerprint").alias("fp_b"),
-        "band",
-        "key",
-    )
-    hamming = F.bit_count(
-        F.col("fp_a").bitwiseXOR(F.col("fp_b"))
-    ).alias("hamming")
+    left = bands.selectExpr("doc_id AS doc_a", "fingerprint AS fp_a", "band", "key")
+    right = bands.selectExpr("doc_id AS doc_b", "fingerprint AS fp_b", "band", "key")
     return (
         left.join(right, on=["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming)
+        .where("doc_a < doc_b")
+        .selectExpr("doc_a", "doc_b", "bit_count(fp_a ^ fp_b) AS hamming")
         .distinct()
-        .filter(F.col("hamming") <= MAX_HAMMING)
+        .where(f"hamming <= {MAX_HAMMING}")
+    )
+
+
+def simhash_fingerprints(hashes: DataFrame, narrow: bool) -> DataFrame:
+    """(doc_id, h) token hashes -> (doc_id, fingerprint): bit i is set
+    when more of the doc's tokens have bit i set than not (a tie
+    leaves 0, as the oracle's ``> 0``).  ``narrow`` explodes each
+    token into SIMHASH_BITS (doc, bit) rows and sums the +1/-1 votes
+    per bit, then sets the bits per doc; otherwise one aggregate holds
+    all SIMHASH_BITS vote sums."""
+    if not narrow:
+        return hashes.groupBy("doc_id").agg(
+            F.expr(_WIDE_FINGERPRINT).alias("fingerprint")
+        )
+    return (
+        hashes.selectExpr(
+            "doc_id", "h", f"explode(sequence(0, {SIMHASH_BITS - 1})) AS i"
+        )
+        .groupBy("doc_id", "i")
+        .agg(F.expr("sum(IF((shiftright(h, i) & 1) = 1, 1, -1))").alias("s"))
+        .groupBy("doc_id")
+        .agg(F.expr("sum(IF(s > 0, shiftleft(1L, i), 0L))").alias("fingerprint"))
     )
 
 
@@ -847,8 +837,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    test corpus), so the scale levers are memory-bounding and
 #    vectorization, not pruning:
 #      * vectors hash into chunks of <= EMB_BLOCK_ROWS rows;
-#      * a triangular chunk-pair grid (ci <= cj) is broadcast and each
-#        side replicates to its row/column of the grid -- every
+#      * each side replicates to its row/column of the triangular
+#        chunk-pair grid (ci <= cj) by exploding a sequence -- every
 #        unordered vector pair meets in exactly ONE grid cell;
 #      * cogroup + applyInPandas runs one numpy GEMM per cell
 #        (Arrow-batched, BLAS -- ~100x the throughput of per-pair
@@ -859,11 +849,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    similarity_ann_lsh / dedup_minhash_lsh family.
 EMB_BLOCK_ROWS = 8192
 
-#: Hard cap on the chunk grid: the triangular chunk-pair grid is built
-#: driver-side (c*(c+1)/2 rows, broadcast) and the whole plan is
-#: O(n^2) GEMM work by contract -- the exact all-pairs anchor is only
-#: meant for oracle-scale labeling runs.  512 chunks = ~4.2M vectors
-#: and a ~131k-row grid; beyond that the exact anchor refuses and the
+#: Hard cap on the chunk grid: the triangular chunk-pair grid has
+#: c*(c+1)/2 cells, each side replicates every row to c cells, and
+#: the whole plan is O(n^2) GEMM work by contract -- the exact
+#: all-pairs anchor is only meant for oracle-scale labeling runs.
+#: 512 chunks = ~4.2M vectors and ~131k cells; beyond that the exact
+#: anchor refuses and the
 #: caller must use the sub-quadratic ANN family
 #: (similarity_ann_lsh / similarity_ivf_topk / dedup_minhash_lsh).
 EMB_MAX_CHUNKS = 512
@@ -902,6 +893,21 @@ def _grid_chunks(n_rows: int, parallelism: int) -> int:
     return n_chunks
 
 
+def _grid_sides(
+    left: DataFrame, right: DataFrame, n_chunks: int
+) -> tuple[DataFrame, DataFrame]:
+    """Each side's rows keyed by the grid cells (ci, cj), ci <= cj,
+    that its chunk ``c`` joins: a left chunk c sits in row c of the
+    triangle (cells (c, c..n-1)), a right chunk c in column c (cells
+    (0..c, c)), so chunks a <= b meet in cell (a, b) alone.  Built by
+    exploding a sequence, with no grid table to join or broadcast."""
+    rest = [c for c in left.columns if c != "c"]
+    return (
+        left.selectExpr("c AS ci", f"explode(sequence(c, {n_chunks - 1})) AS cj", *rest),
+        right.selectExpr("explode(sequence(0, c)) AS ci", "c AS cj", *rest),
+    )
+
+
 def exact_cosine_pairs(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
@@ -909,10 +915,10 @@ def exact_cosine_pairs(
     triangular GEMM (the scale design documented above).  Shared by
     dedup_embedding_cosine (the near-dup anchor) and
     similarity_ann_recall_eval (the ANN ground-truth denominator)."""
-    # one metadata-cheap count to size the grid; at 100 TB this would
-    # come from table statistics instead.  Sizing rationale and the
-    # measured single-task-stall evidence live on _grid_chunks.
-    n_rows = load_table(spark, sf_dir, "embeddings").count()
+    # the grid is sized from the footers' row count, read on the
+    # driver (no Spark job); rationale and the measured single-task
+    # stall live on _grid_chunks
+    n_rows = footer_stats(spark, f"{sf_dir}/embeddings.parquet").rows
     n_chunks = _grid_chunks(
         n_rows, spark.sparkContext.defaultParallelism
     )
@@ -924,28 +930,20 @@ def exact_cosine_pairs(
             "larger inputs use the sub-quadratic ANN family "
             "(similarity_ann_lsh, similarity_ivf_topk, dedup_minhash_lsh)"
         )
-    grid_rows = [
-        (i, j) for i in range(n_chunks) for j in range(i, n_chunks)
-    ]
 
-    def side(grid_col: str) -> DataFrame:
-        # fresh scan + fresh grid per side: the two cogroup inputs get
-        # independent lineage (avoids Spark's ambiguous-self-join trap;
-        # fresh=True bypasses the loader's plan memo for exactly this)
-        emb = load_table(
+    def chunked() -> DataFrame:
+        # fresh scan per side: the two cogroup inputs get independent
+        # lineage (avoids Spark's ambiguous-self-join trap; fresh=True
+        # bypasses the loader's plan memo for exactly this)
+        return load_table(
             spark, sf_dir, "embeddings", fresh=True
-        ).select("vec_id", "embedding")
-        grid = local_df(spark, grid_rows, "ci int, cj int")
-        chunked = emb.withColumn(
-            "c",
-            F.pmod(F.xxhash64("vec_id"), F.lit(n_chunks)).cast("int"),
+        ).selectExpr(
+            f"CAST(pmod(xxhash64(vec_id), {n_chunks}) AS INT) AS c",
+            "vec_id",
+            "embedding",
         )
-        return chunked.join(
-            F.broadcast(grid), chunked["c"] == grid[grid_col]
-        ).select("ci", "cj", "vec_id", "embedding")
 
-    left = side("ci")
-    right = side("cj")
+    left, right = _grid_sides(chunked(), chunked(), n_chunks)
 
     def gemm_block(key, a_pdf, b_pdf):
         import numpy as np

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.loaders import load_table
+from ..sources.loaders import footer_stats, load_table
 
 #: deterministic salt -- production rotates this from a secret store.
 PSEUDO_SALT = "hqmdw-v1"
@@ -355,7 +355,8 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     buckets = cust.select("b").distinct()
     m = buckets.count()
-    n = cust.count()
+    # cust projects every customer row: the footers hold its count
+    n = footer_stats(spark, f"{sf_dir}/customer.parquet").rows
     glob = (
         cust.groupBy("b")
         .agg(F.count("*").alias("gcnt"))

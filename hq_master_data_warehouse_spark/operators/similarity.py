@@ -1418,15 +1418,6 @@ def _pq_subvectors(df: DataFrame, dim: int) -> DataFrame:
     ).select("vec_id", F.col("p.m").alias("m"), F.col("p.sub").alias("sub"))
 
 
-def _pq_l2(a, b):
-    """Squared L2 between two float arrays as a JVM expression."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 #: PQ trains and serves on PQ_Q-quantized components (the int8/int16
 #: quantization standard practice applies BEFORE PQ at scale): every
 #: distance, LUT cell and rank is then EXACT INTEGER arithmetic, and

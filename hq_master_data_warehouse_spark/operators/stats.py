@@ -498,13 +498,6 @@ def _pois_case_sql(u: str) -> str:
     return f"CASE {branches} ELSE {len(_POIS_TH)} END"
 
 
-def _pois_mult(u: F.Column) -> F.Column:
-    expr = F.lit(len(_POIS_TH))
-    for k in range(len(_POIS_TH) - 1, -1, -1):
-        expr = F.when(u < _POIS_TH[k], k).otherwise(expr)
-    return expr
-
-
 # -- bootstrap CI for the mean order value: B=64 Poisson replicas in
 #    ONE aggregation pass (the replica id is a broadcast explode;
 #    partial aggregation reduces each partition to B rows before the

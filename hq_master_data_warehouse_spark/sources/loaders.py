@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
@@ -68,32 +69,17 @@ def _footer_schema(spark: SparkSession, path: str):
     """The JVM ``StructType`` Spark's non-merging inference would give
     for ``path``, read on the driver; None when there is no data file
     or it cannot be read."""
-    client = spark.sparkContext._gateway._gateway_client
-
-    def jclass(name: str) -> JavaClass:
-        return JavaClass(name, client)
-
-    state = spark._jsparkSession.sessionState()
-    conf = state.newHadoopConf()
     try:
-        root = jclass("org.apache.hadoop.fs.Path")(path)
-        fs = root.getFileSystem(conf)
-        status = _first_data_file(fs, fs.getFileStatus(root), jclass)
+        jclass, conf, fs, root = _hadoop_path(spark, path)
+        status = next(_data_files(fs, root, jclass), None)
         if status is None:
             return None
-        footer_reader = jclass(_PARQUET + "ParquetFooterReader")
-        input_file = jclass("org.apache.parquet.hadoop.util.HadoopInputFile")
-        no_row_groups = jclass(
-            "org.apache.parquet.format.converter.ParquetMetadataConverter"
-        ).SKIP_ROW_GROUPS
-        meta = footer_reader.readFooter(
-            input_file.fromStatus(status, conf), no_row_groups
-        )
+        meta = _read_footer(jclass, conf, status, row_groups=False)
         footer = jclass("org.apache.parquet.hadoop.Footer")(
             status.getPath(), meta
         )
         converter = jclass(_PARQUET + "ParquetToSparkSchemaConverter")(
-            state.conf()
+            spark._jsparkSession.sessionState().conf()
         )
         return jclass(_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
             footer, converter
@@ -102,20 +88,121 @@ def _footer_schema(spark: SparkSession, path: str):
         return None
 
 
-def _first_data_file(fs, status, jclass):
-    """Depth-first, name-sorted search for the first data file under
-    ``status`` (itself, when it is a file)."""
+class FooterStats(NamedTuple):
+    """What the footers under one path say without a scan."""
+
+    #: rows over every row group of every data file
+    rows: int
+    #: top-level signed-integer column -> (min, max) over every row
+    #: group, (None, None) when it holds no non-null value; a column
+    #: is absent when any of its chunks was written without statistics
+    ranges: dict[str, tuple[int | None, int | None]]
+
+
+def footer_stats(spark: SparkSession, path: str) -> FooterStats:
+    """Row count and integer-column ranges of the Parquet data under
+    ``path``, summed over every data file's footer on the driver.
+
+    The same Hadoop ``FileSystem`` listing and ``ParquetFooterReader``
+    as :func:`read_parquet`'s schema read, so it works on any Hadoop
+    filesystem and starts no Spark job; it reads every footer, one
+    driver round trip per file, so it suits a table of a few files,
+    not a directory of thousands.  It equals
+    ``agg(count(*), min(c), max(c))`` over the same files for every
+    column it reports.  Integral means physical INT32/INT64 with no
+    logical annotation or a signed integer one: dates, timestamps,
+    decimals and unsigned integers compare differently from their
+    Parquet storage and are left out.  Partition columns of ``_k=v``
+    directories are not in the footers and are not reported.
+    """
+    jclass, conf, fs, root = _hadoop_path(spark, path)
+    rows = 0
+    ranges: dict[str, list] = {}
+    missing: set[str] = set()
+    for status in _data_files(fs, root, jclass):
+        meta = _read_footer(jclass, conf, status, row_groups=True)
+        columns = [
+            (i, d.getPath(), d.getPrimitiveType())
+            for i, d in _jlist(meta.getFileMetaData().getSchema().getColumns())
+        ]
+        integral = [
+            (i, path[0]) for i, path, ptype in columns
+            if len(path) == 1 and _is_integral(ptype)
+        ]
+        for _, block in _jlist(meta.getBlocks()):
+            rows += block.getRowCount()
+            chunks = block.getColumns()
+            for i, name in integral:
+                st = chunks.get(i).getStatistics()
+                if st is None or st.isEmpty():
+                    missing.add(name)
+                    continue
+                span = ranges.setdefault(name, [None, None])
+                if st.hasNonNullValue():
+                    lo, hi = st.genericGetMin(), st.genericGetMax()
+                    span[0] = lo if span[0] is None else min(span[0], lo)
+                    span[1] = hi if span[1] is None else max(span[1], hi)
+    return FooterStats(
+        rows,
+        {c: (lo, hi) for c, (lo, hi) in ranges.items() if c not in missing},
+    )
+
+
+def _jlist(jl):
+    """(index, item) over a ``java.util.List`` by index: py4j's
+    iterator protocol costs ~20 ms per list."""
+    return ((i, jl.get(i)) for i in range(jl.size()))
+
+
+def _is_integral(ptype) -> bool:
+    if ptype.getPrimitiveTypeName().name() not in ("INT32", "INT64"):
+        return False
+    ann = ptype.getLogicalTypeAnnotation()
+    return ann is None or (
+        ann.getClass().getSimpleName() == "IntLogicalTypeAnnotation"
+        and ann.isSigned()
+    )
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(jclass, Hadoop conf, FileSystem, FileStatus) for ``path``."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, client)
+
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = jclass("org.apache.hadoop.fs.Path")(path)
+    fs = root.getFileSystem(conf)
+    return jclass, conf, fs, fs.getFileStatus(root)
+
+
+def _read_footer(jclass, conf, status, row_groups: bool):
+    """One data file's ``ParquetMetadata``, with or without its row
+    group (block) metadata."""
+    converter = jclass(
+        "org.apache.parquet.format.converter.ParquetMetadataConverter"
+    )
+    return jclass(_PARQUET + "ParquetFooterReader").readFooter(
+        jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
+            status, conf
+        ),
+        converter.NO_FILTER if row_groups else converter.SKIP_ROW_GROUPS,
+    )
+
+
+def _data_files(fs, status, jclass):
+    """Depth-first, name-sorted data files under ``status`` (itself,
+    when it is a file)."""
     if not status.isDirectory():
-        return status
+        yield status
+        return
     pattern = jclass("org.apache.hadoop.fs.Path")(status.getPath(), _DATA_GLOB)
     for child in fs.globStatus(pattern) or []:
         if child.isDirectory():
-            found = _first_data_file(fs, child, jclass)
-            if found is not None:
-                return found
+            yield from _data_files(fs, child, jclass)
         elif not child.getPath().getName().endswith("._COPYING_"):
-            return child
-    return None
+            yield child
 
 
 class AppPlanMemo:
@@ -250,9 +337,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """All ten fixture tables as lazily-planned DataFrames."""
     return {t: load_table(spark, sf_dir, t) for t in TEST_TABLES}
 
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every fixture as a SQL temp view so each operator is also
-    reachable from ``spark.sql`` (SQL parity, SURVEY.md par.1.4)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -57,7 +57,7 @@ from ..functions.scalars import dec_sum, dec_sum_sql
 from ..matcache import staged, table_sig
 from ..session import local_df
 from ..registry import query
-from .loaders import AppPlanMemo, load_table, read_parquet
+from .loaders import AppPlanMemo, footer_stats, load_table, read_parquet
 
 LOG_DIR = "_txn_log"
 
@@ -208,25 +208,27 @@ def _write_file(
     """Write one data file (a single-job parquet dir) and return its
     log entry with key zone-map stats.
 
-    Stats are derived by reading back the JUST-WRITTEN path, not by
+    Stats come from the footers of the JUST-WRITTEN files
+    (``footer_stats``, read on the driver: no Spark job), not from
     re-evaluating ``df``: a second evaluation of a non-deterministic
     input (e.g. a snapshot re-read racing a concurrent commit) could
     disagree with the committed bytes, and zone maps that lie break
-    pruning correctness (ADVICE r8).  The read-back scans only
-    parquet footers/column stats of freshly written (page-cached)
-    files, so it is cheaper than a second source scan."""
+    pruning correctness (ADVICE r8).  A footer without statistics for
+    the key (a writer that skips them) falls back to an aggregate
+    read-back of the same path."""
     path = os.path.join(table_dir, name)
     df.write.mode("overwrite").parquet(path)
-    stats = (
-        read_parquet(df.sparkSession, path)
-        .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
-        .collect()[0]
+    lo, hi = footer_stats(df.sparkSession, path).ranges.get(
+        key_col, (None, None)
     )
-    return {
-        "path": name,
-        "min_key": int(stats["lo"]),
-        "max_key": int(stats["hi"]),
-    }
+    if lo is None:
+        stats = (
+            read_parquet(df.sparkSession, path)
+            .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
+            .collect()[0]
+        )
+        lo, hi = stats["lo"], stats["hi"]
+    return {"path": name, "min_key": int(lo), "max_key": int(hi)}
 
 
 def _write_bucketed(
@@ -249,7 +251,9 @@ def _write_bucketed(
     must describe the committed bytes even if the input plan is
     non-deterministic between passes (e.g. a snapshot re-read racing
     a concurrent commit), and the read-back is footer/stat-bounded on
-    freshly written page-cached files (ADVICE r8).
+    freshly written page-cached files (ADVICE r8).  Unlike
+    ``_write_file`` it does not read footers on the driver: that is
+    one driver read per bucket dir, ~18k at sf1, against one job.
     The partition column is derived, so its being stripped from the
     parquet files leaves exactly the source schema when a bucket dir
     is read directly."""

@@ -175,3 +175,25 @@ def test_gen_sf1_layout_marker_forces_regeneration(tmp_path):
     assert not keep_table.exists(), (
         "a run interrupted before the stamp must force a clean wipe"
     )
+
+
+def test_bench_cpus_default_to_the_process_cores():
+    """Without $SPARK_GRAFT_CPUS, bench.py runs on the cores the process
+    may use (session.CPUS), not a fixed count."""
+    import subprocess
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os, bench; from hq_master_data_warehouse_spark import session; "
+            "print(bench.CPUS == session.CPUS == len(os.sched_getaffinity(0)))",
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == "True"

@@ -1,7 +1,9 @@
 """``loaders.read_parquet``: the schema it reads from one footer on
 the driver must be exactly the schema Spark's own inference gives,
-and resolving a path set must run no Spark job.  ``AppPlanMemo``: the
-scan memo behind ``load_table`` and the txn-log reads."""
+and resolving a path set must run no Spark job.  ``footer_stats``:
+the row count and integer ranges it sums over every footer must equal
+an aggregate read-back.  ``AppPlanMemo``: the scan memo behind
+``load_table`` and the txn-log reads."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ from hq_master_data_warehouse_spark.schemas import TEST_TABLES
 from hq_master_data_warehouse_spark.sources import loaders, txn_log
 from hq_master_data_warehouse_spark.sources.loaders import (
     AppPlanMemo,
+    footer_stats,
     load_table,
     read_parquet,
 )
@@ -112,6 +115,84 @@ def test_empty_dir_raises_sparks_error(spark, written):
         read_parquet(spark, path)
     assert got.value.getCondition() == want.value.getCondition()
     assert want.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+def _assert_footers_equal_read_back(spark, path, df):
+    """footer_stats(path) equals agg(count, min, max) over ``df`` on
+    every integer column of ``df`` and starts no Spark job."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType
+
+    ints = [f.name for f in df.schema if isinstance(f.dataType, IntegralType)]
+    before = _last_job_id(spark)
+    got = footer_stats(spark, path)
+    assert _last_job_id(spark) == before, "footer_stats ran a Spark job"
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.min(c).alias(f"lo_{c}") for c in ints],
+        *[F.max(c).alias(f"hi_{c}") for c in ints],
+    ).collect()[0]
+    assert got.rows == row["n"]
+    assert got.ranges == {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in ints}
+
+
+@pytest.mark.parametrize("table", [t for t in TEST_TABLES if t != "events"])
+def test_footer_stats_equal_read_back_on_fixtures(spark, table):
+    path = f"{SF}/{table}.parquet"
+    _assert_footers_equal_read_back(spark, path, read_parquet(spark, path))
+
+
+def test_footer_stats_equal_read_back_on_events(spark):
+    # timestamps are INT64 in Parquet but not integers to Spark
+    path = f"{SF}/events.parquet"
+    _assert_footers_equal_read_back(spark, path, load_table(spark, SF, "events"))
+
+
+def test_footer_stats_on_bucketed_write(spark, tmp_path):
+    """Each ``_b=N`` dir of a bucketed txn-log write: footers equal the
+    read-back and the zone maps ``_write_bucketed`` logged; the
+    partition column is not in the footers."""
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    adds = txn_log._write_bucketed(orders, str(tmp_path), "data")
+    assert len(adds) > 1
+    for add in adds:
+        path = str(tmp_path / add["path"])
+        _assert_footers_equal_read_back(spark, path, read_parquet(spark, path))
+        assert footer_stats(spark, path).ranges["o_orderkey"] == (
+            add["min_key"],
+            add["max_key"],
+        )
+    assert "_b" not in footer_stats(spark, str(tmp_path / "data")).ranges
+
+
+def test_footer_stats_without_statistics(spark, tmp_path):
+    """A file written without column statistics reports its rows and
+    no ranges, and ``_write_file`` then takes its zone map from a
+    read-back aggregate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "nostats.parquet"
+    pq.write_table(
+        pa.table({"k": pa.array([5, 3, 9], pa.int64()), "v": pa.array([1, 2, 3], pa.int32())}),
+        path,
+        write_statistics=False,
+    )
+    assert footer_stats(spark, str(path)) == (3, {})
+
+    key = "parquet.column.statistics.enabled"
+    spark.conf.set(key, "false")
+    try:
+        df = spark.range(10, 20).selectExpr("id * 7 AS o_orderkey")
+        info = txn_log._write_file(df, str(tmp_path), "f0")
+    finally:
+        spark.conf.unset(key)
+    written = str(tmp_path / "f0")
+    assert "o_orderkey" not in footer_stats(spark, written).ranges
+    assert footer_stats(spark, written).rows == 10
+    assert (info["min_key"], info["max_key"]) == (70, 133)
 
 
 def _app(app_id):

@@ -616,3 +616,66 @@ def _physical_tree_from(node):
     for i in range(node.children().length()):
         out.extend(_physical_tree_from(node.children().apply(i)))
     return out
+
+
+def _newest_job_id(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_curation_construction_starts_no_job(spark):
+    """dedup_simhash sizes its vote plan and exact_cosine_pairs its
+    chunk grid from Parquet footers read on the driver: building
+    either query runs no Spark job."""
+    for name in ("dedup_simhash", "dedup_embedding_cosine"):
+        registry.QUERIES[name](spark, SF)  # first resolution of the scans
+        before = _newest_job_id(spark)
+        registry.QUERIES[name](spark, SF)
+        assert _newest_job_id(spark) == before, name
+
+
+def test_simhash_votes_are_narrow_aggregates(spark):
+    """At fixture scale the 60 bit votes are two narrow aggregates over
+    an exploded bit index, not 60 sums in one aggregate."""
+    df = registry.QUERIES["dedup_simhash"](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sum(") <= 4, plan.count("sum(")
+
+
+def test_simhash_wide_and_narrow_plans_agree(spark, monkeypatch):
+    """Above SIMHASH_NARROW_DOCS_PER_CORE the votes run as one 60-sum
+    aggregate; both plans return the same pairs."""
+    from hq_master_data_warehouse_spark.operators import dedup
+
+    narrow = registry.QUERIES["dedup_simhash"](spark, SF)
+    monkeypatch.setattr(dedup, "SIMHASH_NARROW_DOCS_PER_CORE", 0)
+    wide = registry.QUERIES["dedup_simhash"](spark, SF)
+    plan = wide._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sum(") >= 60
+    assert sorted(wide.collect()) == sorted(narrow.collect())
+
+
+def test_embedding_cosine_grid_sides_meet_each_pair_once(spark):
+    """_grid_sides puts chunk a (left) and chunk b (right) together in
+    exactly one grid cell when a <= b and in none when a > b, and
+    fills every cell (i, j), i <= j, with one chunk per side."""
+    from hq_master_data_warehouse_spark.operators.dedup import _grid_sides
+
+    for n in range(1, 9):
+        chunks = spark.range(n).selectExpr("CAST(id AS INT) AS c", "id AS vec_id")
+        left, right = _grid_sides(chunks, chunks, n)
+        cells = {(i, j) for i in range(n) for j in range(i, n)}
+        lrows = [(r.ci, r.cj, r.vec_id) for r in left.collect()]
+        rrows = [(r.ci, r.cj, r.vec_id) for r in right.collect()]
+        assert sorted((i, j) for i, j, _ in lrows) == sorted(cells), n
+        assert sorted((i, j) for i, j, _ in rrows) == sorted(cells), n
+        assert all(v == i for i, _, v in lrows) and all(v == j for _, j, v in rrows)
+        for a in range(n):
+            for b in range(n):
+                met = sum(
+                    1
+                    for i, j, va in lrows
+                    for i2, j2, vb in rrows
+                    if (i, j) == (i2, j2) and (va, vb) == (a, b)
+                )
+                assert met == (a <= b), (n, a, b, met)

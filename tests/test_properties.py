@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hq_master_data_warehouse_spark.functions.buckets import (
@@ -561,3 +561,42 @@ def test_chain_fold_cosine_is_bit_exact_across_engines(spark, a, b):
     assert struct.pack("<d", spark_val) == struct.pack(
         "<d", duck_val
     ), (spark_val, duck_val)
+
+
+# -- SimHash votes: both plans of simhash_fingerprints against a plain
+#    60-vote model over arbitrary per-doc token hash lists
+_H60 = st.integers(min_value=0, max_value=(1 << 60) - 1)
+
+
+def _model_fingerprint(hashes: list[int]) -> int:
+    fp = 0
+    for i in range(60):
+        if sum(1 if (h >> i) & 1 else -1 for h in hashes) > 0:
+            fp |= 1 << i
+    return fp
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(st.lists(_H60, min_size=1, max_size=7), min_size=1, max_size=6))
+@example(docs=[[1 << 59]])  # one token, top bit set
+@example(docs=[[(1 << 60) - 1, 0]])  # every bit ties: net vote 0 -> 0
+@example(docs=[[5, 5, 2], [1 << 59, (1 << 59) | 1, 3]])
+def test_simhash_fingerprints_match_vote_model(spark, docs):
+    from hq_master_data_warehouse_spark.operators.dedup import (
+        simhash_fingerprints,
+    )
+    from hq_master_data_warehouse_spark.session import local_df
+
+    hashes = local_df(
+        spark,
+        [(d, h) for d, hs in enumerate(docs) for h in hs],
+        "doc_id bigint, h bigint",
+    )
+    want = {d: _model_fingerprint(hs) for d, hs in enumerate(docs)}
+    for narrow in (True, False):
+        got = simhash_fingerprints(hashes, narrow).collect()
+        assert {r.doc_id: r.fingerprint for r in got} == want, narrow
