@@ -40,12 +40,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hq_master_data_warehouse_spark import registry
-from hq_master_data_warehouse_spark import session
-from hq_master_data_warehouse_spark.session import get_spark
+from hq_master_data_warehouse_spark.session import CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# $SPARK_GRAFT_CPUS, else the cores this process may run on
-CPUS = session.CPUS
 # 4 reps = 5 total passes (warm-up + timed): enough samples for a
 # robust min while staying near the 4-pass runtime envelope every
 # prior driver round completed inside (worst observed noisy pass is

@@ -681,14 +681,6 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_BITS = 60
 SIMHASH_BANDS = 4
 MAX_HAMMING = 3
-#: Corpus size, in documents per core, up to which the bit votes run
-#: as the narrow bit explode; measured crossover on 4 cores: ~10,000
-#: documents of ~54 tokens (dedup_simhash docstring).
-SIMHASH_NARROW_DOCS_PER_CORE = 2048
-_WIDE_FINGERPRINT = " + ".join(
-    f"IF(sum(IF((shiftright(h, {i}) & 1) = 1, 1, -1)) > 0, {1 << i}L, 0L)"
-    for i in range(SIMHASH_BITS)
-)
 _BAND_KEYS = ", ".join(
     f"named_struct('band', {b}, 'key', shiftrightunsigned(fingerprint,"
     f" {b * (SIMHASH_BITS // SIMHASH_BANDS)})"
@@ -761,23 +753,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``tok <> ''`` guard pins the one tokenizer divergence:
     Spark's split('') is [] while DuckDB's string_split('') is [''].
 
-    Votes (simhash_fingerprints) take one of two plans, picked by the
-    footers' document count per core: a small corpus pays per query, a
-    large one per token.  Two narrow aggregates over an exploded bit
-    index cut construction plus planning 727 -> 216 ms at sf0.1 on 4
-    cores against 60 vote sums built one Column at a time (plans/pr11),
-    but make 60 rows of every token; at 50,000 documents they ran 1.8x
-    slower than the one 60-sum aggregate used above
-    SIMHASH_NARROW_DOCS_PER_CORE, which is parsed from one string
-    (plans/pr11/simhash_scale.md).  The tokenize+md5 stage fans out
-    from the fixture's single input split (fan_out_scan: a no-op at
-    production split counts); integer sums are order-independent, so
-    values cannot change."""
+    The votes are two narrow aggregates over an exploded bit index
+    (simhash_fingerprints), not 60 vote sums and a 60-term fingerprint:
+    construction plus planning went 727 -> 216 ms at sf0.1 on 4 cores
+    (plans/pr11), the fixed cost that dominates the curation corpus.
+    The price is per token: 60 (doc, bit) rows each, so at 50,000
+    documents on 4 cores the query ran 1.8x slower than one 60-sum
+    aggregate (plans/pr11/simhash_scale.md; no benchmark workload runs
+    a corpus that large).  The tokenize+md5 stage fans out from the
+    fixture's single input split (fan_out_scan: a no-op at production
+    split counts); integer sums are order-independent, so values
+    cannot change."""
     docs = load_table(spark, sf_dir, "documents")
-    narrow = (
-        footer_stats(spark, f"{sf_dir}/documents.parquet").rows
-        <= SIMHASH_NARROW_DOCS_PER_CORE * spark.sparkContext.defaultParallelism
-    )
     hashes = (
         fan_out_scan(docs.select("doc_id", "text"))
         .select(
@@ -793,7 +780,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT) AS h",
         )
     )
-    bands = simhash_fingerprints(hashes, narrow).selectExpr(
+    bands = simhash_fingerprints(hashes).selectExpr(
         "doc_id", "fingerprint", f"inline(array({_BAND_KEYS}))"
     )
     left = bands.selectExpr("doc_id AS doc_a", "fingerprint AS fp_a", "band", "key")
@@ -807,17 +794,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_fingerprints(hashes: DataFrame, narrow: bool) -> DataFrame:
+def simhash_fingerprints(hashes: DataFrame) -> DataFrame:
     """(doc_id, h) token hashes -> (doc_id, fingerprint): bit i is set
     when more of the doc's tokens have bit i set than not (a tie
-    leaves 0, as the oracle's ``> 0``).  ``narrow`` explodes each
-    token into SIMHASH_BITS (doc, bit) rows and sums the +1/-1 votes
-    per bit, then sets the bits per doc; otherwise one aggregate holds
-    all SIMHASH_BITS vote sums."""
-    if not narrow:
-        return hashes.groupBy("doc_id").agg(
-            F.expr(_WIDE_FINGERPRINT).alias("fingerprint")
-        )
+    leaves 0, as the oracle's ``> 0``).  Each token explodes into
+    SIMHASH_BITS (doc, bit) rows; the +1/-1 votes are summed per bit,
+    then the bits are set per doc."""
     return (
         hashes.selectExpr(
             "doc_id", "h", f"explode(sequence(0, {SIMHASH_BITS - 1})) AS i"

@@ -624,8 +624,8 @@ def _newest_job_id(spark) -> int:
 
 
 def test_curation_construction_starts_no_job(spark):
-    """dedup_simhash sizes its vote plan and exact_cosine_pairs its
-    chunk grid from Parquet footers read on the driver: building
+    """exact_cosine_pairs sizes its chunk grid from Parquet footers
+    read on the driver, and dedup_simhash needs no sizing: building
     either query runs no Spark job."""
     for name in ("dedup_simhash", "dedup_embedding_cosine"):
         registry.QUERIES[name](spark, SF)  # first resolution of the scans
@@ -635,24 +635,11 @@ def test_curation_construction_starts_no_job(spark):
 
 
 def test_simhash_votes_are_narrow_aggregates(spark):
-    """At fixture scale the 60 bit votes are two narrow aggregates over
-    an exploded bit index, not 60 sums in one aggregate."""
+    """The 60 bit votes are two narrow aggregates over an exploded bit
+    index, not 60 sums in one aggregate."""
     df = registry.QUERIES["dedup_simhash"](spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("sum(") <= 4, plan.count("sum(")
-
-
-def test_simhash_wide_and_narrow_plans_agree(spark, monkeypatch):
-    """Above SIMHASH_NARROW_DOCS_PER_CORE the votes run as one 60-sum
-    aggregate; both plans return the same pairs."""
-    from hq_master_data_warehouse_spark.operators import dedup
-
-    narrow = registry.QUERIES["dedup_simhash"](spark, SF)
-    monkeypatch.setattr(dedup, "SIMHASH_NARROW_DOCS_PER_CORE", 0)
-    wide = registry.QUERIES["dedup_simhash"](spark, SF)
-    plan = wide._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("sum(") >= 60
-    assert sorted(wide.collect()) == sorted(narrow.collect())
 
 
 def test_embedding_cosine_grid_sides_meet_each_pair_once(spark):

@@ -563,8 +563,8 @@ def test_chain_fold_cosine_is_bit_exact_across_engines(spark, a, b):
     ), (spark_val, duck_val)
 
 
-# -- SimHash votes: both plans of simhash_fingerprints against a plain
-#    60-vote model over arbitrary per-doc token hash lists
+# -- SimHash votes: simhash_fingerprints against a plain 60-vote model
+#    over arbitrary per-doc token hash lists
 _H60 = st.integers(min_value=0, max_value=(1 << 60) - 1)
 
 
@@ -597,6 +597,5 @@ def test_simhash_fingerprints_match_vote_model(spark, docs):
         "doc_id bigint, h bigint",
     )
     want = {d: _model_fingerprint(hs) for d, hs in enumerate(docs)}
-    for narrow in (True, False):
-        got = simhash_fingerprints(hashes, narrow).collect()
-        assert {r.doc_id: r.fingerprint for r in got} == want, narrow
+    got = simhash_fingerprints(hashes).collect()
+    assert {r.doc_id: r.fingerprint for r in got} == want
