@@ -9,17 +9,22 @@ next ``capacity`` companies until companies or webhooks run out; the
 remainder is reported as ``companiesNotAssigned`` (:170).
 
 Spark shape (SURVEY.md par.2.5 W2): this is not a loop -- it is a
-window + arithmetic + join:
+window + arithmetic + a map lookup:
 
     rn      = row_number() over (partition by segment order by name)
     bucket  = floor((rn - 1) / capacity(segment))
-    assign  = left join webhooks numbered 0..n-1 per segment on bucket
+    assign  = webhooks[segment][bucket], the segment's webhooks
+              numbered 0..n-1, NULL past the last one
 
 Partitioning by segment restores full parallelism (the reference
 computes capacity per range anyway, route.ts:64-65); within a segment
 the fill order is exactly the reference's sequential order.  At 100 TB
-the only shuffle is the per-segment window sort; the webhook side is a
-broadcast dimension.
+the only shuffle is the per-segment window sort.  The webhook config
+is a few rows: it is read once on the driver and spliced into the plan
+as a map literal, so no join and no broadcast.  A customer scan that
+Spark plans as one split is coalesced to that one partition, which
+meets the window's distribution with no exchange at all
+(``session.one_split``).
 
 Fixture role-play: ``nation`` plays the webhook config table, assigned
 to customer segments round-robin by nationkey; SEGMENT_MAX plays
@@ -33,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.buckets import capacity_for_segment, capacity_sql
 from ..registry import query
-from ..session import sql_string
+from ..session import one_split, sql_string
 from ..sources.loaders import load_table
 
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -47,23 +52,35 @@ _SEG_CASE_SQL = (
 )
 
 
-def _webhooks_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _webhooks_sql(spark: SparkSession, sf_dir: str) -> str:
     """nation-as-webhooks: each webhook bound to one segment (J5),
-    numbered 0..n-1 within its segment in key order."""
+    numbered 0..n-1 within its segment in key order -- read once on
+    the driver (one small job) and returned as the SQL expression
+    ``get(map(segment -> array(webhook_id, ...))[segment], bucket)``.
+    ``get`` reads NULL past the end of a segment's array, so a company
+    beyond its segment's last webhook stays unassigned.  A literal in
+    place of a joined dimension leaves the window as the plan's only
+    distribution requirement."""
     segments = ", ".join(map(sql_string, _SEGMENTS))
+    hooks = load_table(spark, sf_dir, "nation").selectExpr(
+        "n_nationkey AS webhook_id",
+        f"element_at(array({segments}), "
+        "CAST(n_nationkey % 5 AS INT) + 1) AS segment",
+    )
+    key_type = hooks.dtypes[0][1]
+    by_segment: dict[str, list[int]] = {}
+    for hook_id, segment in hooks.collect():
+        if segment is not None:
+            by_segment.setdefault(segment, []).append(hook_id)
+    if not by_segment:
+        return f"CAST(NULL AS {key_type})"
+    pairs = ", ".join(
+        f"{sql_string(seg)}, array({', '.join(map(str, sorted(ids)))})"
+        for seg, ids in by_segment.items()
+    )
     return (
-        load_table(spark, sf_dir, "nation")
-        .selectExpr(
-            "n_nationkey AS webhook_id",
-            f"element_at(array({segments}), "
-            "CAST(n_nationkey % 5 AS INT) + 1) AS segment",
-        )
-        .selectExpr(
-            "webhook_id",
-            "segment",
-            "CAST(row_number() OVER (PARTITION BY segment "
-            "ORDER BY webhook_id) AS BIGINT) - 1 AS hook_idx",
-        )
+        f"CAST(get(map({pairs})[segment], "
+        f"CAST(floor((rn - 1) / capacity) AS INT)) AS {key_type})"
     )
 
 
@@ -101,8 +118,9 @@ _HOOKS_SQL = f"""
 def capacity_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SQL strings: one column operation each, where the Column API
     # pays one per operator (several py4j calls apiece)
-    ranked = (
-        load_table(spark, sf_dir, "customer")
+    webhook = _webhooks_sql(spark, sf_dir)
+    return (
+        one_split(load_table(spark, sf_dir, "customer"))
         .select(
             F.expr("c_custkey"),
             F.expr("c_mktsegment AS segment"),
@@ -112,23 +130,8 @@ def capacity_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             capacity_for_segment(F.col("c_mktsegment")).alias("capacity"),
         )
-        .alias("r")
-    )
-    hooks = F.broadcast(_webhooks_dim(spark, sf_dir)).alias("h")
-    return ranked.join(
-        hooks,
-        F.expr(
-            "h.segment = r.segment "
-            "AND h.hook_idx = floor((r.rn - 1) / r.capacity)"
-        ),
-        "left",
-    ).selectExpr(
-        "r.c_custkey",
-        "r.segment",
-        "r.rn",
-        "r.capacity",
-        "h.webhook_id",
-        "h.webhook_id IS NOT NULL AS assigned",
+        .selectExpr("*", f"{webhook} AS webhook_id")
+        .selectExpr("*", "webhook_id IS NOT NULL AS assigned")
     )
 
 

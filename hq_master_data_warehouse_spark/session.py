@@ -209,6 +209,25 @@ def _scan_split_starved(df) -> bool:
     return True
 
 
+def one_split(df):
+    """``df`` coalesced to one partition when Spark plans its scan as
+    exactly one input split; otherwise ``df`` unchanged.
+
+    A one-partition child has ``SinglePartition`` partitioning, which
+    meets any window's or aggregate's required distribution, so the
+    plan above it runs as one task with no exchange -- where a keyed
+    window over a one-split scan otherwise shuffles a few hundred rows
+    into ``spark.sql.shuffle.partitions`` tasks and runs as several
+    jobs.  The count is Spark's own (``toRdd`` of the scan: ~20 ms of
+    planning), not a size estimate: Spark splits one file above the
+    4 MB open cost by bytes per core, so a size-based guess would
+    serialize a large single-file input.  Inputs of two or more splits
+    plan exactly as without this call."""
+    if df._jdf.queryExecution().toRdd().getNumPartitions() != 1:
+        return df
+    return df.coalesce(1)
+
+
 def fan_out_keyed(df, *keys):
     """``fan_out_scan``'s sibling for CPU-dense KEYED window/group
     stages: pre-partition by the window keys to core count, but only

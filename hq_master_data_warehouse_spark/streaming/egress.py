@@ -34,6 +34,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterable, Iterator
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -114,11 +115,10 @@ def _post_rows(
         yield row, ok
 
 
-def _per_partition_rate(payloads: DataFrame, rate_limit_per_sec: int) -> float:
-    """The cluster-wide rate divided across the partitions that post
-    concurrently."""
-    n_parts = max(payloads.rdd.getNumPartitions(), 1)
-    return max(rate_limit_per_sec / n_parts, 0.1)
+def _per_partition_rate(n_parts: int, rate_limit_per_sec: int) -> float:
+    """The cluster-wide rate divided across the ``n_parts`` partitions
+    that post concurrently."""
+    return max(rate_limit_per_sec / max(n_parts, 1), 0.1)
 
 
 def post_with_rate_limit(
@@ -137,7 +137,9 @@ def post_with_rate_limit(
             "post_with_rate_limit needs a transport unless "
             "skip_webhooks=True (the reference's dry-run flag)"
         )
-    per_partition_rate = _per_partition_rate(payloads, rate_limit_per_sec)
+    per_partition_rate = _per_partition_rate(
+        payloads.rdd.getNumPartitions(), rate_limit_per_sec
+    )
 
     def run_partition(rows: Iterator[Row]) -> Iterator[Row]:
         if skip_webhooks:
@@ -156,6 +158,16 @@ def post_with_rate_limit(
 
     rdd = payloads.rdd.mapPartitions(run_partition)
     return payloads.sparkSession.createDataFrame(rdd, RESULT_SCHEMA)
+
+
+class _Tally(AccumulatorParam):
+    """Element-wise sum of equal-length count lists."""
+
+    def zero(self, value: list[int]) -> list[int]:
+        return [0] * len(value)
+
+    def addInPlace(self, a: list[int], b: list[int]) -> list[int]:
+        return [x + y for x, y in zip(a, b)]
 
 
 def post_with_retry(
@@ -188,9 +200,15 @@ def post_with_retry(
        the next attempt's transport, all through one token bucket per
        partition.  It yields one result row per (row, attempt).
     3. That result is materialized once, eagerly; ``delivered`` and
-       the dead-letter DataFrame are filters over it and ``audit`` is
-       its per-attempt aggregate, counted before returning.  Reading
-       them runs no POST again.
+       the dead-letter DataFrame are filters over it.  ``audit`` is
+       counted by the posting tasks themselves (an accumulator, which
+       Spark applies once per successful task of the checkpoint job),
+       so it costs no job of its own.  Reading them runs no POST again.
+
+    On one-partition payloads the call runs three jobs (the payloads
+    checkpoint, the duplicate check, the posting pass), and each read
+    of ``delivered`` or the dead-letter frame one more, none with an
+    exchange.
 
     A task retried by Spark re-posts its partition, which the
     at-least-once contract allows.
@@ -210,7 +228,14 @@ def post_with_retry(
     delivered, DLQ, nor audit -- an unacceptable silent loss for an
     at-least-once channel.
     """
+    # A checkpoint forgets its plan's partitioning (an adaptive plan
+    # reports none).  Coalescing each checkpoint to the partition count
+    # it has changes no task; at one partition it tells the planner the
+    # rows are SinglePartition, so the duplicate check and each read of
+    # the results run as one job with no exchange.
     payloads = payloads.localCheckpoint()
+    n_parts = max(payloads.rdd.getNumPartitions(), 1)
+    payloads = payloads.coalesce(n_parts)
     n_dup = (
         payloads.groupBy("company_id", "webhook_id")
         .count()
@@ -223,23 +248,31 @@ def post_with_retry(
             "webhook_id) keys; deduplicate upstream (choosing which "
             "payload body wins) before calling post_with_retry"
         )
-    per_partition_rate = _per_partition_rate(payloads, rate_limit_per_sec)
+    per_partition_rate = _per_partition_rate(n_parts, rate_limit_per_sec)
+
+    spark = payloads.sparkSession
+    # [posted, delivered] per attempt, summed over the posting tasks
+    tally = spark.sparkContext.accumulator([0] * (2 * max_attempts), _Tally())
 
     def run_partition(rows: Iterator[Row]) -> Iterator[tuple]:
         take = _throttle(per_partition_rate)
+        counts = [0] * (2 * max_attempts)
         pending: Iterable[Row] = rows
         for attempt in range(1, max_attempts + 1):
             failed = []
             posted = _post_rows(pending, transport_factory(attempt), take)
             for row, ok in posted:
                 yield (*row, attempt, ok)
-                if not ok:
+                counts[2 * attempt - 2] += 1
+                if ok:
+                    counts[2 * attempt - 1] += 1
+                else:
                     failed.append(row)
             if not failed:
-                return
+                break
             pending = failed
+        tally.add(counts)
 
-    spark = payloads.sparkSession
     schema = StructType(
         [
             *payloads.schema.fields,
@@ -247,20 +280,20 @@ def post_with_retry(
             StructField("ok", BooleanType(), False),
         ]
     )
-    results = spark.createDataFrame(
-        payloads.rdd.mapPartitions(run_partition), schema
-    ).localCheckpoint()
-    counts = {
-        r.attempt: (r.n, r.n_ok)
-        for r in results.groupBy("attempt")
-        .agg(F.count("*").alias("n"), F.count_if("ok").alias("n_ok"))
-        .collect()
-    }
-    audit_rows = []
-    for attempt in range(1, max_attempts + 1):
-        n, n_ok = counts.get(attempt, (0, 0))
-        audit_rows.append((attempt, n, n_ok, n - n_ok))
-    audit = local_df(spark, audit_rows, AUDIT_SCHEMA)
+    results = (
+        spark.createDataFrame(payloads.rdd.mapPartitions(run_partition), schema)
+        .coalesce(n_parts)
+        .localCheckpoint()
+    )
+    posted, ok = tally.value[::2], tally.value[1::2]
+    audit = local_df(
+        spark,
+        [
+            (a + 1, posted[a], ok[a], posted[a] - ok[a])
+            for a in range(max_attempts)
+        ],
+        AUDIT_SCHEMA,
+    )
     delivered = results.filter("ok").select(
         "company_id", "webhook_id", "webhook_url", "ok", "attempt"
     )

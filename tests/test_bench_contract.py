@@ -27,14 +27,14 @@ def _worst_case_reps() -> dict[str, list[float]]:
 
 def test_headline_json_stays_under_tail_capture():
     """Worst-case-width headline (every query at 5-digit seconds,
-    both estimators inline) must stay under the ~2,000-char driver
-    capture."""
+    both totals inline) must stay within 1,950 bytes, 50 under the
+    ~2,000-char driver capture."""
     from bench import headline_json
 
     line = headline_json(
         _worst_case_reps(), "/root/testdata/sf0.1", [99.999] * 4
     )
-    assert len(line) < 2000
+    assert len(line.encode()) <= 1950
     assert "\n" not in line
     # realistic sf0.1 widths (every query under 10 s) leave margin
     from bench import HEADLINE
@@ -65,24 +65,23 @@ def test_headline_carries_calibration_cell():
 
 
 def test_headline_has_both_estimators_and_no_reps():
-    """The parsed headline must carry min ("queries") and median
-    ("queries_median") per query, totals for both, and must NOT
-    inline the per-rep arrays (the round-4 overflow)."""
-    from bench import HEADLINE, headline_json
+    """The parsed headline must carry min ("queries") per query, the
+    totals of both estimators and the core count, and must NOT inline
+    the per-rep arrays (the round-4 overflow) or the per-query
+    medians, which go to stderr (``medians``)."""
+    from bench import CPUS, HEADLINE, headline_json, medians
 
     reps = {n: [4.0, 1.0, 2.0, 3.0] for n in HEADLINE}
     obj = json.loads(headline_json(reps, "/root/testdata/sf0.01"))
-    assert "reps" not in obj
+    assert "reps" not in obj and "med" not in obj
     assert set(obj["queries"]) == set(HEADLINE)
-    # "med" is an array aligned with the "queries" key order (names
-    # are not repeated -- tail-budget contract)
-    assert len(obj["med"]) == len(HEADLINE)
     # min of [4,1,2,3] is 1.0; median is 2.5
     assert obj["queries"][HEADLINE[0]] == 1.0
-    assert obj["med"][0] == 2.5
+    assert medians(reps) == {n: 2.5 for n in HEADLINE}
     assert obj["value"] == round(1.0 * len(HEADLINE), 3)
     assert obj["value_median"] == round(2.5 * len(HEADLINE), 3)
     assert obj["sf"] == 0.01
+    assert obj["cpus"] == int(CPUS)
     assert "median" in obj["estimator"]
     assert "min" in obj["estimator"]
 

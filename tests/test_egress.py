@@ -126,11 +126,11 @@ def test_retry_delivers_transient_and_dead_letters_permanent(spark):
     assert a[3].n_attempted == a[2].n_failed
 
 
-def test_retry_rejects_duplicate_keys(spark):
+def test_retry_rejects_duplicate_keys(spark, tmp_path):
     """post_with_retry fails fast on duplicate (company_id, webhook_id)
-    keys: silently deduplicating would deliver an arbitrary payload
-    body and the dropped bodies would reach neither delivered, DLQ,
-    nor audit."""
+    keys, before any POST: silently deduplicating would deliver an
+    arbitrary payload body and the dropped bodies would reach neither
+    delivered, DLQ, nor audit."""
     import pytest
 
     payloads = _payloads(spark, limit=5)
@@ -139,10 +139,10 @@ def test_retry_rejects_duplicate_keys(spark):
             "payload", F.lit('{"body": "different"}')
         )
     )
+    factory = _recording_factory(str(tmp_path), lambda cid: False)
     with pytest.raises(ValueError, match="duplicate"):
-        post_with_retry(
-            dup, lambda attempt: (lambda url, p: True), max_attempts=1
-        )
+        post_with_retry(dup, factory, max_attempts=1)
+    assert _recorded_posts(tmp_path) == []
 
 
 def _recording_factory(out_dir, fail_first):

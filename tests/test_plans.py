@@ -6,6 +6,8 @@ broadcast hint fails CI -- not a 100 TB run.
 
 from __future__ import annotations
 
+import pytest
+
 from hq_master_data_warehouse_spark import registry
 
 registry.load_catalog()
@@ -96,7 +98,7 @@ def test_bucketed_join_needs_no_join_shuffle(spark):
     assert len(detail_exchanges) <= 1, plan
 
 
-def test_compaction_shrinks_file_count(spark):
+def test_compaction_shrinks_file_count(spark, tmp_path):
     import os
 
     from hq_master_data_warehouse_spark.operators.layout import (
@@ -110,9 +112,7 @@ def test_compaction_shrinks_file_count(spark):
         f.endswith(".parquet") for f in os.listdir(frag)
     )
     assert n_frag == FRAGMENT_PARTS
-    import tempfile
-
-    dst = tempfile.mkdtemp(prefix="hqmdw_compact_test_")
+    dst = str(tmp_path / "compacted")
     n = compact_parquet(spark, frag, dst)
     n_out = sum(f.endswith(".parquet") for f in os.listdir(dst))
     assert n_out == n < FRAGMENT_PARTS
@@ -666,3 +666,100 @@ def test_embedding_cosine_grid_sides_meet_each_pair_once(spark):
                     if (i, j) == (i2, j2) and (va, vb) == (a, b)
                 )
                 assert met == (a <= b), (n, a, b, met)
+
+
+def _jobs_in(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, read from the status store
+    through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{_newest_job_id(spark)}-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def send_dirs(spark, tmp_path_factory):
+    """A 100-row customer subset as one file and as four, each next to
+    the fixture ``nation`` table (the webhook config)."""
+    import os
+
+    from hq_master_data_warehouse_spark.sources.loaders import load_table
+    from tests.conftest import SF_DIR_01
+
+    rows = load_table(spark, SF_DIR_01, "customer").orderBy(
+        "c_custkey"
+    ).limit(100)
+    dirs = {}
+    for n_files in (1, 4):
+        d = str(tmp_path_factory.mktemp(f"send_{n_files}"))
+        rows.repartition(n_files).write.parquet(f"{d}/customer.parquet")
+        os.symlink(f"{SF_DIR_01}/nation.parquet", f"{d}/nation.parquet")
+        dirs[n_files] = d
+    return dirs
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_one_split_distribution_is_one_job_with_no_exchange(spark, send_dirs):
+    """Over a one-split customer scan the distribution's window reads a
+    SinglePartition child: one job, no exchange.  The webhook config is
+    a map literal, so there is no join either."""
+    from hq_master_data_warehouse_spark.operators.distribution import (
+        capacity_distribution,
+    )
+
+    df = capacity_distribution(spark, send_dirs[1])
+    assert _jobs_in(spark, df.collect) == 1
+    plan = _executed_plan(df)
+    assert "Exchange" not in plan and "Join" not in plan, plan
+
+
+def test_multi_split_distribution_keeps_its_exchange(spark, send_dirs):
+    """Four input splits plan as before: the window shuffles by
+    segment."""
+    from hq_master_data_warehouse_spark.operators.distribution import (
+        capacity_distribution,
+    )
+
+    df = capacity_distribution(spark, send_dirs[4])
+    df.collect()
+    assert "Exchange hashpartitioning(c_mktsegment" in _executed_plan(df)
+
+
+def test_one_partition_egress_job_counts(spark, send_dirs):
+    """post_with_retry on one-partition payloads: the payloads
+    checkpoint, the duplicate check and the posting pass, with the
+    audit counted by the posting task.  Reading ``delivered`` and
+    counting the dead-letter frame run one job each."""
+    from hq_master_data_warehouse_spark.operators.distribution import (
+        capacity_distribution,
+    )
+    from hq_master_data_warehouse_spark.streaming.egress import (
+        build_payloads,
+        post_with_retry,
+    )
+
+    assigned = capacity_distribution(spark, send_dirs[1]).filter("assigned")
+    payloads = build_payloads(assigned, "batch-jobs")
+    out = {}
+
+    def post():
+        out["r"] = post_with_retry(
+            payloads,
+            lambda attempt: (lambda url, body: attempt > 1),
+            max_attempts=2,
+            rate_limit_per_sec=1_000_000,
+        )
+
+    assert _jobs_in(spark, post) <= 3
+    delivered, dead, audit = out["r"]
+    assert _jobs_in(spark, delivered.select("company_id").collect) == 1
+    assert _jobs_in(spark, dead.count) == 1
+    a = {r.attempt: r for r in audit.collect()}
+    assert a[1].n_attempted == a[2].n_attempted == a[2].n_delivered > 0
