@@ -34,7 +34,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterable, Iterator
 
-from pyspark.accumulators import AccumulatorParam
+from pyspark.accumulators import AccumulatorParam, _accumulatorRegistry
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -280,12 +280,21 @@ def post_with_retry(
             StructField("ok", BooleanType(), False),
         ]
     )
-    results = (
-        spark.createDataFrame(payloads.rdd.mapPartitions(run_partition), schema)
-        .coalesce(n_parts)
-        .localCheckpoint()
-    )
-    posted, ok = tally.value[::2], tally.value[1::2]
+    try:
+        results = (
+            spark.createDataFrame(payloads.rdd.mapPartitions(run_partition), schema)
+            .coalesce(n_parts)
+            .localCheckpoint()
+        )
+        counts = tally.value
+    finally:
+        # PySpark registers an accumulator for the life of the context.
+        # The checkpoint job has merged every update before returning
+        # and its tasks never run again (a local checkpoint has no
+        # lineage to recompute), so release it here: a long-running
+        # sender would otherwise keep one per cycle.
+        _accumulatorRegistry.pop(tally.aid, None)
+    posted, ok = counts[::2], counts[1::2]
     audit = local_df(
         spark,
         [

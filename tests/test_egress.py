@@ -223,3 +223,22 @@ def test_retry_posts_once_however_often_results_are_read(spark, tmp_path):
     assert (a[3].n_attempted, a[3].n_delivered, a[3].n_failed) == (0, 0, 0)
     assert (n_delivered, n_dead) == (20, 0)
     assert dlq.schema == payloads.schema
+
+
+def test_retry_leaves_no_accumulator_registered(spark, tmp_path):
+    """The audit's accumulator is released once the posting pass has
+    run, so a long-running sender does not grow the driver's
+    accumulator registry by one entry per call."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    payloads = _payloads(spark, limit=10).localCheckpoint()
+    factory = _recording_factory(str(tmp_path), lambda cid: cid % 2 == 0)
+    before = set(_accumulatorRegistry)
+    attempted = 0
+    for _ in range(3):
+        _, _, audit = post_with_retry(
+            payloads, factory, max_attempts=2, rate_limit_per_sec=10_000
+        )
+        attempted += sum(r.n_attempted for r in audit.collect())
+    assert set(_accumulatorRegistry) == before
+    assert attempted == len(_recorded_posts(tmp_path)) > 0
