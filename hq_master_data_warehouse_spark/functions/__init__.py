@@ -1,1 +1,1 @@
-from .buckets import segment_bucket, capacity_for_segment, segment_capacity_df  # noqa: F401
+from .buckets import segment_bucket, capacity_for_segment  # noqa: F401

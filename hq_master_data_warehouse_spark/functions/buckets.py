@@ -19,11 +19,11 @@ EMPLOYEE_RANGE_MAX over the 5-value market-segment domain.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..schemas import DEFAULT_RANGE_MAX, SAFE_PEOPLE_LIMIT
-from ..session import local_df, sql_string
+from ..session import sql_string
 
 UNKNOWN_BUCKET = "unknown"
 NOT_SURE_BUCKET = "not sure"
@@ -60,50 +60,30 @@ def segment_bucket_sql(col: str) -> str:
     )
 
 
-def capacity_for_segment(
-    col: Column, lookup: dict[str, int] | None = None
-) -> Column:
+def capacity_for_segment(col: Column) -> Column:
     """Max companies per webhook for a bucket (SURVEY op C13).
 
     ``floor(40000 / max)`` with default max 10, the max looked up in a
-    map literal -- no join, no UDF.  A missing or NULL key reads NULL
-    and takes the default.  The map is one SQL string: the Column API
-    pays several py4j calls per operator, four operators per segment
-    for a ``when`` chain.  Use :func:`segment_capacity_df` +
-    broadcast join instead when the lookup table is not a compile-time
-    constant.
+    ``SEGMENT_MAX`` map literal -- no join, no UDF.  A missing or NULL
+    key reads NULL and takes the default.  The map is one SQL string:
+    the Column API pays several py4j calls per operator, four
+    operators per segment for a ``when`` chain.
     """
-    lookup = lookup or SEGMENT_MAX
-    pairs = ", ".join(f"{sql_string(s)}, {mx}" for s, mx in lookup.items())
+    pairs = ", ".join(
+        f"{sql_string(s)}, {mx}" for s, mx in SEGMENT_MAX.items()
+    )
     max_col = F.coalesce(
         F.expr(f"map({pairs})")[col], F.lit(DEFAULT_RANGE_MAX)
     )
     return F.floor(F.lit(SAFE_PEOPLE_LIMIT) / max_col).cast("int")
 
 
-def capacity_sql(col: str, lookup: dict[str, int] | None = None) -> str:
+def capacity_sql(col: str) -> str:
     """ANSI-SQL twin of :func:`capacity_for_segment`."""
-    lookup = lookup or SEGMENT_MAX
     whens = " ".join(
-        f"WHEN {col} = '{seg}' THEN {mx}" for seg, mx in lookup.items()
+        f"WHEN {col} = '{seg}' THEN {mx}" for seg, mx in SEGMENT_MAX.items()
     )
     return (
         f"CAST(FLOOR({SAFE_PEOPLE_LIMIT} / "
         f"(CASE {whens} ELSE {DEFAULT_RANGE_MAX} END)) AS INT)"
-    )
-
-
-def segment_capacity_df(
-    spark: SparkSession, lookup: dict[str, int] | None = None
-) -> DataFrame:
-    """The capacity lookup as a tiny dimension DataFrame, for the
-    broadcast-join formulation (SURVEY op C13 alternative).  At 100 TB
-    the fact side streams; this side is a handful of rows -- always
-    broadcast."""
-    lookup = lookup or SEGMENT_MAX
-    rows = [
-        (seg, mx, SAFE_PEOPLE_LIMIT // mx) for seg, mx in lookup.items()
-    ]
-    return local_df(
-        spark, rows, "segment string, max_employees int, capacity int"
     )

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 from ..functions.prefix import ntile_from_rank, prefix_scan
 from ..functions.scalars import dec_sum, dec_sum_sql
 from ..registry import query
-from ..session import fan_out_keyed
+from ..session import fan_out_scan
 from ..sources.loaders import load_table
 
 
@@ -3220,10 +3220,10 @@ def window_ewma_customer_revenue(
     orders = load_table(spark, sf_dir, "orders")
     # r14 (guide par.2.5 flavor): the 8-lag window is CPU-dense but
     # byte-small, so AQE's byte-based coalescing ran it on 3 tasks at
-    # sf0.1; fan_out_keyed pins the per-customer shuffle to core
+    # sf0.1; fan_out_scan pins the per-customer shuffle to core
     # count ONLY when the feeding scan is split-starved (no-op, and
     # AQE stays in charge, at production split counts).
-    seq = fan_out_keyed(
+    seq = fan_out_scan(
         orders.select(
             "o_custkey",
             "o_orderkey",

@@ -103,21 +103,17 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 FRAGMENT_PARTS = 64
 
 
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_bytes: int = TARGET_FILE_BYTES,
-) -> int:
-    """Rewrite parquet dir `src` into `dst` with ceil(bytes/target)
-    files; returns the chosen file count."""
+def compact_parquet(spark: SparkSession, src: str, dst: str) -> int:
+    """Rewrite parquet dir `src` into `dst` with
+    ceil(bytes/TARGET_FILE_BYTES) files; returns the chosen file
+    count."""
     total = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(src)
         for f in files
         if f.endswith(".parquet")
     )
-    n = max(1, -(-total // target_bytes))
+    n = max(1, -(-total // TARGET_FILE_BYTES))
     read_parquet(spark, src).coalesce(n).write.mode("overwrite").parquet(
         dst
     )

@@ -5,13 +5,13 @@ The reference mutates state three ways: append-only inserts into the
 clay-webhook/index.ts:93-96), update-by-key and delete-by-key on the
 ``clay_webhooks`` config table (webhooks/route.ts:58-63,82-85).
 
-Spark disposition: appends are ``write.mode('append')``; keyed
-update/delete on immutable Parquet are read->rewrite->overwrite plans
-(Delta Lake MERGE/UPDATE/DELETE is the production path -- same logical
-plan, transactional commit).  The *logical* mutation is a pure
-DataFrame transform, registered below with SQL oracles; the physical
-write path is exercised by the filesystem round-trip helpers + pytest
-(send-twice idempotence, T4).
+Spark disposition: appends are ``write.mode('append')``.  The
+*logical* keyed update/delete is a pure DataFrame transform,
+registered below with SQL oracles.  The physical keyed mutation is
+``sources/txn_log.py``'s ``update_by_key`` / ``delete_by_key``: the
+zone maps and one job find the files holding the key, and one atomic
+log commit swaps their rewrite in, so readers never see a table
+without them.
 
 Design decision recorded per SURVEY.md par.3.2.5: the reference stamps
 every ledger row ``status='sent'`` even when the POST failed
@@ -22,14 +22,13 @@ actual status instead.
 from __future__ import annotations
 
 import uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..session import sql_string
-from ..sources.loaders import load_table, read_parquet
+from ..sources.loaders import load_table
 
 # ---------------------------------------------------------------------------
 # Logical mutation plans (oracle-checked)
@@ -140,152 +139,9 @@ def unsent_companies(companies: DataFrame, ledger: DataFrame) -> DataFrame:
     return companies.join(sent_keys, on="c_custkey", how="left_anti")
 
 
-def _swap_partitions(
-    table_path: str, tmp: str, part_col: str, values: list
-) -> None:
-    """Move rewritten ``part_col=value`` directories from ``tmp`` into
-    ``table_path``, replacing only those partitions."""
-    import os
-    import shutil
-
-    # Any tmp leaf OUTSIDE the touched set means the transform moved a
-    # row to a new partition value: swapping only `values` would discard
-    # it, and overwriting the foreign leaf would clobber rows the pruned
-    # scan never read.  Neither is correct on raw parquet -- fail loudly
-    # (the Delta/Iceberg MERGE production path handles cross-partition
-    # moves transactionally).
-    expected = {f"{part_col}={v}" for v in values}
-    stray = [
-        d
-        for d in os.listdir(tmp)
-        if d.startswith(f"{part_col}=") and d not in expected
-    ] if os.path.isdir(tmp) else []
-    if stray:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise ValueError(
-            "partition-pruned rewrite produced rows in untouched "
-            f"partitions {sorted(stray)}; mutating the partition column "
-            "is not supported on the raw-parquet path"
-        )
-    for v in values:
-        leaf = f"{part_col}={v}"
-        dst = os.path.join(table_path, leaf)
-        src = os.path.join(tmp, leaf)
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        # a fully-deleted partition writes no leaf dir: removal IS the
-        # rewrite in that case
-        if os.path.isdir(src):
-            shutil.move(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _rewrite_touched_partitions(
-    spark: SparkSession,
-    table_path: str,
-    part_col: str,
-    transform: Callable[[DataFrame], DataFrame],
-    touched_pred: F.Column,
-) -> list:
-    """Shared partition-pruned mutation core: locate the partitions
-    holding rows matching ``touched_pred`` (a COLUMN-pruned scan -- it
-    reads only the key/partition columns, but from every partition,
-    since the touched set is unknown up front), then rewrite ONLY the
-    touched partitions through ``transform`` (this second scan IS
-    partition-pruned via the ``isin`` membership filter) and swap the
-    rewritten directories into place.  Untouched partition data files
-    are never rewritten or moved -- at 100 TB a single-key mutation
-    rewrites one partition, not the snapshot.  Raw-parquet stand-in for
-    Delta/Iceberg MERGE with dynamic partition overwrite (the
-    production path); each swap is atomic only per directory rename,
-    with a delete->move window during which a concurrent reader can see
-    the partition missing -- acceptable for the single-writer sandbox,
-    solved by snapshot isolation on the production path.
-
-    ``transform`` must not change ``part_col`` values: rows that move
-    between partitions cannot be swapped correctly on raw parquet, and
-    ``_swap_partitions`` rejects the rewrite if any appear.
-
-    Returns the list of partition values rewritten.
-    """
-    df = read_parquet(spark, table_path)
-    touched = [
-        r[0]
-        for r in df.filter(touched_pred)
-        .select(part_col)
-        .distinct()
-        .collect()
-    ]
-    if not touched:
-        return []
-    # membership filter on the partition column -> Catalyst prunes the
-    # scan to the touched directories only
-    sub = df.filter(F.col(part_col).isin(touched))
-    tmp = table_path.rstrip("/") + ".tmp"
-    transform(sub).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(tmp)
-    _swap_partitions(table_path, tmp, part_col, touched)
-    return touched
-
-
-def partitioned_update_by_key(
-    spark: SparkSession,
-    table_path: str,
-    part_col: str,
-    key_col: str,
-    key_value,
-    updates: dict[str, object],
-) -> list:
-    """S7 physical path, partition-pruned (webhooks/route.ts:58-63):
-    update-by-key on a ``part_col``-partitioned parquet table that
-    rewrites only the partitions containing the key.
-
-    ``updates`` may not touch ``part_col``: the rewritten row would land
-    in a different partition directory than the swap moves back, so the
-    mutation would silently drop it.  Partition-moving updates belong to
-    the Delta/Iceberg MERGE production path.
-    """
-    if part_col in updates:
-        raise ValueError(
-            f"updating partition column {part_col!r} is not supported "
-            "by the partition-pruned rewrite; use the MERGE path"
-        )
-    hit = F.col(key_col) == key_value
-
-    def apply_updates(sub: DataFrame) -> DataFrame:
-        for col_name, value in updates.items():
-            sub = sub.withColumn(
-                col_name,
-                F.when(hit, F.lit(value)).otherwise(F.col(col_name)),
-            )
-        return sub
-
-    return _rewrite_touched_partitions(
-        spark, table_path, part_col, apply_updates, hit
-    )
-
-
-def partitioned_delete_by_key(
-    spark: SparkSession,
-    table_path: str,
-    part_col: str,
-    key_col: str,
-    key_value,
-) -> list:
-    """S8 physical path, partition-pruned (webhooks/route.ts:82-85):
-    delete-by-key that rewrites only the partitions holding the key."""
-    hit = F.col(key_col) == key_value
-    return _rewrite_touched_partitions(
-        spark, table_path, part_col, lambda sub: sub.filter(~hit), hit
-    )
-
-
 # -- MERGE / upsert (engine surface): the production path for S7+S5 in
 #    one atomic operation (Delta/Iceberg MERGE INTO).  Logical
-#    semantics here as a full-outer join + coalesce, oracle-checked;
-#    the physical swap follows _rewrite_touched_partitions'
-#    temp-and-swap pattern.
+#    semantics here as a full-outer join + coalesce, oracle-checked.
 def merge_upsert(
     base: DataFrame, updates: DataFrame, key: str
 ) -> DataFrame:

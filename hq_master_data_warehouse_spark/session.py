@@ -139,10 +139,11 @@ def local_df(spark: SparkSession, rows, ddl: str):
     )
 
 
-def fan_out_scan(df):
+def fan_out_scan(df, *keys):
     """Scale-adaptive fan-out for CPU-heavy per-row work fed by a
-    scan: repartition to defaultParallelism ONLY when the plan's
-    current partitioning is narrower than the core count.
+    scan: repartition to defaultParallelism -- by ``keys`` when given,
+    round-robin otherwise -- ONLY when the scan yields fewer input
+    splits than cores.
 
     The driver fixtures ship one parquet file per table, so a scan
     yields 1-3 input splits and any expensive per-row stage
@@ -155,58 +156,67 @@ def fan_out_scan(df):
     guide par.2.5 "input skew: one huge unsplittable file ...
     repartition immediately after the read").
 
+    With ``keys`` it serves CPU-dense KEYED window/group stages: a
+    window over a byte-small but CPU-dense shuffle gets AQE-coalesced
+    down to a handful of tasks, because AQE sizes post-shuffle
+    partitions by BYTES and cannot see per-row expression cost
+    (measured: the 8-lag EWMA window ran on 3 tasks at sf0.1).  An
+    explicit ``repartition(cores, keys)`` satisfies the window's
+    required distribution (no second exchange), and AQE respects
+    user-specified partition counts.  The repartition changes which
+    task holds a key, never a key's row set.
+
     Call it on the NARROWEST projection that feeds the expensive
     work, so the exchange (when it fires at all) moves only needed
-    columns.  Only for order-independent downstream computation.
-
-    The split estimate uses inputFiles() + a driver-side stat
-    (microseconds) rather than df.rdd.getNumPartitions(), which
-    triggers a full physical-planning pass (~0.2 s per call).
+    columns.  Only for order-independent (per-key-independent, with
+    ``keys``) downstream computation.
     """
     if not _scan_split_starved(df):
         return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, *keys
+    )
 
 
 def _scan_split_starved(df) -> bool:
-    """True when df's scan yields fewer input splits than cores --
-    the shared condition behind both fan-out helpers.  Split-size
-    estimate reads the session's actual scan split size (ADVICE r13:
-    a hardcoded 128 MiB underestimates splits when the session
-    configures a smaller maxPartitionBytes and fires a needless
-    full-input shuffle)."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
+    """True when df's scan yields fewer input splits than cores.
+
+    The count follows Spark's own split rule (``FilePartition``):
+    each file is cut into pieces of ``min(maxPartitionBytes,
+    max(openCostInBytes, sum(size + openCost) / minPartitionNum))``
+    bytes, ``minPartitionNum`` defaulting to the leaf-node
+    parallelism.  A single 88.8 MB file at 4 cores is 4 splits, not
+    the 1 a ``maxPartitionBytes``-only estimate gives.  It reads
+    inputFiles() and the file sizes on the driver (a few ms) rather
+    than planning the scan (``toRdd``: 18-49 ms on a fresh Dataset;
+    ``one_split`` pays that because it must be exact).  Several small
+    files that Spark packs into one partition still count one split
+    each."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if not files or len(files) >= cores:
         return False
-    raw = (
-        df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes",
-            str(128 * 1024 * 1024),
-        )
-        .strip()
-        .lower()
-        .removesuffix("b")
-    )
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-    try:
-        if raw and raw[-1] in units:
-            mpb = int(raw[:-1]) * units[raw[-1]]
-        else:
-            mpb = int(raw)
-    except ValueError:
-        mpb = 128 * 1024 * 1024
-    splits = 0
+    sizes = []
     for uri in files:
         path = uri[7:] if uri.startswith("file://") else uri
         try:
-            size = os.path.getsize(path)
+            sizes.append(os.path.getsize(path))
         except OSError:
             return False  # non-local storage: trust the file count
-        splits += max(1, -(-size // mpb))
-        if splits >= cores:
-            return False
-    return True
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get()
+        if min_parts.isDefined()
+        else spark._jsparkSession.leafNodeDefaultParallelism()
+    )
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(open_cost, sum(s + open_cost for s in sizes) // min_parts),
+    )
+    return sum(-(-s // split) for s in sizes) < cores
 
 
 def one_split(df):
@@ -226,30 +236,6 @@ def one_split(df):
     if df._jdf.queryExecution().toRdd().getNumPartitions() != 1:
         return df
     return df.coalesce(1)
-
-
-def fan_out_keyed(df, *keys):
-    """``fan_out_scan``'s sibling for CPU-dense KEYED window/group
-    stages: pre-partition by the window keys to core count, but only
-    under the same split-starvation condition.
-
-    Why it exists (r14): a window over a byte-small but CPU-dense
-    shuffle gets AQE-coalesced down to a handful of tasks -- AQE
-    sizes post-shuffle partitions by BYTES and cannot see per-row
-    expression cost (measured: the 8-lag EWMA window ran on 3 tasks
-    at sf0.1).  An explicit ``repartition(cores, keys)`` satisfies
-    the window's required distribution (no second exchange) and AQE
-    respects user-specified partition counts.  The fan_out_scan
-    condition keeps it scale-honest: on production inputs the scan
-    fans out, the condition is false, and AQE's byte-based sizing --
-    correct at real volumes -- stays in charge.  Only for
-    per-key-independent downstream computation (the repartition
-    changes which task holds a key, never a key's row set)."""
-    if not _scan_split_starved(df):
-        return df
-    return df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *keys
-    )
 
 
 def get_test_spark() -> SparkSession:

@@ -65,13 +65,13 @@ def ingest_explode_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def normalize_payload(raw: DataFrame, payload_col: str = "value") -> DataFrame:
+def normalize_payload(raw: DataFrame) -> DataFrame:
     """Scalar-or-array JSON payload -> one row per person record with
     the 14-field whitelist projection (clay-webhook/index.ts:47-50 +
     76-91).
 
-    ``raw`` holds one JSON document per row (e.g. from
-    ``spark.read.text`` over a webhook drop directory).  Documents that
+    ``raw`` holds one JSON document per row in its ``value`` column
+    (as ``spark.read.text`` over a webhook drop directory gives).  Documents that
     parse as arrays explode to N rows; documents that parse as single
     objects contribute one row; unknown fields are dropped by the
     explicit schema; absent fields surface as NULL.  The JS ``|| null``
@@ -86,10 +86,10 @@ def normalize_payload(raw: DataFrame, payload_col: str = "value") -> DataFrame:
     the Column API cost ~2,000 py4j calls.
     """
     person = ", ".join(f"{f} STRING" for f in PEOPLE_FIELDS)
-    as_array = f"from_json({payload_col}, 'ARRAY<STRUCT<{person}>>')"
-    as_object = f"from_json({payload_col}, 'STRUCT<{person}>')"
+    as_array = f"from_json(value, 'ARRAY<STRUCT<{person}>>')"
+    as_object = f"from_json(value, 'STRUCT<{person}>')"
     # invalid JSON -> NULL -> coalesced to a variant null, like JSON null
-    parsed = f"coalesce(try_parse_json({payload_col}), parse_json('null'))"
+    parsed = "coalesce(try_parse_json(value), parse_json('null'))"
     records = raw.selectExpr(
         f"explode(CASE WHEN is_variant_null({parsed}) THEN NULL "
         f"ELSE coalesce({as_array}, array({as_object})) END) AS rec"

@@ -18,9 +18,9 @@ skipping), NOT a port of any implementation:
   This module is the only code that knows that layout.
 - a commit is an atomic ``os.link(tmp, <version>.json)`` -- readers
   see a version fully or not at all, and two writers racing on the
-  same version number cannot both win (the primitive the raw-parquet
-  ledger swap in operators/ledger.py lacks; this is the documented
-  production path made concrete).
+  same version number cannot both win.  Every rewrite of table data
+  goes through it: appends, compaction, and the keyed mutations
+  ``update_by_key`` / ``delete_by_key``.
 - snapshot AS OF v = fold add/remove actions for versions <= v; the
   live file set feeds ONE scan through ``loaders.read_parquet``, so
   Catalyst still gets pushdown/pruning inside each file.  The scan's
@@ -49,6 +49,7 @@ import re
 import shutil
 import threading
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +61,9 @@ from ..registry import query
 from .loaders import AppPlanMemo, footer_stats, load_table, read_parquet
 
 LOG_DIR = "_txn_log"
+#: the fixture tables' zone-map key column and change-feed value column
+KEY_COL = "o_orderkey"
+VALUE_COL = "o_totalprice"
 
 # Scan-plan memo for multi-path reads, keyed on the EXACT file set:
 # resolving ~100 small paths into a file index costs ~0.5 s of driver
@@ -79,6 +83,15 @@ def _scan_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     return _SCAN_MEMO.get(
         spark, tuple(sorted(paths)), lambda: read_parquet(spark, *paths)
     )
+
+
+def _row_file(table_dir: str):
+    """Column: the log path (``data-x`` or ``data-x/_b=N``) of the
+    data file each row of a ``table_dir`` scan was read from --
+    everything between the table dir's basename and the leaf file
+    name of ``input_file_name``."""
+    base = re.escape(os.path.basename(os.path.abspath(table_dir)))
+    return F.regexp_extract(F.input_file_name(), f"{base}/(.+)/[^/]+$", 1)
 
 
 def action_path(table_dir: str, version: int, kind: str = "json") -> str:
@@ -121,9 +134,10 @@ def commit(table_dir: str, version: int, add, remove) -> None:
     PATH IMMUTABILITY CONTRACT: a data path, once committed, is never
     re-added with different bytes by a later commit -- every writer
     in this module writes a fresh name per logical write (versioned
-    prefixes, bucketed children).  snapshot_changes relies on this:
-    its per-file (version, side) tagging would attribute a reused
-    path's rows to every commit that ever touched the name."""
+    prefixes, bucketed children, uuid-named keyed rewrites).
+    snapshot_changes relies on this: its per-file (version, side)
+    tagging would attribute a reused path's rows to every commit that
+    ever touched the name."""
     os.makedirs(os.path.join(table_dir, LOG_DIR), exist_ok=True)
     _publish(
         action_path(table_dir, version),
@@ -203,10 +217,11 @@ def _write_file(
     df: DataFrame,
     table_dir: str,
     name: str,
-    key_col: str = "o_orderkey",
-) -> dict:
+    key_col: str = KEY_COL,
+) -> dict | None:
     """Write one data file (a single-job parquet dir) and return its
-    log entry with key zone-map stats.
+    log entry with key zone-map stats.  A write with no rows has no
+    zone map: its dir is removed and the result is None.
 
     Stats come from the footers of the JUST-WRITTEN files
     (``footer_stats``, read on the driver: no Spark job), not from
@@ -218,9 +233,11 @@ def _write_file(
     read-back of the same path."""
     path = os.path.join(table_dir, name)
     df.write.mode("overwrite").parquet(path)
-    lo, hi = footer_stats(df.sparkSession, path).ranges.get(
-        key_col, (None, None)
-    )
+    stats = footer_stats(df.sparkSession, path)
+    if not stats.rows:
+        shutil.rmtree(path)
+        return None
+    lo, hi = stats.ranges.get(key_col, (None, None))
     if lo is None:
         stats = (
             read_parquet(df.sparkSession, path)
@@ -232,10 +249,7 @@ def _write_file(
 
 
 def _write_bucketed(
-    df: DataFrame,
-    table_dir: str,
-    prefix: str,
-    key_col: str = "o_orderkey",
+    df: DataFrame, table_dir: str, prefix: str
 ) -> list[dict]:
     """Write EVERY key-range bucket of ``df`` in ONE distributed job
     and return one log entry per bucket dir.
@@ -257,7 +271,7 @@ def _write_bucketed(
     The partition column is derived, so its being stripped from the
     parquet files leaves exactly the source schema when a bucket dir
     is read directly."""
-    b = (F.col(key_col) / FILE_KEYSPAN).cast("long")
+    b = (F.col(KEY_COL) / FILE_KEYSPAN).cast("long")
     out = os.path.join(table_dir, prefix)
     (
         df.withColumn("_b", b)
@@ -269,7 +283,7 @@ def _write_bucketed(
     stats = (
         read_parquet(df.sparkSession, out)
         .groupBy("_b")
-        .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
+        .agg(F.min(KEY_COL).alias("lo"), F.max(KEY_COL).alias("hi"))
         .collect()
     )
     return [
@@ -379,6 +393,97 @@ def commit_with_retry(
     )
 
 
+def update_by_key(
+    spark: SparkSession,
+    table_dir: str,
+    key_col: str,
+    key_value,
+    updates: dict[str, object],
+) -> list[str]:
+    """S7 physical path (webhooks/route.ts:58-63): set each
+    ``updates`` column to its literal on the rows whose ``key_col``
+    equals ``key_value``, in one commit that rewrites only the files
+    holding the key (``_rewrite_by_key``).  Returns the paths it
+    removed.  The literals take their column's type, so the rewrite
+    keeps the table's schema."""
+
+    def apply(df: DataFrame, hit) -> DataFrame:
+        return df.withColumns(
+            {
+                c: F.when(hit, F.lit(v).cast(df.schema[c].dataType))
+                .otherwise(F.col(c))
+                for c, v in updates.items()
+            }
+        )
+
+    return _rewrite_by_key(spark, table_dir, key_col, key_value, apply)
+
+
+def delete_by_key(
+    spark: SparkSession, table_dir: str, key_col: str, key_value
+) -> list[str]:
+    """S8 physical path (webhooks/route.ts:82-85): drop the rows whose
+    ``key_col`` equals ``key_value``, in one commit that rewrites only
+    the files holding the key.  Returns the paths it removed."""
+    return _rewrite_by_key(
+        spark, table_dir, key_col, key_value, lambda df, hit: df.filter(~hit)
+    )
+
+
+def _rewrite_by_key(
+    spark: SparkSession, table_dir: str, key_col: str, key_value, transform
+) -> list[str]:
+    """Rewrite the live files holding ``key_col == key_value`` through
+    ``transform(df, hit)`` and commit the result as one version.
+
+    - Locate: the head's zone maps pick the candidate files on the
+      driver, with no job; one job over the candidates then names the
+      files that hold a matching row.  No match commits nothing and
+      returns ``[]``.
+    - Rewrite: the touched files' rows, transformed, become ONE data
+      file under a fresh name (the PATH IMMUTABILITY CONTRACT), its
+      zone map read from its footer.  A rewrite with no rows adds no
+      file.  Every untouched file keeps its path and its bytes.
+    - Commit: ``commit_with_retry`` removes the touched files and adds
+      the rewrite.  If a concurrent commit retired a touched file
+      first it raises ``CommitConflictError``; the rewrite's dir is
+      removed before the error propagates.
+
+    ``key_col`` must be the column the zone maps cover: the log does
+    not record it, and ``read_snapshot(key_range=)`` assumes the same.
+    Returns the paths removed."""
+    hit = F.col(key_col) == key_value
+    scans = {
+        f["path"]: os.path.join(table_dir, f["path"])
+        for f in live_files(table_dir)
+        if f["min_key"] <= key_value <= f["max_key"]
+    }
+    if not scans:
+        return []
+    # one short string per matching row: a key holds few rows, and a
+    # distinct() would add a shuffle and a second job
+    touched = sorted(
+        {
+            r[0]
+            for r in _scan_paths(spark, list(scans.values()))
+            .filter(hit)
+            .select(_row_file(table_dir))
+            .collect()
+        }
+    )
+    if not touched:
+        return []
+    name = f"data-key-{uuid.uuid4().hex[:12]}"
+    rows = _scan_paths(spark, [scans[p] for p in touched])
+    info = _write_file(transform(rows, hit), table_dir, name, key_col)
+    try:
+        commit_with_retry(table_dir, [info] if info else [], touched)
+    except CommitConflictError:
+        shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
+        raise
+    return touched
+
+
 #: deterministic mutation constants shared with the oracles below.
 DEL_MOD = 7
 READD_MOD = 14
@@ -446,8 +551,8 @@ def _stage_txn_table(
 
         # v1: delete keys % DEL_MOD == 0 -- every file contains such
         # keys, so the rewrite touches all of them and runs as one
-        # distributed bucketed write too (partition-pruned rewrite of a
-        # TOUCHED SUBSET is exercised separately in operators/ledger.py)
+        # distributed bucketed write too (a rewrite of a TOUCHED SUBSET
+        # is update_by_key / delete_by_key)
         kept = read_snapshot(spark, table_dir, 0).filter(
             F.col("o_orderkey") % DEL_MOD != 0
         )
@@ -592,13 +697,14 @@ def source_txn_log_pruned_scan(
 #    untouched file.  Under that contract the file-level diff is
 #    row-for-row identical to the adjacent-snapshot diff.
 def change_rows(
-    spark: SparkSession, table_dir: str, key_col: str = "o_orderkey",
-    value_col: str = "o_totalprice",
+    spark: SparkSession,
+    table_dir: str,
     since_version: int | None = None,
     until_version: int | None = None,
 ) -> DataFrame:
     """ROW-LEVEL change feed: one (version, change_type, key, value)
-    row per changed key per version -- what a downstream sync consumer
+    row per changed ``KEY_COL`` per version, the value read from
+    ``VALUE_COL`` -- what a downstream sync consumer
     actually applies (MERGE deletes/inserts/updates into its replica).
     ``snapshot_changes`` is the aggregate view of this same feed; the
     apply-invariant pytest proves the row feed is SUFFICIENT: folding
@@ -627,7 +733,7 @@ def change_rows(
     ``update_postimage`` row carrying the new one, the Delta CDF
     convention), both sides value-unchanged = rewrite noise, dropped.
     Presence is decided by per-side COUNTs, so NULL values in
-    ``value_col`` cannot masquerade as absence, and the pre/post
+    ``VALUE_COL`` cannot masquerade as absence, and the pre/post
     comparison is null-safe (NULL -> NULL is unchanged).
 
     Coverage is ASSERTED, not assumed (ADVICE r10): the row->action
@@ -669,19 +775,12 @@ def change_rows(
             "value double",
         )
     paths = sorted({p for p, _, _ in actions})
-    # rel dir of each row's source file: everything between the table
-    # dir's basename and the leaf file name (works for flat
-    # ``data-x`` and nested ``data-x/_b=N`` layouts alike)
-    base = re.escape(os.path.basename(os.path.abspath(table_dir)))
-    rel = F.regexp_extract(
-        F.input_file_name(), f"{base}/(.+)/[^/]+$", 1
-    )
     rows = _scan_paths(
         spark, [os.path.join(table_dir, p) for p in paths]
     ).select(
-        rel.alias("_rel"),
-        F.col(key_col).alias("k"),
-        F.col(value_col).alias("val"),
+        _row_file(table_dir).alias("_rel"),
+        F.col(KEY_COL).alias("k"),
+        F.col(VALUE_COL).alias("val"),
     )
     # local_df: VALUES-literal LocalRelation -- createDataFrame on a
     # local list spun up one Python worker per partition per action
@@ -766,17 +865,14 @@ def change_rows(
     )
 
 
-def snapshot_changes(
-    spark: SparkSession, table_dir: str, key_col: str = "o_orderkey",
-    value_col: str = "o_totalprice",
-) -> DataFrame:
+def snapshot_changes(spark: SparkSession, table_dir: str) -> DataFrame:
     """Aggregate change feed -- (version, change_type, n_rows,
     total_price) -- the diff engine behind source_txn_log_changes,
     reusable on ANY txn-log table (the hand-built-table pytest drives
     this exact code path).  One grouped aggregation over the
     row-level ``change_rows`` feed; see there for the derivation,
     the coverage assert, and the writer contract."""
-    rows = change_rows(spark, table_dir, key_col, value_col)
+    rows = change_rows(spark, table_dir)
     return (
         rows.groupBy("version", "change_type")
         .agg(
@@ -835,19 +931,16 @@ def source_txn_log_changes(
 def incremental_merge_sync(
     spark: SparkSession,
     table_dir: str,
-    key_col: str = "o_orderkey",
-    value_col: str = "o_totalprice",
-    start_version: int = 0,
     windows: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
     """The standing-sync consumer the CDF exists for (VERDICT r11
     item 6): seed a (key, value) replica from the snapshot at
-    ``start_version``, then MERGE each half-open version window
+    version 0, then MERGE each half-open version window
     (since, until] of the row-level change feed into it -- the
     loop-of-windows batch form of a downstream replica that stores
     its last applied version and wakes up per window.  Default
-    windows step ONE COMMIT AT A TIME through every version after
-    ``start_version``, the standing-sync cadence.
+    windows step ONE COMMIT AT A TIME through every later version,
+    the standing-sync cadence.
 
     Per window the MERGE is one grouped ``max_by(version)`` (the
     key's LAST non-preimage action in the window wins -- a key
@@ -876,45 +969,36 @@ def incremental_merge_sync(
     NULL values are first-class (VERDICT r12 item 3): the fold
     carries an EXPLICIT ``is_deleted`` tombstone column derived from
     the feed's change_type, never from value nullness, so a
-    legitimately-NULL ``value_col`` upserts a (key, NULL) row into
+    legitimately-NULL ``VALUE_COL`` upserts a (key, NULL) row into
     the replica while a delete removes the key -- the
     window-composition property test exercises workloads with
     NULL-valued inserts, NULL->value and value->NULL updates, and
     NULL->NULL rewrite noise."""
     if windows is None:
-        later = [
-            v
-            for v in committed_versions(table_dir)
-            if v > start_version
-        ]
-        windows = list(zip([start_version, *later[:-1]], later))
-    # contiguity guard: windows must tile (start_version, ...] with no
-    # gap (missed changes) and no overlap (changes applied twice) --
-    # either corrupts the replica SILENTLY, the worst failure mode a
-    # sync can have, so malformed batching refuses loudly instead.
-    expect = start_version
+        later = [v for v in committed_versions(table_dir) if v > 0]
+        windows = list(zip([0, *later[:-1]], later))
+    # contiguity guard: windows must tile (0, ...] with no gap (missed
+    # changes) and no overlap (changes applied twice) -- either
+    # corrupts the replica SILENTLY, the worst failure mode a sync can
+    # have, so malformed batching refuses loudly instead.
+    expect = 0
     for since, until in windows:
         if since != expect or until <= since:
             raise ValueError(
                 f"incremental_merge_sync: windows must be contiguous "
-                f"ascending from start_version={start_version} "
+                f"ascending from version 0 "
                 f"(expected a window starting at {expect}, got "
                 f"({since}, {until}]) -- a gap misses changes, an "
                 f"overlap applies them twice"
             )
         expect = until
-    replica = read_snapshot(spark, table_dir, start_version).select(
-        F.col(key_col).alias("key"),
-        F.col(value_col).alias("value"),
+    replica = read_snapshot(spark, table_dir, 0).select(
+        F.col(KEY_COL).alias("key"),
+        F.col(VALUE_COL).alias("value"),
     )
     for since, until in windows:
         feed = change_rows(
-            spark,
-            table_dir,
-            key_col,
-            value_col,
-            since_version=since,
-            until_version=until,
+            spark, table_dir, since_version=since, until_version=until
         )
         net = (
             feed.filter(F.col("change_type") != "update_preimage")

@@ -4,19 +4,20 @@ Reference behavior (src/app/api/send/route.ts:90-134): per webhook,
 POST one JSON document per company in chunks of RATE_LIMIT=10 with a
 1,000 ms sleep between chunks (:5-7), collecting ok/fail per row
 (:125-128); a ``skipWebhooks`` flag (:13,94-95) dry-runs the sink and
-counts everything as sent.
+counts everything as sent -- here, a transport that always returns
+True.
 
 Spark disposition (SURVEY.md par.4.2): a *sink*, not a planner
 concern.  ``mapPartitions`` posts each partition's rows through an
 injectable transport with a per-partition token bucket; the cluster-
 wide rate is ``rate_limit_per_sec`` divided across partitions, so the
 destination sees at most the reference's aggregate rate no matter how
-many executors fan out.  Results come back as a DataFrame (one row per
-attempted POST) so the A3 tally and the S6 ledger append are ordinary
-downstream aggregations -- per-row ACTUAL status, not the reference's
-blanket 'sent' (route.ts:146).
+many executors fan out.  Results come back as DataFrames (delivered
+rows and dead letters) so the A3 tally and the S6 ledger append are
+ordinary downstream aggregations -- per-row ACTUAL status, not the
+reference's blanket 'sent' (route.ts:146).
 
-The at-least-once path (``post_with_retry``) materializes the payloads
+The one sink, ``post_with_retry``, materializes the payloads
 once, runs every retry attempt inside the same ``mapPartitions`` pass
 (a partition re-posts its own failures), and materializes that one
 result; delivered rows, the dead-letter queue and the per-attempt
@@ -50,9 +51,6 @@ from ..session import local_df, sql_string
 RATE_LIMIT = 10
 RATE_INTERVAL_SEC = 1.0
 
-RESULT_SCHEMA = (
-    "company_id string, webhook_id string, webhook_url string, ok boolean"
-)
 AUDIT_SCHEMA = (
     "attempt int, n_attempted long, n_delivered long, n_failed long"
 )
@@ -103,9 +101,8 @@ def _throttle(per_window: float) -> Callable[[], None]:
 def _post_rows(
     rows: Iterable[Row], transport: Transport, take: Callable[[], None]
 ) -> Iterator[tuple[Row, bool]]:
-    """The one row loop both sinks share: POST each row through
-    ``transport`` at the bucket's pace; a raising transport is a
-    failed POST, never a failed task."""
+    """POST each row through ``transport`` at the bucket's pace; a
+    raising transport is a failed POST, never a failed task."""
     for row in rows:
         take()
         try:
@@ -119,45 +116,6 @@ def _per_partition_rate(n_parts: int, rate_limit_per_sec: int) -> float:
     """The cluster-wide rate divided across the ``n_parts`` partitions
     that post concurrently."""
     return max(rate_limit_per_sec / max(n_parts, 1), 0.1)
-
-
-def post_with_rate_limit(
-    payloads: DataFrame,
-    transport: Transport | None = None,
-    skip_webhooks: bool = False,
-    rate_limit_per_sec: int = RATE_LIMIT,
-) -> DataFrame:
-    """S9/T3: fan out POSTs with a token bucket per partition.
-
-    ``skip_webhooks=True`` reproduces the reference's dry-run flag
-    (route.ts:13): no transport calls, every row counted ok.
-    """
-    if transport is None and not skip_webhooks:
-        raise ValueError(
-            "post_with_rate_limit needs a transport unless "
-            "skip_webhooks=True (the reference's dry-run flag)"
-        )
-    per_partition_rate = _per_partition_rate(
-        payloads.rdd.getNumPartitions(), rate_limit_per_sec
-    )
-
-    def run_partition(rows: Iterator[Row]) -> Iterator[Row]:
-        if skip_webhooks:
-            posted = ((row, True) for row in rows)
-        else:
-            posted = _post_rows(
-                rows, transport, _throttle(per_partition_rate)
-            )
-        for row, ok in posted:
-            yield Row(
-                company_id=row.company_id,
-                webhook_id=row.webhook_id,
-                webhook_url=row.webhook_url,
-                ok=ok,
-            )
-
-    rdd = payloads.rdd.mapPartitions(run_partition)
-    return payloads.sparkSession.createDataFrame(rdd, RESULT_SCHEMA)
 
 
 class _Tally(AccumulatorParam):
@@ -313,7 +271,9 @@ def post_with_retry(
 
 
 def egress_tally(results: DataFrame) -> DataFrame:
-    """A3: per-webhook sent/failed counters (send/route.ts:125-128)."""
+    """A3: per-webhook sent/failed counters (send/route.ts:125-128)
+    over rows with ``webhook_id`` and ``ok``: ``post_with_retry``'s
+    delivered rows together with its dead letters as ``ok = false``."""
     return results.groupBy("webhook_id").agg(
         F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("sent"),
         F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failed"),

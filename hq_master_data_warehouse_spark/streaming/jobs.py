@@ -597,10 +597,14 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     production).  The drop box is staged with TWO copies of the feed
     and maxFilesPerTrigger=1, so the merge really executes
     incrementally across micro-batches (and, being latest-per-key, is
-    idempotent under the duplicate delivery).  The rewrite goes to a
-    fresh directory then swaps -- at 100 TB a transactional table
-    format (or partition-scoped overwrite) replaces the swap, with the
-    identical foreachBatch body.
+    idempotent under the duplicate delivery).
+
+    The table is a txn-log table, committed the way
+    ``streaming_txn_log_sink`` commits: version = batch_id, so a
+    replayed batch is a no-op.  Each commit adds the merged
+    latest-per-key file and removes the files it merged, in one
+    atomic version, so a crash mid-batch leaves the previous version
+    live and the next batch merges onto it.
 
     Oracle: latest-per-key under (ts DESC, event_id DESC) is a
     deterministic fold -- event_id is a unique tiebreak, so the merged
@@ -608,9 +612,19 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and equals the batch row_number rewrite."""
     from pyspark.sql.window import Window
 
+    from ..sources.txn_log import (
+        _write_file,
+        commit_batch_idempotent,
+        committed_versions,
+        live_files,
+        read_snapshot,
+    )
+
     raw_schema = _events_raw_schema_ddl(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    target = os.path.join(tempfile.gettempdir(), f"hqmdw_upsert_tgt_{run}")
+    table_dir = os.path.join(
+        tempfile.gettempdir(), f"hqmdw_upsert_tbl_{run}"
+    )
 
     def latest_per_key(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(
@@ -623,17 +637,20 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        incoming = latest_per_key(batch_df)
-        if os.path.exists(target):
-            current = read_parquet(batch_df.sparkSession, target)
-            merged = latest_per_key(current.unionByName(incoming))
-        else:
-            merged = incoming
-        tmp = target + f".tmp{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
+        # replayed batch: its version is already on the log
+        if batch_id in committed_versions(table_dir):
+            return
+        merged = latest_per_key(batch_df)
+        live = live_files(table_dir)
+        if live:
+            current = read_snapshot(batch_df.sparkSession, table_dir)
+            merged = latest_per_key(current.unionByName(merged))
+        info = _write_file(
+            merged, table_dir, f"data-b{batch_id:05d}", key_col="user_id"
+        )
+        commit_batch_idempotent(
+            table_dir, batch_id, [info], [f["path"] for f in live]
+        )
 
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema)
@@ -646,7 +663,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return read_parquet(spark, target).select(
+    return read_snapshot(spark, table_dir).select(
         "user_id", "event_id", "ts", "event_type"
     )
 
@@ -792,8 +809,8 @@ def streaming_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     version whose number IS the batch_id, so a replayed batch
     (failure/retry re-delivers the same batch_id) re-derives the same
     version and no-ops instead of double-appending -- the exactly-once
-    sink contract the ad-hoc parquet swap in streaming_upsert_sink
-    cannot give.  Readers folding the log never observe a
+    sink contract (streaming_upsert_sink commits the same way).
+    Readers folding the log never observe a
     half-committed batch (commit = atomic link, sources/txn_log.py).
 
     At 100 TB this is the standard streaming-lakehouse ingestion

@@ -1,5 +1,5 @@
-"""Egress sink tests (S9/T3): dry-run flag, per-row status, tally,
-rate limiting, and payload shape -- mirroring send/route.ts:90-138."""
+"""Egress sink tests (S9/T3): dry run, per-row status, tally, rate
+limiting, retries and payload shape -- mirroring send/route.ts:90-138."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from hq_master_data_warehouse_spark.operators.distribution import (
 from hq_master_data_warehouse_spark.streaming.egress import (
     build_payloads,
     egress_tally,
-    post_with_rate_limit,
     post_with_retry,
 )
 
@@ -30,30 +29,54 @@ def _payloads(spark, limit=None):
     return build_payloads(assigned, "batch-test")
 
 
+def _dry_run():
+    """The reference's skipWebhooks flag as a transport factory: every
+    POST succeeds without leaving the process.  Nested, so it ships to
+    the executors by value."""
+
+    def factory(attempt):
+        return lambda url, payload: True
+
+    return factory
+
+
 def test_skip_webhooks_dry_run(spark):
-    """skipWebhooks counts everything as sent without any transport."""
+    """skipWebhooks counts everything as sent: an always-true
+    transport delivers every row on the first attempt."""
     payloads = _payloads(spark)
-    results = post_with_rate_limit(payloads, skip_webhooks=True)
-    assert results.filter(~F.col("ok")).count() == 0
-    assert results.count() == payloads.count()
+    delivered, dead, audit = post_with_retry(
+        payloads, _dry_run(), max_attempts=1, rate_limit_per_sec=10_000
+    )
+    assert dead.count() == 0
+    assert delivered.filter(~F.col("ok")).count() == 0
+    assert delivered.count() == payloads.count()
+    assert [(r.n_attempted, r.n_failed) for r in audit.collect()] == [
+        (payloads.count(), 0)
+    ]
 
 
 def test_transport_failures_recorded_per_row(spark):
-    """Failed POSTs are per-row 'failed', not blanket 'sent'."""
+    """Failed POSTs are per-row 'failed', not blanket 'sent'; the A3
+    tally counts delivered rows as sent and dead letters as failed."""
     payloads = _payloads(spark, limit=20).coalesce(1)
 
     def flaky(url, payload):
         return json.loads(payload)["company_id"] >= "1"  # fails some
 
-    results = post_with_rate_limit(
-        payloads, transport=flaky, rate_limit_per_sec=10_000
-    ).cache()
-    oks = results.filter("ok").count()
-    fails = results.filter("NOT ok").count()
+    delivered, dead, _ = post_with_retry(
+        payloads,
+        lambda attempt: flaky,
+        max_attempts=1,
+        rate_limit_per_sec=10_000,
+    )
+    oks = delivered.count()
+    fails = dead.count()
     assert oks + fails == 20
     assert fails > 0
-    tally = egress_tally(results)
-    total = tally.agg(
+    results = delivered.select("webhook_id", "ok").unionByName(
+        dead.select("webhook_id", F.lit(False).alias("ok"))
+    )
+    total = egress_tally(results).agg(
         F.sum("sent").alias("s"), F.sum("failed").alias("f")
     ).collect()[0]
     assert total.s == oks and total.f == fails
@@ -63,11 +86,11 @@ def test_rate_limit_throttles(spark):
     """25 posts at 10/s through one partition needs >= ~2 sleep windows."""
     payloads = _payloads(spark, limit=25).coalesce(1)
     t0 = time.monotonic()
-    n = post_with_rate_limit(
-        payloads, transport=lambda u, p: True, rate_limit_per_sec=10
-    ).count()
+    delivered, _, _ = post_with_retry(
+        payloads, _dry_run(), max_attempts=1, rate_limit_per_sec=10
+    )
     elapsed = time.monotonic() - t0
-    assert n == 25
+    assert delivered.count() == 25
     assert elapsed >= 1.5  # two full rate windows crossed
 
 

@@ -238,11 +238,11 @@ def test_only_txn_log_knows_the_log_layout():
 
 
 #: engine functions besides matcache.py that may pick a /tmp path or
-#: rename a dir, and why each is not a staged input
+#: move or replace a file or dir, and why each is not a staged input
 _TMP_PATH_USERS = {
     ("streaming/jobs.py", "streaming_upsert_sink"): (
-        "its merge target is a per-call output dir; each micro-batch's "
-        "merge is written beside it and swapped in by rename"
+        "its merge target is a per-call txn table the stream commits "
+        "to; nothing is renamed"
     ),
     ("streaming/jobs.py", "streaming_egress_retry"): (
         "its audit table is a per-call output dir"
@@ -260,12 +260,18 @@ _TMP_PATH_USERS = {
         "the bucket metadata lives in the session catalog, not in the "
         "files, so the table cannot be published by a rename"
     ),
+    ("sources/delta_export.py", "export_delta_log"): (
+        "publishes the exported Delta log's one commit file by "
+        "os.replace, the atomic publish Delta readers expect; no data "
+        "dir moves"
+    ),
 }
 
 
 def _tmp_path_calls(tree) -> list[tuple[int, str]]:
-    """(line, enclosing top-level function) of every ``os.rename`` or
-    ``tempfile.gettempdir`` reference."""
+    """(line, enclosing top-level function) of every ``os.rename``,
+    ``os.replace``, ``shutil.move`` or ``tempfile.gettempdir``
+    reference."""
     hits = []
 
     def visit(node, func):
@@ -277,7 +283,12 @@ def _tmp_path_calls(tree) -> list[tuple[int, str]]:
             isinstance(node, ast.Attribute)
             and isinstance(node.value, ast.Name)
             and (node.value.id, node.attr)
-            in {("os", "rename"), ("tempfile", "gettempdir")}
+            in {
+                ("os", "rename"),
+                ("os", "replace"),
+                ("shutil", "move"),
+                ("tempfile", "gettempdir"),
+            }
         ):
             hits.append((node.lineno, func))
         for child in ast.iter_child_nodes(node):
@@ -292,7 +303,9 @@ def test_only_matcache_stages_under_tmp():
     derived input lives under /tmp, when it is stale and how
     concurrent builders are kept apart; a hand-rolled stager elsewhere
     (its own path, its own shared ``.tmp`` and rename) must go through
-    it or be listed in _TMP_PATH_USERS with its reason."""
+    it or be listed in _TMP_PATH_USERS with its reason.  A table's
+    data is rewritten through the txn log's atomic commit, so a
+    directory swap by move or replace is flagged too."""
     pkg = pathlib.Path(registry.__file__).parent
     offenders = [
         f"{rel}:{line} ({func})"

@@ -16,6 +16,7 @@
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import functions as F
@@ -98,3 +99,93 @@ def test_default_cores_follow_the_process_affinity():
         check=True,
     ).stdout.split()
     assert out[0] == out[1] == out[2]
+
+
+def _one_file(tmp_path, n_bytes: int) -> str:
+    """One uncompressed parquet file of about ``n_bytes`` random bytes
+    (incompressible, so its size does not depend on the codec)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = max(1, n_bytes // 1024)
+    path = str(tmp_path / f"f{n_bytes}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "k": list(range(rows)),
+                "b": [os.urandom(1024) for _ in range(rows)],
+            }
+        ),
+        path,
+        compression="none",
+    )
+    return path
+
+
+def test_split_estimate_follows_spark_split_rule(spark, tmp_path):
+    """``_scan_split_starved`` agrees with the partition count Spark
+    plans for single files on both sides of each threshold of
+    ``FilePartition.maxSplitBytes``: the open cost floor, bytes per
+    core, and ``maxPartitionBytes``.  Small confs keep the files
+    small.  A file of a few ``maxPartitionBytes`` is Spark's cores
+    splits, where a ``maxPartitionBytes``-only estimate said fewer."""
+    from hq_master_data_warehouse_spark.session import _scan_split_starved
+    from hq_master_data_warehouse_spark.sources.loaders import read_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    open_cost, max_bytes = 16 * 1024, 256 * 1024
+    confs = {
+        "spark.sql.files.openCostInBytes": str(open_cost),
+        "spark.sql.files.maxPartitionBytes": str(max_bytes),
+    }
+    floor = (cores - 1) * open_cost  # bytes per core reach the open cost
+    sizes = [
+        open_cost // 2,
+        floor - open_cost // 2,
+        floor + open_cost // 2,
+        2 * max_bytes,
+        cores * max_bytes + max_bytes // 2,
+    ]
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        seen = []
+        for n in sizes:
+            df = read_parquet(spark, _one_file(tmp_path, n))
+            planned = df._jdf.queryExecution().toRdd().getNumPartitions()
+            assert _scan_split_starved(df) == (planned < cores), (n, planned)
+            size = os.path.getsize(df.inputFiles()[0].removeprefix("file://"))
+            seen.append((planned < cores, -(-size // max_bytes) < cores))
+    finally:
+        for key in confs:
+            spark.conf.unset(key)
+    if cores > 1:
+        assert {starved for starved, _ in seen} == {True, False}
+        # Spark plans >= cores splits where maxPartitionBytes alone
+        # counts fewer
+        assert (False, True) in seen
+
+
+def test_fan_out_scan_partitions_by_its_keys(spark, tmp_path):
+    """On a split-starved scan, ``fan_out_scan(df, *keys)`` hash-
+    partitions by the keys to the core count, and round-robins with
+    no keys."""
+    from hq_master_data_warehouse_spark.session import fan_out_scan
+    from hq_master_data_warehouse_spark.sources.loaders import read_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    df = read_parquet(spark, _one_file(tmp_path, 4096))
+
+    def plan(d):
+        return spark._jvm.PythonSQLUtils.explainString(
+            d._jdf.queryExecution(), "formatted"
+        )
+
+    if cores > 1:
+        assert re.search(
+            rf"hashpartitioning\(k#\d+L?, {cores}\)",
+            plan(fan_out_scan(df, "k")),
+        )
+        assert f"RoundRobinPartitioning({cores})" in plan(fan_out_scan(df))
+    else:
+        assert fan_out_scan(df, "k") is df

@@ -4,6 +4,8 @@ keyed dedup must yield one row per key (T4)."""
 
 from __future__ import annotations
 
+import os
+
 from hq_master_data_warehouse_spark.sources.loaders import load_table
 from hq_master_data_warehouse_spark.streaming.jobs import (
     events_tumbling_window,
@@ -168,15 +170,20 @@ def test_upsert_sink_matches_batch_latest_per_key(spark):
     from pyspark.sql.window import Window
 
     from hq_master_data_warehouse_spark.sources.loaders import load_table
+    from hq_master_data_warehouse_spark.sources.txn_log import (
+        committed_versions,
+    )
     from hq_master_data_warehouse_spark.streaming.jobs import (
         streaming_upsert_sink,
     )
 
     sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in streaming_upsert_sink(spark, sf).collect()
-    }
+    result = streaming_upsert_sink(spark, sf)
+    got = {tuple(r) for r in result.collect()}
+    # the sink's table is a txn-log table: one version per micro-batch
+    (data_file,) = {os.path.dirname(p) for p in result.inputFiles()}
+    table_dir = os.path.dirname(data_file.removeprefix("file://"))
+    assert committed_versions(table_dir) == [0, 1]
     events = load_table(spark, sf, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")

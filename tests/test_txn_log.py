@@ -1349,7 +1349,7 @@ def test_incremental_sync_refuses_malformed_windows(spark, tmp_path):
     for bad in (
         [(0, 1), (2, 3)],  # gap: version 2's changes missed
         [(0, 2), (1, 3)],  # overlap: (1,2] applied twice
-        [(1, 2)],          # does not start at start_version
+        [(1, 2)],          # does not start at version 0
         [(0, 0)],          # empty/inverted window
     ):
         with pytest.raises(ValueError, match="contiguous"):
