@@ -180,43 +180,34 @@ def fan_out_scan(df, *keys):
 
 def _scan_split_starved(df) -> bool:
     """True when df's scan yields fewer input splits than cores.
-
-    The count follows Spark's own split rule (``FilePartition``):
-    each file is cut into pieces of ``min(maxPartitionBytes,
-    max(openCostInBytes, sum(size + openCost) / minPartitionNum))``
-    bytes, ``minPartitionNum`` defaulting to the leaf-node
-    parallelism.  A single 88.8 MB file at 4 cores is 4 splits, not
-    the 1 a ``maxPartitionBytes``-only estimate gives.  It reads
-    inputFiles() and the file sizes on the driver (a few ms) rather
-    than planning the scan (``toRdd``: 18-49 ms on a fresh Dataset;
-    ``one_split`` pays that because it must be exact).  Several small
-    files that Spark packs into one partition still count one split
-    each."""
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
+    Each file counts ``ceil(size / maxPartitionBytes)`` splits, at
+    least one, with ``maxPartitionBytes`` read from the session conf
+    (a hardcoded 128 MiB underestimates splits when the session
+    configures a smaller one and fires a needless full-input
+    shuffle).  It reads inputFiles() and the file sizes on the driver
+    (a few ms) rather than planning the scan (``toRdd``: 18-49 ms on
+    a fresh Dataset; ``one_split`` pays that because it must be
+    exact)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     if not files or len(files) >= cores:
         return False
-    sizes = []
+    mpb = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .filesMaxPartitionBytes()
+    )
+    splits = 0
     for uri in files:
         path = uri[7:] if uri.startswith("file://") else uri
         try:
-            sizes.append(os.path.getsize(path))
+            size = os.path.getsize(path)
         except OSError:
             return False  # non-local storage: trust the file count
-    conf = spark._jsparkSession.sessionState().conf()
-    open_cost = conf.filesOpenCostInBytes()
-    min_parts = conf.filesMinPartitionNum()
-    min_parts = (
-        min_parts.get()
-        if min_parts.isDefined()
-        else spark._jsparkSession.leafNodeDefaultParallelism()
-    )
-    split = min(
-        conf.filesMaxPartitionBytes(),
-        max(open_cost, sum(s + open_cost for s in sizes) // min_parts),
-    )
-    return sum(-(-s // split) for s in sizes) < cores
+        splits += max(1, -(-size // mpb))
+        if splits >= cores:
+            return False
+    return True
 
 
 def one_split(df):

@@ -129,7 +129,9 @@ def commit(table_dir: str, version: int, add, remove) -> None:
     FileExistsError, the optimistic-concurrency primitive
     transactional table formats build conflict resolution on.
     ``add`` is a list of {"path", "min_key", "max_key"} dicts,
-    ``remove`` a list of paths.
+    ``remove`` a list of paths.  A None in ``add`` (``_write_file``'s
+    result for a write with no rows) is dropped: a zero-row write
+    adds no file, and the log never records an entry without a path.
 
     PATH IMMUTABILITY CONTRACT: a data path, once committed, is never
     re-added with different bytes by a later commit -- every writer
@@ -138,6 +140,7 @@ def commit(table_dir: str, version: int, add, remove) -> None:
     snapshot_changes relies on this: its per-file (version, side)
     tagging would attribute a reused path's rows to every commit that
     ever touched the name."""
+    add = [info for info in add if info is not None]
     os.makedirs(os.path.join(table_dir, LOG_DIR), exist_ok=True)
     _publish(
         action_path(table_dir, version),
@@ -221,7 +224,8 @@ def _write_file(
 ) -> dict | None:
     """Write one data file (a single-job parquet dir) and return its
     log entry with key zone-map stats.  A write with no rows has no
-    zone map: its dir is removed and the result is None.
+    zone map: its dir is removed and the result is None, which
+    ``commit`` drops from ``add``.
 
     Stats come from the footers of the JUST-WRITTEN files
     (``footer_stats``, read on the driver: no Spark job), not from
@@ -477,7 +481,7 @@ def _rewrite_by_key(
     rows = _scan_paths(spark, [scans[p] for p in touched])
     info = _write_file(transform(rows, hit), table_dir, name, key_col)
     try:
-        commit_with_retry(table_dir, [info] if info else [], touched)
+        commit_with_retry(table_dir, [info], touched)
     except CommitConflictError:
         shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
         raise

@@ -122,48 +122,38 @@ def _one_file(tmp_path, n_bytes: int) -> str:
     return path
 
 
-def test_split_estimate_follows_spark_split_rule(spark, tmp_path):
-    """``_scan_split_starved`` agrees with the partition count Spark
-    plans for single files on both sides of each threshold of
-    ``FilePartition.maxSplitBytes``: the open cost floor, bytes per
-    core, and ``maxPartitionBytes``.  Small confs keep the files
-    small.  A file of a few ``maxPartitionBytes`` is Spark's cores
-    splits, where a ``maxPartitionBytes``-only estimate said fewer."""
+def test_split_estimate_reads_the_session_max_partition_bytes(
+    spark, tmp_path
+):
+    """``_scan_split_starved`` counts ``ceil(size / maxPartitionBytes)``
+    splits per file, with ``maxPartitionBytes`` taken from the session
+    conf in Spark's size syntax ("256k"): a single file is starved at
+    ``cores - 1`` such splits and not at ``cores``, and the same file
+    is one split under the default 128 MiB."""
     from hq_master_data_warehouse_spark.session import _scan_split_starved
     from hq_master_data_warehouse_spark.sources.loaders import read_parquet
 
     cores = spark.sparkContext.defaultParallelism
-    open_cost, max_bytes = 16 * 1024, 256 * 1024
-    confs = {
-        "spark.sql.files.openCostInBytes": str(open_cost),
-        "spark.sql.files.maxPartitionBytes": str(max_bytes),
-    }
-    floor = (cores - 1) * open_cost  # bytes per core reach the open cost
+    max_bytes = 256 * 1024
     sizes = [
-        open_cost // 2,
-        floor - open_cost // 2,
-        floor + open_cost // 2,
-        2 * max_bytes,
-        cores * max_bytes + max_bytes // 2,
+        max_bytes // 2,
+        (cores - 1) * max_bytes - max_bytes // 2,
+        cores * max_bytes - max_bytes // 4,
     ]
-    for key, value in confs.items():
-        spark.conf.set(key, value)
+    dfs = [read_parquet(spark, _one_file(tmp_path, n)) for n in sizes]
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "256k")
     try:
         seen = []
-        for n in sizes:
-            df = read_parquet(spark, _one_file(tmp_path, n))
-            planned = df._jdf.queryExecution().toRdd().getNumPartitions()
-            assert _scan_split_starved(df) == (planned < cores), (n, planned)
+        for df in dfs:
             size = os.path.getsize(df.inputFiles()[0].removeprefix("file://"))
-            seen.append((planned < cores, -(-size // max_bytes) < cores))
+            starved = max(1, -(-size // max_bytes)) < cores
+            assert _scan_split_starved(df) == starved, size
+            seen.append(starved)
     finally:
-        for key in confs:
-            spark.conf.unset(key)
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     if cores > 1:
-        assert {starved for starved, _ in seen} == {True, False}
-        # Spark plans >= cores splits where maxPartitionBytes alone
-        # counts fewer
-        assert (False, True) in seen
+        assert set(seen) == {True, False}
+        assert all(_scan_split_starved(df) for df in dfs)
 
 
 def test_fan_out_scan_partitions_by_its_keys(spark, tmp_path):

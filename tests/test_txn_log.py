@@ -133,6 +133,25 @@ def test_commit_first_writer_wins(tmp_path):
         commit(d, 5, [{"path": "c", "min_key": 0, "max_key": 0}], [])
 
 
+def test_zero_row_write_commits_no_entry(spark, tmp_path):
+    """A write with no rows leaves no dir, and committing its None
+    result records no entry: the table stays readable."""
+    from hq_master_data_warehouse_spark.sources.txn_log import (
+        _read_action,
+        _write_file,
+    )
+
+    d = str(tmp_path / "z")
+    commit(d, 0, [{"path": "a", "min_key": 1, "max_key": 2}], [])
+    empty = spark.range(3).selectExpr("id AS o_orderkey").filter("false")
+    info = _write_file(empty, d, "data-empty")
+    assert info is None
+    assert not os.path.exists(os.path.join(d, "data-empty"))
+    commit(d, 1, [info], ["a"])
+    assert _read_action(d, 1)["add"] == []
+    assert live_files(d) == []
+
+
 def test_streaming_txn_log_sink_exactly_once_versions(spark):
     from hq_master_data_warehouse_spark.registry import QUERIES, load_catalog
 
